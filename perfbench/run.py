@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Run one benchmark workload and print its result as the last stdout line.
 
-    python3 perfbench/run.py --workload ensemble_scan --seed 1 --seconds 6 --trace 0
+    python3 perfbench/run.py --workload deck_roundtrip --seed 1 --seconds 16 --trace 0
 
 Builds the library and the benchmark from source first (see build.py), then
 runs the workload in one JVM. Inputs are generated from --seed into a fresh
@@ -34,9 +34,10 @@ ADD_OPENS = [
     "java.base/sun.nio.ch", "java.base/sun.nio.cs", "java.base/sun.security.action",
     "java.base/sun.util.calendar",
 ]
-# A fixed-size heap with the throughput collector: over five ensemble_scan
-# runs each, G1 (concurrent, adaptive) gave a higher per-op CPU time (median
-# 1.14 s vs 0.84 s) and a wider run-to-run spread (IQR/median 0.39 vs 0.27).
+# A fixed-size heap with the throughput collector: in five-run A/B batches
+# on a 4-core VM, G1 (concurrent, adaptive) gave a higher per-op CPU time
+# (median 1.14 s vs 0.84 s) and a wider run-to-run spread (IQR/median 0.39
+# vs 0.27).
 JVM_HEAP = ["-XX:+UseParallelGC", "-Xms2g", "-Xmx2g", "-Xmn768m"]
 JVM_TIMEOUT_S = 170
 MARKER = "PERFBENCH_RESULT "

@@ -155,9 +155,8 @@ object DeckRoundtrip extends Workload {
     private def text(s: DeckSpec) =
       DeckParser.expandIncludes(Files.readString(deckDir.resolve(s.file)), deckDir)
     // the single-deck ops walk the corpus, one deck per execution
-    private val turn = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicInteger]()
-    private def next(op: String): DeckSpec =
-      specs(turn.computeIfAbsent(op, _ => new java.util.concurrent.atomic.AtomicInteger()).getAndIncrement() % specs.length)
+    private val turn = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
+    private def next(op: String): DeckSpec = { val i = turn(op); turn(op) = i + 1; specs(i % specs.length) }
 
     val ops: Seq[Op] = Seq(
       Op("deck_compdat_corpus", corpusBytes, p => {

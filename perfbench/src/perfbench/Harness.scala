@@ -1,14 +1,11 @@
 package perfbench
 
 import java.util.concurrent.ConcurrentHashMap
-import scala.collection.mutable
 import org.apache.spark.graftshim.ListenerBusDrain
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** One benchmark operation. `body` runs the timed part through the
@@ -44,23 +41,7 @@ class Phases {
   }
 }
 
-/** Plan-side counters read from the executed plans of one op. */
-final case class ScanCounters(payloads: Long, slots: Long, geomCells: Long,
-    rowsOut: Long, partitions: Long)
-
-object PlanStats extends AdaptiveSparkPlanHelper {
-  private def metric(b: BatchScanExec, k: String): Long =
-    b.metrics.get(k).map(_.value).getOrElse(0L)
-
-  def scans(plan: SparkPlan): ScanCounters = {
-    val bs = collectWithSubqueries(plan) { case b: BatchScanExec => b }
-    ScanCounters(bs.map(metric(_, "payloadsDecoded")).sum,
-      bs.map(metric(_, "paramSlotsDecoded")).sum,
-      bs.map(metric(_, "geomCellsComputed")).sum,
-      bs.map(metric(_, "numOutputRows")).sum,
-      bs.map(_.inputRDD.partitions.length.toLong).sum)
-  }
-
+object PlanStats {
   /** Analysis + optimization + planning time the tracker recorded. */
   def planMs(qe: QueryExecution): Double =
     qe.tracker.phases.values.map(_.durationMs).sum.toDouble
@@ -195,27 +176,17 @@ final class Tracer(spark: SparkSession) extends SparkListener {
   }
 }
 
-/** Phases that record `build`/`plan`/`execute` spans and every plan's
-  * planning time and scan counters. */
+/** Phases that record `build`/`plan`/`execute` spans and the planning
+  * time of every frame the op executes. */
 final class TracedPhases(tr: Tracer, op: String, root: Long) extends Phases {
   var planMs = 0.0
-  var scans = ScanCounters(0, 0, 0, 0, 0)
-  private val executed = mutable.Buffer[DataFrame]()
   override def build[A](f: => A): A = tr.span(op, root, "build")(_ => f)
   override def plan(df: DataFrame): Unit = tr.span(op, root, "plan")(_ => super.plan(df))
   override def execute[A](f: => A): A = tr.span(op, root, "execute")(_ => f)
   override def run(df: DataFrame): Executed = {
     val e = super.run(df)
-    executed += df
-    e
-  }
-  /** Read the plan counters right after the timed part, before the check
-    * re-runs any final stage. */
-  def harvest(): Unit = executed.foreach { df =>
     planMs += PlanStats.planMs(df.queryExecution)
-    val s = PlanStats.scans(df.queryExecution.executedPlan)
-    scans = ScanCounters(scans.payloads + s.payloads, scans.slots + s.slots,
-      scans.geomCells + s.geomCells, scans.rowsOut + s.rowsOut, scans.partitions + s.partitions)
+    e
   }
 }
 

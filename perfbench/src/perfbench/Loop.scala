@@ -5,17 +5,15 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 
 /** What the traced execution of one op recorded. */
-final case class OpTrace(op: Op, latencyS: Double, planMs: Double, scans: ScanCounters,
-    engine: EngineCounters, spans: Seq[Span])
+final case class OpTrace(op: Op, latencyS: Double, planMs: Double, engine: EngineCounters,
+    spans: Seq[Span])
 
 /** A closed loop: one client thread issues the ops in a fixed rotation,
-  * each only after the previous one returned, and stops at the end of the
-  * first rotation that brings the timed total to the run length. Checks
-  * run after each op's timer stops. */
+  * each only after the previous one returned. Checks run after each op's
+  * timer stops. */
 abstract class ClosedLoop(spark: SparkSession) extends Instance {
   def ops: Seq[Op]
-  /** Untimed passes over every op type before measuring: first executions
-    * run cold (codegen, JIT), and latencies keep falling for a few more. */
+  /** Untimed passes over every op type before measuring. */
   def warmPasses: Int
 
   /** Workload-specific per-layer metrics from each op's first traced run. */
@@ -59,7 +57,6 @@ abstract class ClosedLoop(spark: SparkSession) extends Instance {
     val start = tr.nowMs
     val ph = new TracedPhases(tr, id, root)
     val o = runOnce(op, ph, chk => {
-      ph.harvest()
       tr.leave()
       tr.span(id, root, "check")(_ => chk())
     })
@@ -68,7 +65,7 @@ abstract class ClosedLoop(spark: SparkSession) extends Instance {
     val spans = tr.spans.asScala.filter(_.op == id).toSeq
     val eng = Option(tr.counters.get(id)).getOrElse(new EngineCounters)
     val plan = ph.planMs + Option(tr.sqlPlanMs.get(id)).map(_.doubleValue).getOrElse(0.0)
-    (o, OpTrace(op, o.latencyS, plan, ph.scans, eng, spans))
+    (o, OpTrace(op, o.latencyS, plan, eng, spans))
   }
 
   def measure(seconds: Double, tracer: Option[Tracer]): Measured = {
@@ -86,8 +83,8 @@ abstract class ClosedLoop(spark: SparkSession) extends Instance {
     // alternate, starting and ending untraced so the warm-up trend does
     // not pass for tracing overhead; the first traced rotation gives the
     // per-op and engine counters.
-    def done = busy + busy / rotation / 2 >= seconds &&
-      (if (tracer.isDefined) rotation >= 3 && rotation % 2 == 1 else rotation >= 1)
+    def done = (if (tracer.isDefined) rotation >= 3 && rotation % 2 == 1 else rotation >= 1) &&
+      busy + busy / rotation / 2 >= seconds
     while (!done) {
       val tracing = tracer.isDefined && rotation % 2 == 1
       if (tracing) tracer.foreach(_.install())

@@ -22,8 +22,8 @@ final case class Measured(samples: Seq[Sample], rounds: Seq[Round], failed: Int,
 
 /** A workload's inputs, generated and ready to run. */
 trait Instance {
-  /** Untimed executions of every op type until the JIT has settled;
-    * returns (attempted, failed). */
+  /** Untimed executions of every op type before measuring (first
+    * executions run cold: codegen, JIT); returns (attempted, failed). */
   def warmUp(): (Int, Int)
   def measure(seconds: Double, tracer: Option[Tracer]): Measured
   /** Traced-only direct-call calibration of the layers the workload
@@ -42,7 +42,7 @@ trait Workload {
 }
 
 object Main {
-  val Workloads: Seq[Workload] = Seq(EnsembleScan, DeckRoundtrip, StreamIngest)
+  val Workloads: Seq[Workload] = Seq(DeckRoundtrip, StreamIngest)
   private val SetupRounds = 3
 
   /** The session confs every run pins: UTC, v2 bucketing (storage-

@@ -19,7 +19,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object StreamIngest extends Workload {
   val name = "stream_ingest"
-  val tailPct = 0.75
+  val tailPct = 0.85
 
   val Vectors = 40
   val Steps = 100
@@ -51,10 +51,10 @@ object StreamIngest extends Workload {
       Files.createDirectories(tmp.resolve("landing"))
       Files.createDirectories(tmp.resolve("staging"))
     }
-    new Stream(spark, dir, s0, gaps)
+    new Ingest(spark, dir, s0, gaps)
   }
 
-  final class Stream(spark: SparkSession, dir: Path, s0: Int, gaps: Array[Long]) extends Instance {
+  final class Ingest(spark: SparkSession, dir: Path, s0: Int, gaps: Array[Long]) extends Instance {
     private val landing = dir.resolve("landing")
     private val staging = dir.resolve("staging")
     private val sink = dir.resolve("sink").toString

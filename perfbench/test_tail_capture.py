@@ -47,8 +47,8 @@ class TailCaptureTest(unittest.TestCase):
 
     def test_real_run_survives(self):
         p = subprocess.run(
-            [sys.executable, os.path.join(HERE, "run.py"), "--workload", "ensemble_scan",
-             "--seed", "1", "--seconds", "1", "--trace", "0"],
+            [sys.executable, os.path.join(HERE, "run.py"), "--workload", "stream_ingest",
+             "--seed", "1", "--seconds", "2", "--trace", "0"],
             cwd=ROOT, capture_output=True, text=True, timeout=900)
         self.assertEqual(p.returncode, 0, p.stderr[-3000:])
         parsed = tail_capture(p.stdout)
