@@ -25,10 +25,15 @@ BENCH_SRC = os.path.join(HERE, "src")
 
 
 def spark_jars():
-    jars = os.path.join(os.environ.get("SPARK_HOME", "/opt/spark"), "jars")
-    if not glob.glob(os.path.join(jars, "scala-compiler-*.jar")):
-        raise SystemExit(f"perfbench: no Spark distribution with a Scala compiler at {jars}; set SPARK_HOME")
-    return os.path.join(jars, "*")
+    """The jars of a Spark distribution that ships a Scala compiler:
+    $SPARK_HOME, else the first distribution whose bin/ is on PATH."""
+    homes = [os.environ.get("SPARK_HOME", "")] + [
+        os.path.dirname(os.path.abspath(p)) for p in os.environ.get("PATH", "").split(os.pathsep) if p]
+    for home in homes:
+        jars = os.path.join(home, "jars")
+        if home and glob.glob(os.path.join(jars, "scala-compiler-*.jar")):
+            return os.path.join(jars, "*")
+    raise SystemExit("perfbench: no Spark distribution with a Scala compiler under SPARK_HOME or PATH")
 
 
 def sources(root):

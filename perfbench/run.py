@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Run one benchmark workload and print its result as the last stdout line.
 
-    python3 perfbench/run.py --workload deck_roundtrip --seed 1 --seconds 16 --trace 0
+    python3 perfbench/run.py --workload deck_roundtrip --seed 1 --seconds 14 --trace 0
 
 Builds the library and the benchmark from source first (see build.py), then
 runs the workload in one JVM. Inputs are generated from --seed into a fresh

@@ -5,9 +5,11 @@ import scala.jdk.CollectionConverters._
 
 /** Input-generation helpers shared by the workloads. */
 object Gen {
-  /** Generate into a scratch sibling of `dir`, then rename it to `dir`:
-    * the program only ever sees complete inputs. */
+  /** Generate into a scratch sibling of `dir`, then rename it to `dir`
+    * (which must not exist yet): the program only ever sees complete
+    * inputs. */
   def publish(dir: Path)(write: Path => Unit): Path = {
+    require(!Files.exists(dir), s"$dir already exists")
     Files.createDirectories(dir.getParent)
     val tmp = Files.createTempDirectory(dir.getParent, s".${dir.getFileName}-")
     write(tmp)

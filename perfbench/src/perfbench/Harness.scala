@@ -52,11 +52,15 @@ final case class Span(id: Long, parent: Long, op: String, name: String,
     startMs: Double, endMs: Double)
 
 /** Per-op engine counters, summed over every task of every job the op
-  * submitted (attributed by job group). */
+  * submitted (attributed by job group). `payloads`, `slots` and
+  * `scanTasks` come from the eclipse-* scans' own task metrics: payloads
+  * and UNSMRY parameter slots decoded, and the scan tasks (one per case)
+  * that reported them. */
 final class EngineCounters {
   var jobs = 0L; var stages = 0L; var tasks = 0L
   var cpuNs = 0L; var shuffleBytes = 0L; var spillBytes = 0L
   var gcMs = 0L; var taskWaitMs = 0L
+  var payloads = 0L; var slots = 0L; var scanTasks = 0L
 }
 
 /** Records spans in memory and Spark listener counters per job group.
@@ -81,12 +85,16 @@ final class Tracer(spark: SparkSession) extends SparkListener {
   private val stageSubmit = new ConcurrentHashMap[Int, java.lang.Long]()
   private val jobStart = new ConcurrentHashMap[Int, java.lang.Long]()
   val counters = new ConcurrentHashMap[String, EngineCounters]()
-  /** Extra job groups (streaming queries) folded into a named op. */
-  val groupAlias = new ConcurrentHashMap[String, String]()
+  // a DSv2 custom metric's accumulator is named by its description
+  private val PayloadsName = new graft.io.datasource.PayloadsDecodedMetric().description()
+  private val SlotsName = new graft.io.datasource.ParamSlotsDecodedMetric().description()
+  /** The run id of the streaming query whose jobs count as op
+    * [[StreamIngest.OpName]] (a streaming query sets its own job group). */
+  @volatile var streamRunId = ""
 
   private def groupOf(props: java.util.Properties): String =
     Option(props).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-      .map(g => Option(groupAlias.get(g)).getOrElse(g)).getOrElse("")
+      .map(g => if (g == streamRunId) StreamIngest.OpName else g).getOrElse("")
   private def counter(g: String) = counters.computeIfAbsent(g, _ => new EngineCounters)
 
   override def onJobStart(e: SparkListenerJobStart): Unit = {
@@ -131,6 +139,14 @@ final class Tracer(spark: SparkSession) extends SparkListener {
         c.gcMs += m.jvmGCTime
       }
       c.taskWaitMs += math.max(0L, e.taskInfo.launchTime - submitted)
+      e.taskInfo.accumulables.foreach { a =>
+        val v = a.update.collect { case n: Long => n }.getOrElse(0L)
+        a.name match {
+          case Some(PayloadsName) => c.payloads += v; c.scanTasks += 1
+          case Some(SlotsName) => c.slots += v
+          case _ =>
+        }
+      }
     }
   }
 

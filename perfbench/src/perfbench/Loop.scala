@@ -111,7 +111,9 @@ abstract class ClosedLoop(spark: SparkSession) extends Instance {
       }
       if (tracing) tracer.foreach(_.uninstall())
       else if (round.ops > 0) rounds += round
-      heap = math.max(heap, Main.oldGenAfterGcMb())
+      val live = Main.oldGenAfterGcMb()
+      System.err.println(f"perfbench: rotation $rotation old gen after GC $live%.1f MB")
+      heap = math.max(heap, live)
       rotation += 1
     }
     val layer = if (tracer.isEmpty) Map.empty[String, Double] else {

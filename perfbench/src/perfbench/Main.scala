@@ -42,7 +42,7 @@ trait Workload {
 }
 
 object Main {
-  val Workloads: Seq[Workload] = Seq(DeckRoundtrip, StreamIngest)
+  val Workloads: Seq[Workload] = Seq(DeckRoundtrip, StreamIngest, CorpusDedup)
   private val SetupRounds = 3
 
   /** The session confs every run pins: UTC, v2 bucketing (storage-
@@ -91,7 +91,7 @@ object Main {
     for (round <- 1 to SetupRounds) {
       if (inst != null) inst.close()
       if (spark != null) { spark.stop(); SparkSession.clearActiveSession(); SparkSession.clearDefaultSession() }
-      val dir = publishDir(work, s"round$round")
+      val dir = Gen.publish(work.resolve(s"round$round"))(_ => ())
       val t0 = System.nanoTime()
       spark = session(dir)
       inst = wl.setup(spark, dir.resolve("inputs"), seed)
@@ -148,26 +148,26 @@ object Main {
   def fmt(v: Double): String =
     if (v.isNaN || v.isInfinite) "0" else java.math.BigDecimal.valueOf(v).toPlainString
 
-  /** A fresh, empty directory `base/name`, created by rename so nothing
-    * half-made is ever visible under its final name. */
-  def publishDir(base: Path, name: String): Path = {
-    Files.createDirectories(base)
-    val tmp = Files.createTempDirectory(base, s".$name-")
-    val dst = base.resolve(name)
-    require(!Files.exists(dst), s"$dst already exists")
-    Files.move(tmp, dst, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  /** Old-generation occupancy right after a full collection, in MB. The
-    * second collection takes what Spark's cleaner released after the
-    * first. */
+  /** Old-generation occupancy after full collections, in MB. Each
+    * collection lets Spark's cleaner release what the last one made
+    * unreachable (shuffle and broadcast state), so collect until the
+    * occupancy stops falling by more than 1%. */
   def oldGenAfterGcMb(): Double = {
-    System.gc()
-    Thread.sleep(50)
-    System.gc()
-    ManagementFactory.getMemoryPoolMXBeans.asScala
-      .filter(p => p.getName.contains("Old Gen") || p.getName.contains("Tenured"))
-      .map(_.getUsage.getUsed).sum / 1e6
+    def used() = {
+      System.gc()
+      ManagementFactory.getMemoryPoolMXBeans.asScala
+        .filter(p => p.getName.contains("Old Gen") || p.getName.contains("Tenured"))
+        .map(_.getUsage.getUsed).sum / 1e6
+    }
+    var last = used()
+    var n = 1
+    var now = { Thread.sleep(100); used() }
+    while (now < 0.99 * last && n < 8) {
+      last = now; n += 1
+      Thread.sleep(100)
+      now = used()
+    }
+    now
   }
 
   private val osBean = ManagementFactory.getOperatingSystemMXBean

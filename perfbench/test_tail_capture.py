@@ -1,6 +1,7 @@
-"""The round driver keeps only the last ~2,000 characters of a benchmark's
-stdout and parses its last line. These tests replay that capture on the
-widest end-to-end line run.py can print and on the output of a real run.
+"""A harness that runs the benchmark may keep only the last ~2,000
+characters of its stdout and parse its last line. These tests replay that
+capture on the widest end-to-end line run.py can print and on the output
+of a real run.
 
     python3 -m unittest discover -s perfbench -p 'test_*.py'
 
@@ -21,7 +22,7 @@ TAIL_CHARS = 2000
 
 
 def tail_capture(stdout):
-    """Replica of the driver's capture: the last TAIL_CHARS characters, then
+    """Replica of that capture: the last TAIL_CHARS characters, then
     the last non-empty line, parsed as JSON."""
     lines = [l for l in stdout[-TAIL_CHARS:].splitlines() if l.strip()]
     return json.loads(lines[-1])
