@@ -39,6 +39,13 @@ ADD_OPENS = [
 # (median 1.14 s vs 0.84 s) and a wider run-to-run spread (IQR/median 0.39
 # vs 0.27).
 JVM_HEAP = ["-XX:+UseParallelGC", "-Xms2g", "-Xmx2g", "-Xmn768m"]
+# stream_ingest's ops are ~0.4 s micro-batches of engine code, run back to
+# back for the whole run. With C2 that path was still compiling after 25 s
+# and runs settled at different speeds (op_p50_s 0.33-0.52 s, IQR/median
+# 0.28 over five seeds); with C1 alone it settles within seconds of the
+# warm-up (0.44-0.50 s, 0.08 on the same seeds). The closed loops keep C2:
+# under C1 alone their ops ran 25-45% slower at no steadier spread.
+JIT = {"stream_ingest": ["-XX:TieredStopAtLevel=1"]}
 JVM_TIMEOUT_S = 170
 MARKER = "PERFBENCH_RESULT "
 
@@ -84,7 +91,7 @@ def main():
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(os.path.join(work, "tmp"))
     cmd = (["java"] + [f"--add-opens={p}=ALL-UNNAMED" for p in ADD_OPENS] +
-           JVM_HEAP + [f"-Djava.io.tmpdir={os.path.join(work, 'tmp')}", "-cp", cp, "perfbench.Main",
+           JVM_HEAP + JIT.get(a.workload, []) + [f"-Djava.io.tmpdir={os.path.join(work, 'tmp')}", "-cp", cp, "perfbench.Main",
             "--workload", a.workload, "--seed", str(a.seed), "--seconds", str(a.seconds),
             "--trace", str(a.trace), "--work", work, "--out", out])
     res = None

@@ -28,10 +28,15 @@ object StreamIngest extends Workload {
   val Templates = 4
   /** Mean gap between landings; each gap is drawn from 0.5..1.5 of it. */
   val MeanGapMs = 100
-  /** Cases landed (one at a time, each awaited) before measuring. */
-  val WarmCases = 24
-  /** Cases a run can land: at the mean rate, warm-up plus a 35 s window. */
-  val MaxCases = 400
+  /** The warm-up: the first `ColdCases` land one at a time, each awaited
+    * (the cold start), then the schedule runs for `WarmSeconds` at the
+    * measured rate, so the multi-case micro-batch path is compiled before
+    * measuring. (After 24 cold cases alone, the first ten seconds of the
+    * measured window were still warming up.) */
+  val ColdCases = 4
+  val WarmSeconds = 8.0
+  /** Cases a run can land: at the mean rate, warm-up plus a 60 s window. */
+  val MaxCases = 800
   private val Start = LocalDate.of(2022, 1, 1)
 
   def value(tpl: Int, vi: Int, d: Int, s0: Int): Double = 100.0 * vi + d + 13.0 * tpl + s0 + (d % 16) / 16.0
@@ -133,10 +138,38 @@ object StreamIngest extends Workload {
       (bad.toSet, unexpected.size)
     }
 
+    @volatile private var lateMax = 0.0
+    /** The generator: one thread lands the next cases of the schedule for
+      * `seconds`, each at its due time and never early, whether or not
+      * the stream keeps up. Returns each landed case with its due time. */
+    private def openLoop(seconds: Double): Seq[(Int, Long)] = {
+      val due = mutable.Buffer[(Int, Long)]()
+      val gen = new Thread(() => {
+        var at = System.nanoTime()
+        val end = at + (seconds * 1e9).toLong
+        while (at < end && next < MaxCases) {
+          val now = System.nanoTime()
+          if (now < at) Thread.sleep((at - now) / 1000000, ((at - now) % 1000000).toInt)
+          land(next)
+          due += next -> at
+          lateMax = math.max(lateMax, (landed.get(caseName(next)) - at) / 1e6)
+          at += gaps(next) * 1000000L
+          next += 1
+        }
+      }, "perfbench-generator")
+      gen.start(); gen.join()
+      due.toSeq
+    }
+
     def warmUp(): (Int, Int) = {
-      val ks = (next until next + WarmCases).toVector
-      ks.foreach { k => land(k); awaitCommitted(Seq(k), 60) }
-      next += WarmCases
+      val cold = (0 until ColdCases).map { _ =>
+        val k = next
+        land(k); next += 1
+        awaitCommitted(Seq(k), 60)
+        k
+      }
+      val ks = cold ++ openLoop(WarmSeconds).map(_._1)
+      awaitCommitted(ks, 60)
       val (bad, unexpected) = check(ks)
       (ks.length, bad.size + unexpected)
     }
@@ -145,7 +178,7 @@ object StreamIngest extends Workload {
       // traced runs measure three windows: listener off, on, off
       val windows = tracer.map(t => Seq(None, Some(t), None)).getOrElse(Seq(None))
       val samples = mutable.Buffer[Sample]()
-      var lateMax = 0.0
+      lateMax = 0.0
       var layer = Map.empty[String, Double]
       var failed = 0
       val rounds = mutable.Buffer[Round]()
@@ -154,24 +187,9 @@ object StreamIngest extends Workload {
         w.foreach(_.streamRunId = query.runId.toString)
         val c0 = Main.processCpuS()
         val wall0 = System.currentTimeMillis()
-        val t0 = System.nanoTime()
-        val due = mutable.Buffer[(Int, Long)]()
-        var at = t0
-        val end = t0 + (seconds / windows.length * 1e9).toLong
-        // the generator: lands each case at its due time, never early
-        val gen = new Thread(() => {
-          while (at < end && next < MaxCases) {
-            val now = System.nanoTime()
-            if (now < at) Thread.sleep((at - now) / 1000000, ((at - now) % 1000000).toInt)
-            land(next)
-            due += next -> at
-            lateMax = math.max(lateMax, (landed.get(caseName(next)) - at) / 1e6)
-            at += gaps(next) * 1000000L
-            next += 1
-          }
-        }, "perfbench-generator")
-        gen.start(); gen.join()
-        val ks = due.map(_._1).toSeq
+        val due = openLoop(seconds / windows.length)
+        val t0 = due.head._2
+        val ks = due.map(_._1)
         awaitCommitted(ks, 60)
         val cpuS = Main.processCpuS() - c0
         // a case that never committed is missing from the sink, so the
@@ -182,6 +200,9 @@ object StreamIngest extends Workload {
         if (w.isEmpty && done.nonEmpty)
           rounds += Round(done.length, (done.map(k => committed.get(caseName(k)): Long).max - t0) / 1e9,
             done.length * caseBytes, cpuS)
+        System.err.println(s"perfbench: $OpName latencies ms, landing order: " +
+          due.map { case (k, d) => Option(committed.get(caseName(k))).map(c => f"${(c - d) / 1e6}%.0f").getOrElse("-") }
+            .mkString(" "))
         due.foreach { case (k, d) =>
           val ok = !bad(k)
           samples += Sample(if (ok) (committed.get(caseName(k)) - d) / 1e9 else 0, ok, w.isDefined)
