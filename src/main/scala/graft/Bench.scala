@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line (driver contract). A warmup action first so JIT +
   * code cache + file-listing costs don't land on the first timed query.
@@ -10,26 +8,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // storage-partitioned planning for the eclipse-* DSv2 sources:
-      // set at SESSION BIRTH everywhere queries run, so plan shapes never
-      // depend on whether a fleet gate ran first (review finding)
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      // Checkpoint-file checksums (a Spark 4.1 integrity feature, default
-      // on) serialize every state-store/WAL file close behind an awaited
-      // async checksum write — measured round 13: all 32 task threads
-      // parked in ChecksumCancellableFSDataOutputStream.close, q134
-      // 8.9 s -> 5.1 s from this conf alone. Corruption detection for
-      // durable production checkpoints is a deliberate opt-back-in.
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(s"local[$cpus]", "graft-bench")
 
     // warmup: touch every table + exercise shuffle/window/codegen paths once
     try SparkEntry.queries("q01_agg")(spark, sfDir).count()
@@ -53,14 +32,8 @@ object Bench {
         val t0 = System.nanoTime()
         val ok = try { run(fn(spark, sfDir)); true } catch { case _: Throwable => false }
         val t = (System.nanoTime() - t0) / 1e9
-        // keep queries independent: a .cache() inside one query must not
-        // occupy storage memory (and skew GC) for every later measurement —
-        // and localCheckpoint(true) blocks are RDD-level persists that
-        // clearCache (SQL CacheManager only) never releases, so drop those
-        // explicitly rather than waiting on GC + ContextCleaner
-        spark.catalog.clearCache()
-        if (!sys.env.contains("GRAFT_BENCH_NO_UNPERSIST"))
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+        // keep queries independent
+        GraftSession.releaseCaches(spark)
         name -> (if (ok) t else -1.0)
       }.toMap
     def sweep(): Map[String, Double] = sweepWith(_.count())

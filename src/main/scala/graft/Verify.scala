@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,20 +9,7 @@ object Verify {
     // them (local iteration aid; the driver always passes exactly two)
     val only = args.drop(2).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // storage-partitioned planning for the eclipse-* DSv2 sources:
-      // set at SESSION BIRTH everywhere queries run, so plan shapes never
-      // depend on whether a fleet gate ran first (review finding)
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      // checkpoint checksums off: measured r13 state-commit serialization
-      // (see Bench.scala) — same setting everywhere queries run
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(s"local[$cpus]", "graft-verify")
     new java.io.File(outDir).mkdirs()
     // clear any stale manifest from a prior failing run in the same
     // outDir — a leftover would make tools/check.py fail forever
@@ -38,11 +24,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         failures += name -> String.valueOf(e.getMessage).take(500)
       }
-      // same hygiene as Bench: release per-query caches and the
-      // localCheckpoint(true) hub blocks (RDD-level persists that SQL
-      // clearCache never reaches) so 50+ queries don't accumulate storage
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      // release what the query cached so 200+ queries don't accumulate storage
+      GraftSession.releaseCaches(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

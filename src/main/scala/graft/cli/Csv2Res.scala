@@ -40,14 +40,7 @@ object Csv2Res {
           "[out.inc|out_basepath] [--keywords A,B]")
       sys.exit(2)
     }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("csv2res")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(sys.env.getOrElse("SPARK_MASTER", "local[4]"), "csv2res")
     // each branch reads the CSV itself — an eager shared inferSchema read
     // here would scan the input a second, wasted time for `summary`
     def readCsv() = spark.read.option("header", "true")

@@ -169,14 +169,7 @@ object Res2Csv {
         "[--tablenumbers n,m] [--vectors glob,glob] [--rstdates first|last|all|ISO]")
       sys.exit(2)
     }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("res2csv")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(sys.env.getOrElse("SPARK_MASTER", "local[4]"), "res2csv")
     val df0 = positional(0) match {
       case "vfp" =>
         Vfp.df(spark, deckTextOf(positional(1)), tablenumbers, flags.contains("units"))

@@ -195,8 +195,8 @@ object Gruptree {
     // otherwise accumulate them until GC + ContextCleaner. RDD-level
     // unpersist via the tracked ids (Dataset.unpersist is a no-op for
     // checkpointed frames). The family hubs themselves stay for the
-    // caller's action (one or two frames per call; Bench/Profile drop
-    // them between queries).
+    // caller's action (one or two frames per call; Bench and Verify
+    // release them between queries via GraftSession.releaseCaches).
     sc.getPersistentRDDs.view.filterKeys(hubIds).values
       .foreach(_.unpersist(blocking = false))
     val out = base

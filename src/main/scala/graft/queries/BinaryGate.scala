@@ -1800,14 +1800,23 @@ object BinaryGate {
     * fixpoint loop still handles it. */
   private val TreeClosureDriverMaxEdges = 100000
 
+  /** Bound on the (well, grp) pairs the driver walk may emit: few edges
+    * can still close into many pairs (every well under a long chain or a
+    * dense multi-parent DAG pairs with each ancestor), and the pairs are
+    * held on the driver and broadcast downstream. Past the bound the
+    * distributed fixpoint takes over. */
+  private val TreeClosureDriverMaxPairs = 1000000
+
   /** Driver-side well→ancestor closure for a bounded edge set: BFS with a
     * visited set computes exactly the union-distinct fixpoint the
-    * distributed loop reaches (cycle inputs included). Extracted so the
-    * equivalence spec can pit it against [[wellAncestorsDistributed]] on
-    * random DAGs — the distributed path is the at-scale fallback and never
-    * runs in the gates otherwise. */
+    * distributed loop reaches (cycle inputs included). None once the
+    * closure would exceed `maxPairs` pairs. Extracted so the equivalence
+    * spec can pit it against [[wellAncestorsDistributed]] on random
+    * DAGs — the distributed path is the at-scale fallback and never runs
+    * in the gates otherwise. */
   private[graft] def wellAncestorsDriver(s: SparkSession,
-      edgePairs: Array[(String, String)]): DataFrame = {
+      edgePairs: Array[(String, String)],
+      maxPairs: Int = TreeClosureDriverMaxPairs): Option[DataFrame] = {
     import s.implicits._
     val parentsOf = edgePairs.groupBy(_._1).map { case (c, ps) =>
       c -> ps.map(_._2).toSet }
@@ -1823,9 +1832,13 @@ object BinaryGate {
       }
       seen.toSet
     }
-    wellsSet.toSeq.sorted
-      .flatMap(w => ancestorsOf(w).toSeq.sorted.map(g => (w, g)))
-      .toDF("well", "grp")
+    val pairs = scala.collection.mutable.ArrayBuffer[(String, String)]()
+    val wells = wellsSet.toSeq.sorted.iterator
+    while (wells.hasNext && pairs.length <= maxPairs) {
+      val w = wells.next()
+      pairs ++= ancestorsOf(w).toSeq.sorted.map(g => (w, g))
+    }
+    if (pairs.length > maxPairs) None else Some(pairs.toSeq.toDF("well", "grp"))
   }
 
   /** Distributed ancestor closure to fixed point (the pre-r14 q154 form,
@@ -1852,10 +1865,7 @@ object BinaryGate {
         .distinct()
         .observe(obs, count(lit(1)).as("n"))
         .localCheckpoint(true)
-      val m = obs.get.get("n") match {
-        case Some(c: Long) => c
-        case _ => 0L
-      }
+      val m = graft.core.Fixpoint.observedLong(obs, "n", "q154 ancestor closure", rounds)
       if (m == n) converged = true else { anc = grown; n = m; rounds += 1 }
     }
     // fail loud, never roll up a silently truncated closure (the
@@ -1869,6 +1879,17 @@ object BinaryGate {
       .select(col("well"), col("anc").as("grp"))
   }
 
+  /** The q154 closure of `edges(child, parent)`: the driver walk while the
+    * edge and pair bounds hold, the distributed fixpoint otherwise. */
+  private[graft] def wellAncestors(s: SparkSession, edges: DataFrame,
+      maxPairs: Int = TreeClosureDriverMaxPairs): DataFrame = {
+    val viaDriver =
+      if (edges.count() > TreeClosureDriverMaxEdges) None
+      else wellAncestorsDriver(s,
+        edges.collect().map(r => (r.getString(0), r.getString(1))), maxPairs)
+    viaDriver.getOrElse(wellAncestorsDistributed(s, edges))
+  }
+
   def q154TreeRollup(s: SparkSession, dir: String): DataFrame = {
     val tmp = writeFleetFixture(s, "q154")
     val edges = graft.modules.Gruptree.df(s, TreeDeck)
@@ -1876,12 +1897,7 @@ object BinaryGate {
       .select(col("CHILD").as("child"), col("PARENT").as("parent"))
       .distinct()
       .localCheckpoint(true)
-    val nEdges = edges.count()
-    val wellAnc: DataFrame =
-      if (nEdges <= TreeClosureDriverMaxEdges)
-        wellAncestorsDriver(s,
-          edges.collect().map(r => (r.getString(0), r.getString(1))))
-      else wellAncestorsDistributed(s, edges)
+    val wellAnc = wellAncestors(s, edges)
     val sims = graft.write.SummaryWriter.corpusFromPath(s, s"$tmp/*.UNSMRY")
       .filter(col("VECTOR").startsWith("WOPR:"))
       .withColumn("case_id",

@@ -308,40 +308,7 @@ object DedupSim {
 
   private val VerifyThreshold = 0.7
 
-  /** Two-stage near-dup pipeline (q91): LSH candidate generation +
-    * EXACT Jaccard verification — the canonical production MinHash
-    * dedup shape (q26/q39 stop at bucket clustering, which admits the
-    * LSH false-positive rate; real corpus-dedup runs verify candidates
-    * before dropping documents). Stage 1 self-joins the open-vocabulary
-    * band table (q39's dictionary-free signatures) on the bucket key —
-    * candidate pairs are LINEAR in bucket co-membership, never
-    * all-pairs, and the band count per pair rides along as the
-    * candidate strength. Stage 2 computes the TRUE token-set Jaccard of
-    * each candidate pair only and keeps pairs at or above
-    * [[VerifyThreshold]] (filtered on the 6-decimal rounded value so
-    * the cutoff is engine-portable).
-    *
-    * Scale: verification is O(1) per candidate (64-bit mask popcounts,
-    * two broadcast-sized joins on the pair's ids), so stage 2 costs one
-    * pass over the candidate set. The candidate set itself is
-    * proportional to the near-dup density the LSH surfaced — on THIS
-    * deliberately near-dup-dense corpus that is ~n²/5 pairs (the
-    * postings-join verification alternative measured 65 s at sf0.1
-    * against ~2 s for the mask kernel); a pathological bucket
-    * (boilerplate collision) inflates stage 1 the same way, the
-    * production guard being the q40 stop-shingle/df cap discipline, and
-    * the q41 component path is the linear alternative when pair output
-    * itself is the problem.
-    */
   private val VerifyBlockSz = 256
-
-  def q91LshVerify(s: SparkSession, dir: String): DataFrame = q91Stages(s, dir)._4
-
-  /** q91's stage frames, exposed for the Q91Probe timing tool. */
-  private[graft] def q91Parts(s: SparkSession, dir: String): Seq[(String, DataFrame)] = {
-    val (bands, raw, cand, full) = q91Stages(s, dir)
-    Seq("bands" -> bands, "raw_pairs" -> raw, "cand" -> cand, "full" -> full)
-  }
 
   /** Incremental near-dup probe (q101): detect near-duplicates of a
     * NEWLY ARRIVING shard against the historical corpus's MinHash band
@@ -576,8 +543,7 @@ object DedupSim {
     * historical-vs-new probe shape (q101); q91 passes None (all pairs).
     */
   /** Stacked band rows of a `(doc_id, bvec)` frame, each row still
-    * carrying the full vector — the shape [[bandBlockPairs]] consumes
-    * and Q91Probe's `bands` stage times.
+    * carrying the full vector — the shape [[bandBlockPairs]] consumes.
     */
   private def bandsOf(bvecs: DataFrame): DataFrame =
     bvecs
@@ -711,17 +677,38 @@ object DedupSim {
       }.toDF("doc_a", "doc_b", "n_buckets")
   }
 
-  private def q91Stages(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+  /** Two-stage near-dup pipeline (q91): LSH candidate generation +
+    * EXACT Jaccard verification — the canonical production MinHash
+    * dedup shape (q26/q39 stop at bucket clustering, which admits the
+    * LSH false-positive rate; real corpus-dedup runs verify candidates
+    * before dropping documents). Stage 1 self-joins the open-vocabulary
+    * band table (q39's dictionary-free signatures) on the bucket key —
+    * candidate pairs are LINEAR in bucket co-membership, never
+    * all-pairs, and the band count per pair rides along as the
+    * candidate strength. Stage 2 computes the TRUE token-set Jaccard of
+    * each candidate pair only and keeps pairs at or above
+    * [[VerifyThreshold]] (filtered on the 6-decimal rounded value so
+    * the cutoff is engine-portable).
+    *
+    * Scale: verification is O(1) per candidate (64-bit mask popcounts,
+    * two broadcast-sized joins on the pair's ids), so stage 2 costs one
+    * pass over the candidate set. The candidate set itself is
+    * proportional to the near-dup density the LSH surfaced — on THIS
+    * deliberately near-dup-dense corpus that is ~n²/5 pairs (the
+    * postings-join verification alternative measured 65 s at sf0.1
+    * against ~2 s for the mask kernel); a pathological bucket
+    * (boilerplate collision) inflates stage 1 the same way, the
+    * production guard being the q40 stop-shingle/df cap discipline, and
+    * the q41 component path is the linear alternative when pair output
+    * itself is the problem.
+    */
+  def q91LshVerify(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.PortableStringHash.strHash
-    import s.implicits._
     val toks = Tables.spreadDocs(Tables.documents(s, dir))
       .select(col("doc_id"), explode(array_distinct(tokens(col("text")))).as("tok"))
       .filter(length(col("tok")) > 0)
     val bvecs = minhashBandVecs(toks.select(col("doc_id"), strHash(col("tok")).as("v")))
-    val bands = bandsOf(bvecs)
     val cand = bandBlockPairs(s, bvecs, None)
-    val rawPairs = cand // single-emission kernel: candidates ARE the raw pairs
     // exact verification as an O(1)-per-pair popcount over the q25
     // bitmask view (dictionary-bounded corpus: one 64-bit mask per doc;
     // an open vocabulary falls back to the postings-intersection join,
@@ -729,7 +716,7 @@ object DedupSim {
     // this corpus is near-dup-dense: millions of candidates at ×10,
     // each O(|doc|) under postings but O(1) under masks)
     val masks = docTokenMasks(s, dir)
-    val full = cand
+    cand
       // one mask row per doc — broadcast both sides so the multi-million
       // pair frame never shuffles for the verification lookups
       .join(broadcast(masks.select(col("doc_id").as("doc_a"), col("mask").as("mask_a"))),
@@ -742,7 +729,6 @@ object DedupSim {
       .filter(col("jaccard") >= VerifyThreshold)
       .select(col("doc_a"), col("doc_b"), col("n_buckets"), col("jaccard"))
       .orderBy(col("doc_a"), col("doc_b"))
-    (bands, rawPairs, cand, full)
   }
 
   /** MinHash band memberships of (doc_id, v): k slot minimums in one
@@ -1044,14 +1030,10 @@ object DedupSim {
           .otherwise(0L)).as("changed"))
         .select(col("doc_id"), col("label"))
         .localCheckpoint(true)
-      changed = obs.get.get("changed") match {
-        case Some(n: Long) => n
-        case _ => 0L // empty frame: sum over no rows is null = converged
-      }
+      // empty frame: sum over no rows is null, read as 0 = converged
+      changed = graft.core.Fixpoint.observedLong(obs, "changed", "connectedComponents", iter)
       labels = next
       iter += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"[cc] iter=$iter changed=$changed")
     }
     if (changed > 0)
       throw new IllegalStateException(

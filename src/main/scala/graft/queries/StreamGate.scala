@@ -1170,42 +1170,14 @@ object StreamGate {
     * off the arriving file's few input tasks at hash-row (not image-
     * byte) width.
     */
-  def q158StreamImageDedup(s: SparkSession, dir: String): DataFrame =
-    streamImageDedupWith(s, dir, inflate = 1)
-
-  /** The q158 plan with the historical index optionally INFLATED
-    * ×`inflate` by synthetic never-matching rows — the ScaleStress hook
-    * probing the production concern the de-broadcast addressed: the
-    * index grows with every image ever ingested, and the stream-static
-    * join must absorb that growth by shuffling, not by shipping the
-    * index to every task. Synthetic keys are real hashes XORed with a
-    * hashed spine (overflow-free under ANSI arithmetic) and then
-    * filtered against the CLOSED image-hash key space
-    * (the fixture's 61 content keys × 2 containers = ≤122 distinct
-    * hashes, enumerable without touching the corpus), so no synthetic
-    * row can ever match an arrival — the inflated run's output is
-    * row-identical to the gate's by construction.
-    */
-  private[graft] def streamImageDedupWith(s: SparkSession, dir: String,
-      inflate: Int): DataFrame = {
+  def q158StreamImageDedup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val histReal = graft.sources.Tables.documents(s, dir)
+    val hist = graft.sources.Tables.documents(s, dir)
       .filter(col("doc_id") < WHashHistN)
       .select(col("doc_id")).as[Long]
       .mapPartitions(it => it.map(id => (id, wHashOf(id))))
       .toDF("h_id", "whash")
       .groupBy(col("whash")).agg(min(col("h_id")).as("src_id"))
-    val hist =
-      if (inflate <= 1) histReal
-      else {
-        val keySpace = (0L until 2 * WHashKeys).map(wHashOf)
-        val spine = s.range(1, inflate).select(col("id").as("k"))
-        val synth = histReal.crossJoin(spine)
-          .select(col("whash").bitwiseXOR(xxhash64(col("k"))).as("whash"),
-            lit(-1L).as("src_id"))
-          .filter(!col("whash").isin(keySpace: _*))
-        histReal.unionByName(synth)
-      }
     // spread the DECODE off the single arrival file first (the
     // q112/q188 lesson), then key the probe by the join column; both
     // take the machine parallelism explicitly — runAdaptive's

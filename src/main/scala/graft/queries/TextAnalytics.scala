@@ -815,19 +815,8 @@ object TextAnalytics {
     * per (right-maximal interval, member suffix) — plus a cleanup that
     * releases the three persisted intermediates. q203 aggregates it to
     * maximal repeats; q205 turns it into the removal pass. */
-  /** Probe alias for tools.SuffixProbe (measurement only). */
-  private[graft] def suffixOccProbe(input: DataFrame)
-      : (DataFrame, DataFrame, () => Unit) = suffixOcc(input)
-
   private def suffixOcc(input: DataFrame)
       : (DataFrame, DataFrame, () => Unit) = {
-    // GRAFT_SUFFIX_DEBUG: eager per-segment counts+timings (measurement
-    // only — forces each persisted intermediate in sequence)
-    val dbg = sys.env.contains("GRAFT_SUFFIX_DEBUG")
-    def probe(label: String, df: => DataFrame): Unit = if (dbg) {
-      val t0 = System.nanoTime(); val n = df.count()
-      println(f"[suffix] $label: $n rows, ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    }
     import graft.functions.PortableStringHash.strHash
     import org.apache.spark.sql.expressions.Window
     // spread the hashed docs BEFORE the suffix explode: a single-file
@@ -1130,13 +1119,6 @@ object TextAnalytics {
         explode(expr("sequence(lo, hi)")).as("rank"))
       .join(ranked.select(col("rank"), col("doc_id"), col("pos"), col("prevh")),
         Seq("rank"))
-    probe("docs", docs)
-    probe("sorted", sorted.toDF())
-    probe("adj", adj.toDF())
-    probe("ranked", ranked)
-    probe("ev", ev)
-    probe("islands", islands)
-    probe("occ", occ)
     (docs, occ,
       () => { docs.unpersist(false); sorted.unpersist(false)
         ranked.unpersist(false); ev.unpersist(false) })

@@ -28,8 +28,8 @@ object EventStreams {
     // scope to the events table: a bare directory read would pull every
     // table in the sf dir through name-based column matching (their rows
     // surface as all-null events). When events.parquet is itself a
-    // DIRECTORY of part files (a distributed writer's layout — the
-    // ScaleStress replicas, any df.write output), stream from that
+    // DIRECTORY of part files (a distributed writer's layout — any
+    // df.write output), stream from that
     // directory directly: its part files are already exactly the events
     // table, and the single-file glob below would match none of them.
     // Otherwise the scoping is a file-name glob filter — exactly
@@ -68,10 +68,10 @@ object EventStreams {
         .parquet(srcDir))
   }
 
-  /** The q58/StreamStress daily activity aggregate: event-time tumbling
+  /** The q58/q116 daily activity aggregate: event-time tumbling
     * 1-day window, count + EXACT-LONG value sum (association-order-free,
     * hence bit-equal between batch and any micro-batch accumulation) —
-    * ONE definition so the gate query and the scale proof can't drift.
+    * ONE definition so the streaming gates can't drift apart.
     */
   def dailyActivityExact(events: DataFrame): DataFrame =
     events
@@ -248,9 +248,9 @@ object EventStreams {
   def readDocuments(spark: SparkSession, dir: String,
       sourceOptions: Map[String, String] = Map.empty): DataFrame = {
     // same layout handling as readEvents: a directory-shaped
-    // documents.parquet (distributed-writer output, ScaleStress
-    // replicas) is streamed directly; the single-file testdata layout
-    // goes through the scoping glob (which also admits numbered
+    // documents.parquet (distributed-writer output) is streamed
+    // directly; the single-file testdata layout goes through the
+    // scoping glob (which also admits numbered
     // per-arrival files documents_NNNN.parquet — the incremental
     // multi-batch staging q163 uses with maxFilesPerTrigger)
     val hPath = new org.apache.hadoop.fs.Path(dir)

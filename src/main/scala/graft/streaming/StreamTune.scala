@@ -22,7 +22,7 @@ import org.apache.spark.sql.SparkSession
   * a TB-per-batch ingest on a cluster keeps the session fan-out, the
   * KB-per-batch gate keeps a handful. This helper derives the count
   * from the source's on-disk bytes (the same one-listing cost the file
-  * source itself pays per trigger poll) with a conf'd per-partition
+  * source itself pays per trigger poll) with a fixed per-partition
   * target, sets `spark.sql.shuffle.partitions` for the duration of one
   * gate's streaming run, and restores the session value afterwards —
   * the batch tail (sink read + sort) runs under the session's own
@@ -35,10 +35,8 @@ object StreamTune {
     * keeps per-batch state tasks meaningfully loaded (a state store
     * commit costs ~ms of checkpoint I/O, so sub-MB partitions are pure
     * overhead) while fanning out to the session cap well before a
-    * single task's working set could matter; a cluster deployment can
-    * lower it to spread state earlier. */
-  val BytesPerPartitionKey = "graft.stream.bytesPerStatePartition"
-  private val DefaultBytesPerPartition = 16L << 20
+    * single task's working set could matter. */
+  private val BytesPerPartition = 16L << 20
 
   /** Floor for CPU-BEARING stateful operators (session-window merges):
     * the r13 volume-derived count serialized q106/q119's per-batch
@@ -47,14 +45,12 @@ object StreamTune {
     * 1.47 s, 32 parts 1.61 s — merge CPU fans out usefully to ~8 before
     * per-partition commit overhead wins again. The floor is INERT at
     * volume (the byte-derived count already exceeds it) and inert for
-    * commit-dominated gates (they don't opt in); a cluster can lower or
-    * raise it by conf. */
-  val MinCpuPartitionsKey = "graft.stream.minCpuPartitions"
-  private val DefaultMinCpuPartitions = 8
+    * commit-dominated gates (they don't opt in). */
+  private val MinCpuPartitions = 8
 
   /** Sum of regular-file bytes under `path` (file or directory,
     * recursive) on the session's Hadoop filesystem. */
-  def bytesUnder(s: SparkSession, path: String): Long = {
+  private def bytesUnder(s: SparkSession, path: String): Long = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) 0L
@@ -68,18 +64,11 @@ object StreamTune {
 
   /** Shuffle/state partition count for a streaming run over `srcBytes`
     * of input: ceil(bytes / target) clamped to [1, session shuffle
-    * partitions]. Misconfiguration fails loudly (the suffixPartitions
-    * convention — a silent fallback would quietly reshape every
-    * streaming plan). */
-  def streamPartitions(s: SparkSession, srcBytes: Long): Int = {
-    val raw = s.conf.get(BytesPerPartitionKey, DefaultBytesPerPartition.toString)
-    val target = try raw.toLong catch {
-      case e: NumberFormatException => throw new IllegalArgumentException(
-        s"$BytesPerPartitionKey: expected a positive long, got '$raw'", e)
-    }
-    require(target > 0, s"$BytesPerPartitionKey: expected a positive long, got '$raw'")
+    * partitions]. */
+  private def streamPartitions(s: SparkSession, srcBytes: Long): Int = {
     val session = math.max(1, s.sessionState.conf.numShufflePartitions)
-    math.max(1, math.min(session, ((srcBytes + target - 1) / target).toInt))
+    math.max(1, math.min(session,
+      ((srcBytes + BytesPerPartition - 1) / BytesPerPartition).toInt))
   }
 
   /** Run `body` (a streaming start + awaitTermination) with
@@ -99,18 +88,10 @@ object StreamTune {
     val key = "spark.sql.shuffle.partitions"
     val old = s.conf.get(key)
     val base = streamPartitions(s, bytesUnder(s, srcPath))
-    val n = if (!cpuBound) base else {
-      val raw = s.conf.get(MinCpuPartitionsKey, DefaultMinCpuPartitions.toString)
-      val floor = try raw.toInt catch {
-        case e: NumberFormatException => throw new IllegalArgumentException(
-          s"$MinCpuPartitionsKey: expected a positive int, got '$raw'", e)
-      }
-      require(floor > 0, s"$MinCpuPartitionsKey: expected a positive int, got '$raw'")
-      // never exceed the session fan-out: the floor spreads CPU, it does
-      // not override the cluster's own parallelism cap
-      math.max(base, math.min(floor,
-        math.max(1, s.sessionState.conf.numShufflePartitions)))
-    }
+    // never exceed the session fan-out: the floor spreads CPU, it does
+    // not override the cluster's own parallelism cap
+    val n = if (!cpuBound) base else math.max(base,
+      math.min(MinCpuPartitions, math.max(1, s.sessionState.conf.numShufflePartitions)))
     s.conf.set(key, n.toString)
     try body finally s.conf.set(key, old)
   }

@@ -8,7 +8,7 @@ import org.apache.spark.SparkContext
   * stragglers from the warmup run (contaminate) — ADVICE r13. Draining
   * the bus at the flip points makes the captured window exact. Lives in
   * an `org.apache.spark` subpackage solely to reach the
-  * `private[spark]` `listenerBus`; used by measurement tools only, never
+  * `private[spark]` `listenerBus`; used by the benchmark harness only, never
   * by query paths.
   */
 object ListenerBusDrain {

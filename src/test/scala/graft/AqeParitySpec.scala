@@ -15,8 +15,8 @@ import graft.io.DecodeStats
   *
   * Conf matrix (what is load-bearing vs. what is default):
   *   - `spark.sql.sources.v2.bucketing.enabled=true` — LOAD-BEARING,
-  *     off by Spark default; set at session birth in every entry point
-  *     (Verify/Bench/tools/tests). Without it the scans degrade to
+  *     off by Spark default; set at session birth by GraftSession, which
+  *     every entry point shares (Verify/Bench/CLIs/tests). Without it the scans degrade to
   *     UnknownPartitioning: same rows, one extra exchange.
   *   - `spark.sql.adaptive.enabled` — Spark default TRUE; the final
   *     adaptive plans keep the no-exchange shapes (asserted here).

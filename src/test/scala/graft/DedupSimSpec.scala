@@ -305,6 +305,14 @@ class DedupSimSpec extends AnyFunSuite {
     assert(cc.count(!_._3) == 1)
   }
 
+  test("a fixpoint round whose observed metrics never arrive fails loud, naming loop and round") {
+    import scala.concurrent.duration._
+    val never = org.apache.spark.sql.Observation("fixpoint_spec_never")
+    val e = intercept[IllegalStateException](
+      graft.core.Fixpoint.observedLong(never, "n", "spec loop", 3, 50.millis))
+    assert(e.getMessage.contains("spec loop") && e.getMessage.contains("round 3"))
+  }
+
   test("q42 repetition signals match hand-computed fractions") {
     // "a b a b a b": 3-grams [aba, bab, aba, bab] → dup = 1 - 2/4 = 0.5;
     // 2-grams [ab, ba, ab, ba, ab] → top share 3/5 = 0.6

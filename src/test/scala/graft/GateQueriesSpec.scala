@@ -2810,7 +2810,7 @@ class GateQueriesSpec extends AnyFunSuite {
     // the distributed loop is the at-scale fallback and never executes in
     // the gates — this equivalence pin is the only coverage it gets.
     // Seeded multi-parent DAGs (distinct() allows a child with several
-    // historical parents) plus a diamond and a deep chain.
+    // historical parents) plus a diamond, a deep chain and a cycle.
     val rnd = new scala.util.Random(154)
     val cases: Seq[Array[(String, String)]] = Seq(
       // random layered DAGs: edges only point to strictly higher layers
@@ -2823,13 +2823,16 @@ class GateQueriesSpec extends AnyFunSuite {
       Array(("W", "A"), ("W", "B"), ("A", "ROOT"), ("B", "ROOT")),
       // deep chain near the distributed loop's documented 12-round depth
       // bound (deeper trees fail loud there by contract — MaxRounds)
-      Array.tabulate(10)(i => (s"C${i + 1}", s"C$i"))
+      Array.tabulate(10)(i => (s"C${i + 1}", s"C$i")),
+      // a 3-cycle feeding a well: both paths must stop at the visited
+      // set / the distinct fixpoint and give the well all three nodes
+      Array(("W", "X"), ("X", "Y"), ("Y", "Z"), ("Z", "X"))
     )
     for (edgePairs <- cases) {
       val edges = edgePairs.toSeq.toDF("child", "parent")
         .distinct().localCheckpoint(true)
       val viaDriver = graft.queries.BinaryGate
-        .wellAncestorsDriver(spark, edgePairs)
+        .wellAncestorsDriver(spark, edgePairs).get
         .collect().map(r => (r.getString(0), r.getString(1))).toSet
       val viaSpark = graft.queries.BinaryGate
         .wellAncestorsDistributed(spark, edges)
@@ -2838,5 +2841,22 @@ class GateQueriesSpec extends AnyFunSuite {
         s"closure mismatch: driver ${viaDriver.size} vs spark ${viaSpark.size} rows")
       assert(viaDriver.nonEmpty)
     }
+  }
+
+  test("q154 closure: past the pair cap the driver walk yields to the distributed fixpoint") {
+    // ten wells under an 8-edge chain close into 10 × 9 = 90 pairs from
+    // only 18 edges — the pair cap, not the edge cap, must trip
+    val edgePairs = Array.tabulate(8)(i => (s"C${i + 1}", s"C$i")) ++
+      Array.tabulate(10)(w => (s"W$w", "C8"))
+    val edges = edgePairs.toSeq.toDF("child", "parent").distinct().localCheckpoint(true)
+    val bq = graft.queries.BinaryGate
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getString(1))).toSet
+    assert(bq.wellAncestorsDriver(spark, edgePairs, maxPairs = 50).isEmpty)
+    val uncapped = rows(bq.wellAncestorsDriver(spark, edgePairs).get)
+    assert(uncapped.size == 90)
+    val capped = rows(bq.wellAncestors(spark, edges, maxPairs = 50))
+    assert(capped == rows(bq.wellAncestorsDistributed(spark, edges)))
+    assert(capped == uncapped)
   }
 }

@@ -1,9 +1,7 @@
 package graft
 
-/** Plan-text helpers shared by the shape-asserting specs AND the main-
-  * source stress tools (FleetAggStress re-implemented the cut while the
-  * helper lived in test sources — the exact divergence class the single
-  * copy exists to prevent; ADVICE r12).
+/** Plan-text helpers shared by the specs that assert on physical plan
+  * shapes.
   */
 object PlanText {
   /** The FINAL adaptive plan only: AdaptiveSparkPlan's toString appends

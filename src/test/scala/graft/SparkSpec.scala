@@ -4,22 +4,5 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole test run. */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // storage-partitioned planning for the eclipse-* DSv2 sources:
-      // set at SESSION BIRTH everywhere queries run, so plan shapes never
-      // depend on whether a fleet gate ran first (review finding)
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      // checkpoint checksums off: measured r13 state-commit serialization
-      // (see Bench.scala) — same setting everywhere queries run
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession("local[4]", "graft-test")
 }
