@@ -327,6 +327,27 @@ object Ops {
     bigS.join(smallS, (keys :+ "__salt").toIndexedSeq, joinType).drop("__salt")
   }
 
+  /** Global sort by `keys` (ascending) of a frame whose last stage is
+    * CPU-heavy (a verification kernel, an edit-distance projection):
+    * hash-exchange on the leading key at `defaultParallelism` first,
+    * then `orderBy`.
+    *
+    * Why: `orderBy` range-partitions, and `RangePartitioner` draws its
+    * bounds by EXECUTING the child stage in a sampling job, so an
+    * `orderBy` straight over a heavy narrow stage runs that stage twice
+    * (once to sample, once to shuffle). The hash exchange ends the heavy
+    * stage in shuffle files, and the sample reads those instead.
+    * `count()` hides all of this: it lets Catalyst drop the final sort,
+    * so only a full-plan run (to the last row) shows the second pass.
+    *
+    * Spark drops the exchange as redundant when `df` is already
+    * hash-partitioned on the leading key alone at the same count, so
+    * spread such a stage on a different key.
+    */
+  def sortAfterHeavyStage(df: DataFrame, keys: String*): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism, col(keys.head))
+      .orderBy(keys.map(col): _*)
+
   def pairKey(a: Column, b: Column): Column =
     concat_ws("-", least(a, b), greatest(a, b))
 

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.{Ops, SetSimJoin}
 import graft.functions.SimilarityFunctions._
 import graft.functions.TextFunctions._
 import graft.sources.Tables
@@ -716,7 +717,7 @@ object DedupSim {
     // this corpus is near-dup-dense: millions of candidates at ×10,
     // each O(|doc|) under postings but O(1) under masks)
     val masks = docTokenMasks(s, dir)
-    cand
+    val verified = cand
       // one mask row per doc — broadcast both sides so the multi-million
       // pair frame never shuffles for the verification lookups
       .join(broadcast(masks.select(col("doc_id").as("doc_a"), col("mask").as("mask_a"))),
@@ -728,7 +729,7 @@ object DedupSim {
           / bit_count(col("mask_a").bitwiseOR(col("mask_b"))).cast("double"), 6))
       .filter(col("jaccard") >= VerifyThreshold)
       .select(col("doc_a"), col("doc_b"), col("n_buckets"), col("jaccard"))
-      .orderBy(col("doc_a"), col("doc_b"))
+    Ops.sortAfterHeavyStage(verified, "doc_a", "doc_b")
   }
 
   /** MinHash band memberships of (doc_id, v): k slot minimums in one
@@ -2167,73 +2168,35 @@ object DedupSim {
     * ascending global document frequency (rarest first, ties by token),
     * keep each document's first |x| − ⌈τ|x|⌉ + 1 tokens as its PREFIX,
     * and two documents can reach Jaccard ≥ τ ONLY if their prefixes
-    * share a token. Candidates = the prefix-postings self-join (tiny:
-    * prefixes are rare-token-heavy, so posting lists are short where it
-    * matters), then exact verification on the full sets. The threshold
-    * is evaluated in INTEGERS (τ = 1/2: 3·|∩| ≥ |a|+|b|), so no float
-    * sits on the keep/drop boundary.
+    * share a token — in fact the rarest token they share lies in both
+    * prefixes.
     *
-    * Scale shape: df ranking is one token-keyed aggregate + join (the
-    * Zipf frame); per-doc sorted sets are a doc-keyed aggregate whose
-    * state is one document; the candidate join is keyed by PREFIX
-    * token — a token with a huge posting list is by construction a
-    * HIGH-df token, which prefixes exclude unless the document is
-    * mostly stopwords, and the paired length filter
-    * (2·min ≥ max) prunes inside the join; verification joins the two
-    * set arrays back by doc id. Nothing is all-pairs, nothing is
-    * probabilistic.
+    * Kernel ([[graft.core.SetSimJoin.jaccardHalf]], τ = 1/2): an exact
+    * int dictionary in (df, token) order, one sorted int set per doc,
+    * and one posting per prefix token carrying the whole set. ONE
+    * exchange groups the postings by token; one pass per token group
+    * applies the length filter (2·min ≥ max), intersects the two sorted
+    * sets with two pointers and keeps 3·|∩| ≥ |a|+|b| in integers.
+    * Exactly-once rule: a pair is emitted only from the group of the
+    * first (rarest) token the two sets share, so no `distinct` and no
+    * join back to the sets runs.
+    *
+    * Scale shape: a token group of g postings costs O(g²) pair checks —
+    * the same as a self-join keyed by prefix token. A hot token is
+    * by construction a HIGH-df token, which prefixes exclude unless the
+    * document is mostly such tokens. The final sort goes through
+    * [[graft.core.Ops.sortAfterHeavyStage]], so the range sample reads
+    * shuffle output instead of running the kernel a second time.
+    * Nothing is all-pairs, nothing is probabilistic.
     */
   def q194PpjoinExact(s: SparkSession, dir: String): DataFrame = {
     val tok = Tables.documents(s, dir)
       .select(col("doc_id"), explode(array_distinct(tokens(col("text")))).as("tok"))
       .filter(length(col("tok")) > 0)
-    val dfT = tok.groupBy(col("tok")).agg(count(lit(1)).as("dfc"))
-    // EXACT dense int dictionary in (dfc, tok) order — no hashing, so the
-    // recall-1.0 theorem is untouched (ids are injective by construction,
-    // and ascending id IS the prefix order). The output never contains a
-    // token, so the encoding is output-invariant; it exists because the
-    // verification intersect runs once per candidate PAIR (8.9M pairs at
-    // sf0.1) and int equality beats string equality there, and because the
-    // per-doc sorted-set aggregate now collects ints, not (long, string)
-    // structs. zipWithIndex keeps the global sort's order (no one-task
-    // window); the eager localCheckpoint pins the sampled range boundaries
-    // so a task retry can never re-derive a different id assignment.
-    import s.implicits._
-    val dict = dfT.orderBy(col("dfc"), col("tok")).select(col("tok")).as[String]
-      .rdd.zipWithIndex.map { case (t, i) =>
-        if (i > Int.MaxValue.toLong) throw new IllegalStateException(
-          s"q194 token dictionary exceeds Int range ($i) — widen ids to long")
-        (t, i.toInt)
-      }.toDF("tok", "tid")
-      .localCheckpoint(true)
-    val sets = tok.join(dict, Seq("tok"))
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(col("tid"))).as("st"),
-        count(lit(1)).as("sz"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // prefix length for τ = 1/2: sz − ceil(sz/2) + 1
-    val prefix = sets.select(col("doc_id"), col("sz"),
-      explode(expr("slice(st, 1, CAST(sz - (sz + 1) div 2 + 1 AS INT))")).as("tid"))
-    val cand = prefix.as("a")
-      .join(prefix.as("b"), col("a.tid") === col("b.tid")
-        && col("a.doc_id") < col("b.doc_id")
-        && lit(2) * least(col("a.sz"), col("b.sz"))
-           >= greatest(col("a.sz"), col("b.sz")))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-    val setsA = sets.select(col("doc_id").as("doc_a"),
-      col("st").as("ts_a"), col("sz").as("sa"))
-    val setsB = sets.select(col("doc_id").as("doc_b"),
-      col("st").as("ts_b"), col("sz").as("sb"))
-    cand.join(setsA, Seq("doc_a")).join(setsB, Seq("doc_b"))
-      .withColumn("inter",
-        size(array_intersect(col("ts_a"), col("ts_b"))).cast("long"))
-      .filter(lit(3) * col("inter") >= col("sa") + col("sb"))
-      .select(col("doc_a"), col("doc_b"), col("inter"),
-        col("sa"), col("sb"),
-        round(col("inter").cast("double")
-          / (col("sa") + col("sb") - col("inter")).cast("double"), 6).as("jaccard"))
-      .orderBy(col("doc_a"), col("doc_b"))
+    val pairs = SetSimJoin.jaccardHalf(tok)
+      .withColumn("jaccard", round(col("inter").cast("double")
+        / (col("sa") + col("sb") - col("inter")).cast("double"), 6))
+    Ops.sortAfterHeavyStage(pairs, "doc_a", "doc_b")
   }
 
   private val FalseMergeFp = 500000L // edit-sim < 0.5 => suspicious merge
@@ -2267,12 +2230,17 @@ object DedupSim {
     */
   def q195EditVerify(s: SparkSession, dir: String): DataFrame = {
     val txt = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-    q39MinhashOpenVocab(s, dir)
+    val verified = q39MinhashOpenVocab(s, dir)
       .select(col("doc_id"), col("cluster_id"))
       .filter(col("cluster_id") < col("doc_id"))
       .join(txt, Seq("doc_id"))
       .join(txt.select(col("doc_id").as("cluster_id"),
         col("text").as("rep_text")), Seq("cluster_id"))
+      // explicit fan-out: AQE coalesces these few pairs onto one task,
+      // and each costs an O(len²) edit-distance DP. Keyed on both ids:
+      // the pairs already arrive hash-partitioned by doc_id, so a doc_id
+      // repartition (here or in the sort helper) is dropped as redundant
+      .repartition(s.sparkContext.defaultParallelism, col("doc_id"), col("cluster_id"))
       .withColumn("edit_dist", levenshtein(col("text"), col("rep_text")).cast("long"))
       .withColumn("max_len",
         greatest(length(col("text")), length(col("rep_text"))).cast("long"))
@@ -2281,7 +2249,7 @@ object DedupSim {
       .withColumn("false_merge", col("edit_sim_fp") < FalseMergeFp)
       .select(col("doc_id"), col("cluster_id"), col("edit_dist"),
         col("max_len"), col("edit_sim_fp"), col("false_merge"))
-      .orderBy(col("doc_id"))
+    Ops.sortAfterHeavyStage(verified, "doc_id")
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -2044,8 +2044,10 @@ class GateQueriesSpec extends AnyFunSuite {
   test("q194: prefix filtering loses NO pair a brute-force tau-join finds") {
     // the recall-1.0 theorem, checked directly: candidate pruning via
     // rarest-first prefixes must reproduce the unpruned answer exactly
-    val got = graft.queries.DedupSim.q194PpjoinExact(spark, Sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+    val q = graft.queries.DedupSim.q194PpjoinExact(spark, Sf)
+    val got = q.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
+        r.getDouble(5)))
       .toSet
     val docs = graft.sources.Tables.documents(spark, Sf)
       .select(col("doc_id"), col("text")).collect()
@@ -2059,9 +2061,18 @@ class GateQueriesSpec extends AnyFunSuite {
       // inter >= 1: engine and oracle both require a SHARED token, so a
       // degenerate empty-vs-empty pair must not count here either
       if inter > 0 && 3 * inter >= sa + sb
-    } yield (docs(i)._1, docs(j)._1, inter, sa, sb)).toSet
+    } yield (docs(i)._1, docs(j)._1, inter, sa, sb,
+      BigDecimal(inter.toDouble / (sa + sb - inter).toDouble)
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)).toSet
     assert(got == brute, s"got=${got.size} brute=${brute.size}")
     assert(brute.nonEmpty)
+    // the final sort's range sample must read shuffle output, not re-run
+    // the pair kernel: a hash exchange sits between the two
+    val plan = PlanText.finalPlanOf(q)
+    val range = plan.indexOf("Exchange rangepartitioning(doc_a")
+    val hash = plan.indexOf("Exchange hashpartitioning(doc_a")
+    val kernel = plan.indexOf("MapPartitions graft.core.SetSimJoin")
+    assert(range >= 0 && range < hash && hash < kernel, plan)
   }
 
   test("q197: uptime islands follow the phase lattice exactly") {
