@@ -35,27 +35,24 @@ object SetSimJoin {
     *      or after it in `x`, so at most `|x| − ⌈|x|/2⌉` ids precede it
     *      (and likewise in `y`).
     *   3. Every prefix id becomes one posting that carries the whole
-    *      set, and ONE exchange groups the postings by id: hash
-    *      partitions at `defaultParallelism` (an explicit count, else
-    *      AQE squeezes this KB-sized exchange onto one task of CPU-bound
-    *      verification), sorted by `(tid, doc_id)` within each.
-    *   4. One pass walks each id group. A pair is a candidate when
-    *      `2·min ≥ max` in size (Jaccard is at most min/max). It is
-    *      emitted only from the group of the smallest id the two sets
-    *      share, which is in both prefixes by step 2 — so every pair is
-    *      emitted exactly once and no `distinct` is needed. A two-pointer
-    *      intersection checks that rule and counts `inter`, and the
-    *      threshold is decided in integers (`3·inter ≥ sa + sb`), so no
-    *      float sits on the keep/drop boundary.
+    *      set, and [[GroupPairs]] walks each id's postings: one exchange
+    *      keyed by id, a hot id's group spread over blocks.
+    *   4. A pair is a candidate when `2·min ≥ max` in size (Jaccard is
+    *      at most min/max). It is emitted only from the group of the
+    *      smallest id the two sets share, which is in both prefixes by
+    *      step 2 — so every pair is emitted exactly once and no
+    *      `distinct` is needed. A two-pointer intersection checks that
+    *      rule and counts `inter`, and the threshold is decided in
+    *      integers (`3·inter ≥ sa + sb`), so no float sits on the
+    *      keep/drop boundary.
     *
-    * Cost: pairs are produced lazily, one group at a time, so a task
-    * holds one id group, never its partition's output. A group of g
-    * postings costs O(g²) pair checks, the same as a self-join keyed by
-    * prefix token. Prefixes hold each document's rarest tokens, so a
-    * frequent token heads a large group only when many documents are
-    * made mostly of frequent tokens (short or boilerplate documents).
-    * A token's postings travel as one array row, so the most frequent
-    * token's document count (one long each) bounds the largest row.
+    * Cost: a group of g postings costs O(g²) pair checks, the same as a
+    * self-join keyed by prefix token. Prefixes hold each document's
+    * rarest tokens, so a frequent token heads a large group only when
+    * many documents are made mostly of frequent tokens (short or
+    * boilerplate documents). A token's postings travel as one array row,
+    * so the most frequent token's document count (one long each) bounds
+    * the largest row.
     */
   def jaccardHalf(tokens: DataFrame): DataFrame = {
     val s = tokens.sparkSession
@@ -71,45 +68,21 @@ object SetSimJoin {
       }
       .toDF("doc_id", "tid")
       .localCheckpoint(true)
-    postings
+    val sets = postings
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_list(col("tid"))).as("st"))
-      .select(col("doc_id"), col("st"),
-        explode(expr("slice(st, 1, size(st) - (size(st) + 1) div 2 + 1)")).as("tid"))
-      .repartition(s.sparkContext.defaultParallelism, col("tid"))
-      .sortWithinPartitions(col("tid"), col("doc_id"))
-      .as[(Long, Array[Int], Int)]
-      .mapPartitions(part => pairs(part.buffered))
+      .select(explode(expr("slice(st, 1, size(st) - (size(st) + 1) div 2 + 1)")).as("tid"),
+        col("doc_id"), col("st"))
+      .as[(Int, Long, Array[Int])]
+    GroupPairs(sets)(c => c.pairs(verify(c.key, _, _, _, _)))
       .toDF("doc_a", "doc_b", "inter", "sa", "sb")
   }
 
-  /** The kernel over one partition of `(doc_id, set, tid)` postings
-    * sorted by `(tid, doc_id)`: one id group at a time, each group's
-    * pairs as a lazy iterator. */
-  private def pairs(in: BufferedIterator[(Long, Array[Int], Int)])
-      : Iterator[(Long, Long, Long, Long, Long)] =
-    new Iterator[(Int, Array[(Long, Array[Int])])] {
-      def hasNext: Boolean = in.hasNext
-      def next(): (Int, Array[(Long, Array[Int])]) = {
-        val tid = in.head._3
-        val g = Array.newBuilder[(Long, Array[Int])]
-        while (in.hasNext && in.head._3 == tid) {
-          val (d, st, _) = in.next()
-          g += ((d, st))
-        }
-        (tid, g.result())
-      }
-    }.flatMap { case (tid, g) =>
-      g.indices.iterator.flatMap(i =>
-        (i + 1 until g.length).iterator.flatMap(j => verify(tid, g(i), g(j))))
-    }
-
-  /** The pair `(a, b)` (`a`'s id below `b`'s) from the group of `tid`:
-    * `Some` iff the sizes pass the length filter, `tid` is the smallest
-    * id the sets share, and their Jaccard is ≥ 1/2. */
-  private def verify(tid: Int, a: (Long, Array[Int]), b: (Long, Array[Int]))
-      : Option[(Long, Long, Long, Long, Long)] = {
-    val (x, y) = (a._2, b._2)
+  /** The pair `(a, b)` (`a < b`) of sets `x`, `y` from the group of
+    * `tid`: `Some` iff the sizes pass the length filter, `tid` is the
+    * smallest id the sets share, and their Jaccard is ≥ 1/2. */
+  private def verify(tid: Int, a: Long, x: Array[Int], b: Long, y: Array[Int])
+      : Option[(Long, Long, Long, Long, Long)] =
     if (2 * math.min(x.length, y.length) < math.max(x.length, y.length)) None
     else {
       var i = 0; var j = 0; var inter = 0
@@ -124,8 +97,7 @@ object SetSimJoin {
         }
       }
       if (3L * inter >= x.length + y.length)
-        Some((a._1, b._1, inter.toLong, x.length.toLong, y.length.toLong))
+        Some((a, b, inter.toLong, x.length.toLong, y.length.toLong))
       else None
     }
-  }
 }

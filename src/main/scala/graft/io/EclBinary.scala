@@ -465,7 +465,6 @@ object EclBinary {
       .distinct.sorted
     require(bases.nonEmpty, s"no .UNRST files match $pattern")
     val vecNames = vectors.map(_.toUpperCase)
-    val wantSet = vecNames.toSet
     val schema = StructType(
       StructField("CASE", StringType, nullable = false) ::
         StructField("DATE", DateType, nullable = false) ::

@@ -123,7 +123,7 @@ object Msw {
 
   private def segRecords(events: DataFrame, name: String, unroll: Boolean,
       dblCols: Seq[(String, Int)], statusIdx: Option[Int],
-      tail: Seq[(String, Int)] = Nil, keepDeckId: Boolean = false): DataFrame = {
+      tail: Seq[(String, Int)] = Nil, keepDeckId: Boolean): DataFrame = {
     if (!keepDeckId) Schedule.requireSingleDeck(events, "msw")
     val dk = Schedule.deckKeys(events)
     val dates = Schedule.keywordDates(events, keepDeckId = dk.nonEmpty)

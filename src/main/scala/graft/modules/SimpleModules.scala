@@ -115,7 +115,7 @@ object Pvt {
     * within a dead-oil/dry-gas table) and the count must equal `ntpvt`.
     */
   private def dataKeyword(events: DataFrame, kw: String,
-      ntpvt: Option[Int] = None): DataFrame = {
+      ntpvt: Option[Int]): DataFrame = {
     val cols = Seq("PRESSURE", "VOLUMEFACTOR", "VISCOSITY")
     val base = events.filter(col("keyword") === kw && size(col("items")) > 0)
       .select(col("keywordIdx"), col("recordIdx"),

@@ -3,7 +3,6 @@ package graft.modules
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Ops
 
 /** Summary time-series resampling — the reference's flagship query shape
   * (summary.df(): summary.py:293-432 + resample_smry_dates

@@ -1,10 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{Ops, SetSimJoin}
-import graft.functions.SimilarityFunctions._
+import graft.core.{GroupPairs, Ops, SetSimJoin}
 import graft.functions.TextFunctions._
 import graft.sources.Tables
 
@@ -309,8 +308,6 @@ object DedupSim {
 
   private val VerifyThreshold = 0.7
 
-  private val VerifyBlockSz = 256
-
   /** Incremental near-dup probe (q101): detect near-duplicates of a
     * NEWLY ARRIVING shard against the historical corpus's MinHash band
     * index — the day-2 near-dup companion of q99's exact dedup (a
@@ -322,9 +319,9 @@ object DedupSim {
     * from ONE union'd plan, so the historical side is exactly the index
     * a q26/q39 run would have persisted.
     *
-    * Pipeline: signatures → the [[bandBlockBest]] kernel with the
+    * Pipeline: signatures → the [[bandBest]] kernel with the
     * id-boundary restriction (only hist×new candidates are even
-    * considered, and each task folds the per-new-doc BEST in place —
+    * considered, and each cell folds the per-new-doc BEST in place —
     * neither the historical corpus's own near-dup density nor the
     * hist×new candidate mass ever reaches a shuffle) → best candidate
     * per new doc by band count (two-phase top-k window over the
@@ -396,7 +393,7 @@ object DedupSim {
   def q101IncNearDup(s: SparkSession, dir: String): DataFrame = {
     val hist = Tables.documents(s, dir).select(col("doc_id"), col("text"))
     val bvecs = bandVecsOf(hist.unionByName(newShardOf(hist)))
-    val cand = bandBlockBest(s, bvecs, NearDupOffset)
+    val cand = bandBest(bvecs, NearDupOffset)
     val wTop = Window.partitionBy(col("doc_b")).orderBy(col("n_buckets").desc, col("doc_a"))
     val best = cand.withColumn("rn", row_number().over(wTop)).filter(col("rn") === 1)
       .select(col("doc_a").as("match_id"), col("doc_b").as("new_id"), col("n_buckets"))
@@ -407,7 +404,11 @@ object DedupSim {
     * full signature — what q112's stream-static join probes.
     */
   private[queries] def histBandRows(s: SparkSession, dir: String): DataFrame =
-    bandsOf(bandVecsOf(Tables.documents(s, dir).select(col("doc_id"), col("text"))))
+    bandVecsOf(Tables.documents(s, dir).select(col("doc_id"), col("text")))
+      .select(col("doc_id"), col("bvec"),
+        posexplode(col("bvec")).as(Seq("bi", "band_hash")))
+      .select(col("doc_id"), col("bvec"),
+        col("bi").cast("long").as("band_idx"), col("band_hash"))
 
   /** Scalar twin of [[bandVecsOf]] for the STREAMING probe's stateless
     * per-document projection: bit-identical band hashes
@@ -463,7 +464,7 @@ object DedupSim {
     *
     * Pipeline: open-vocab MinHash band signatures over BOTH sides in
     * one plan; eval docs are keyed above [[SplitOffset]] so the
-    * [[bandBlockPairs]] kernel's id-boundary restriction emits ONLY
+    * [[bandPairs]] kernel's id-boundary restriction emits ONLY
     * train×eval candidates — train's own near-dup mass (the bulk of
     * the corpus's pair density) never reaches a shuffle, exactly the
     * q101 incremental shape with the boundary drawn by the split hash
@@ -495,8 +496,7 @@ object DedupSim {
       .select(when(isTrain, col("doc_id"))
         .otherwise(col("doc_id") + SplitOffset).as("doc_id"),
         strHash(col("tok")).as("v"))
-    val cand = bandBlockPairs(s, minhashBandVecs(skeyed), Some(SplitOffset),
-      spreadKernel = false) // sparse kernel: measured worse under fan-out
+    val cand = bandPairs(minhashBandVecs(skeyed), Some(SplitOffset))
     val masks = docTokenMasks(s, dir)
     val scored = cand
       .select(col("doc_a").as("train_id"),
@@ -522,160 +522,78 @@ object DedupSim {
       .orderBy(col("doc_id"))
   }
 
-  /** Per-bucket block-kernel candidate pairs over a `(doc_id, bvec)`
-    * band-signature frame → `(doc_a, doc_b, n_buckets)` with doc_a <
-    * doc_b, each pair emitted EXACTLY ONCE. Two measured bottlenecks
-    * shaped this (q91, sf0.1, Q91Probe):
-    * (1) a plain bucket self-join emits a mega bucket's ~|bucket|²/2
-    *     pairs from ONE task (one join key = one partition — skew AQE
-    *     cannot split a key), so buckets split into doc_id-ordered
-    *     blocks of [[VerifyBlockSz]] and the B(B+1)/2 block pairs run
-    *     as independent kernel tasks — q29's block-nested-loop applied
-    *     per bucket;
-    * (2) the emit-per-shared-band + groupBy(pair) formulation shuffled
-    *     22M pair rows into a 7.7M-group aggregate (over half the
-    *     query's wall time). Instead each member carries its full band
-    *     vector into the task; a pair is emitted only in its MINIMUM
-    *     shared band (so exactly one bucket in the whole job emits it)
-    *     and n_buckets = |shared bands| is 8 integer compares — the
-    *     pair aggregate disappears from the plan.
-    * `crossBound`: when Some(off), only pairs straddling the id
-    * boundary (doc_a < off <= doc_b) are emitted — the incremental
-    * historical-vs-new probe shape (q101); q91 passes None (all pairs).
-    */
-  /** Stacked band rows of a `(doc_id, bvec)` frame, each row still
-    * carrying the full vector — the shape [[bandBlockPairs]] consumes.
-    */
-  private def bandsOf(bvecs: DataFrame): DataFrame =
-    bvecs
-      .select(col("doc_id"), col("bvec"),
-        posexplode(col("bvec")).as(Seq("bi", "band_hash")))
-      .select(col("doc_id"), col("bvec"),
-        col("bi").cast("long").as("band_idx"), col("band_hash"))
-
-  /** One row per kernel task: `(band_idx, same_block, members_a,
-    * members_b)` — the blocked/block-paired/boundary-pruned prefix
-    * SHARED by the exactly-once pair kernel ([[bandBlockPairs]]) and
-    * the best-match fold kernel ([[bandBlockBest]]).
-    */
-  private def blockTasks(s: SparkSession, bvecs: DataFrame, bound: Long,
-      spreadKernel: Boolean)
-      : org.apache.spark.sql.Dataset[(Int, Boolean, Seq[(Long, Seq[Long])], Seq[(Long, Seq[Long])])] = {
+  /** The LSH bucket members of a `(doc_id, bvec)` band-signature frame
+    * for [[GroupPairs]]: one row per doc per band, keyed by the bucket
+    * `(band_idx, band_hash)` and carrying the doc's whole vector. */
+  private def bucketMembers(bvecs: DataFrame): Dataset[((Int, Long), Long, Array[Long])] = {
+    val s = bvecs.sparkSession
     import s.implicits._
-    val bands = bandsOf(bvecs)
-    val wB = Window.partitionBy(col("band_idx"), col("band_hash")).orderBy(col("doc_id"))
-    val blocked = bands
-      .withColumn("blk", ((row_number().over(wB) - 1) / VerifyBlockSz).cast("int"))
-      .groupBy(col("band_idx"), col("band_hash"), col("blk"))
-      .agg(sort_array(collect_list(struct(col("doc_id").as("id"), col("bvec").as("bv"))))
-        .as("ms"),
-        min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"))
-    val bpairs = blocked.groupBy(col("band_idx"), col("band_hash"))
-      .agg(max(col("blk")).as("mb"))
-      .select(col("band_idx"), col("band_hash"),
-        explode(expr("flatten(transform(sequence(0, mb), " +
-          "a -> transform(sequence(a, mb), b -> struct(a AS ba, b AS bb))))")).as("p"))
-      .select(col("band_idx"), col("band_hash"),
-        col("p.ba").as("ba"), col("p.bb").as("bb"))
-    val joined = bpairs
-      .join(blocked.select(col("band_idx"), col("band_hash"),
-        col("blk").as("ba"), col("ms").as("ms_a"), col("mn").as("mn_a")),
-        Seq("band_idx", "band_hash", "ba"))
-      .join(blocked.select(col("band_idx"), col("band_hash"),
-        col("blk").as("bb"), col("ms").as("ms_b"), col("mx").as("mx_b")),
-        Seq("band_idx", "band_hash", "bb"))
-    // block-level prune under a cross boundary: blocks are doc_id-ordered,
-    // so a (a, b) block pair can yield a hist×new pair only when block a
-    // reaches below the bound and block b above it — pure-hist×pure-hist
-    // (the corpus's own near-dup mass) never even enters a kernel task
-    val pruned =
-      if (bound >= 0) joined.filter(col("mn_a") < bound && col("mx_b") >= bound)
-      else joined
-    val spread =
-      // EXPLICIT partition count (the q112/q188 CPU-exchange discipline):
-      // without it AQE coalesces this KB-sized shuffle to 2–3 partitions
-      // and the all-pairs verify kernel above it runs 2.7 s of CPU on 3
-      // tasks (StageProfile r14, q101 stage 54). Caller-controlled: the
-      // dense-candidate kernels (q91, q101) take the session's full
-      // fan-out (CPU-bound at any scale); q103's sparse cross-split
-      // kernel measured WORSE under the forced fan-out (0.55 -> 0.89 s —
-      // its task CPU is smaller than the exchange overhead) and keeps
-      // AQE's coalesced layout.
-      if (spreadKernel)
-        pruned.repartition(s.sparkContext.defaultParallelism,
-          col("band_idx"), col("band_hash"), col("ba"), col("bb"))
-      else
-        pruned.repartition(col("band_idx"), col("band_hash"), col("ba"), col("bb"))
-    spread
-      .select(col("band_idx").cast("int").as("b"), (col("ba") === col("bb")).as("same"),
-        col("ms_a"), col("ms_b"))
-      .as[(Int, Boolean, Seq[(Long, Seq[Long])], Seq[(Long, Seq[Long])])]
+    bvecs.select(col("doc_id"), col("bvec"), posexplode(col("bvec")).as(Seq("bi", "band_hash")))
+      .select(struct(col("bi").as("_1"), col("band_hash").as("_2")).as("_1"),
+        col("doc_id").as("_2"), col("bvec").as("_3"))
+      .as[((Int, Long), Long, Array[Long])]
   }
 
-  private def bandBlockPairs(s: SparkSession, bvecs: DataFrame,
-      crossBound: Option[Long], spreadKernel: Boolean = true): DataFrame = {
+  /** Candidate pairs `(doc_a, doc_b, n_buckets)` of a `(doc_id, bvec)`
+    * band-signature frame, `doc_a < doc_b`, each pair EXACTLY ONCE: a
+    * pair is emitted only from the bucket of the smallest band the two
+    * vectors share, and `n_buckets` = |shared bands| is 8 integer
+    * compares, so no pair aggregate follows (the emit-per-shared-band +
+    * groupBy(pair) shape shuffled 22M pair rows into a 7.7M-group
+    * aggregate at sf0.1, over half of q91's wall time).
+    * `crossBound`: when Some(off), only pairs straddling the id boundary
+    * (doc_a < off <= doc_b) are emitted — the cross-split shape (q103);
+    * q91 passes None (all pairs).
+    */
+  private def bandPairs(bvecs: DataFrame, crossBound: Option[Long]): DataFrame = {
+    val s = bvecs.sparkSession
     import s.implicits._
     val bound = crossBound.getOrElse(-1L)
-    blockTasks(s, bvecs, bound, spreadKernel)
-      .flatMap { case (b, same, ma, mb) =>
-        def pair(x: (Long, Seq[Long]), y: (Long, Seq[Long])): Option[(Long, Long, Long)] = {
-          if (bound >= 0 && !(x._1 < bound && y._1 >= bound)) None
-          else {
-            val bx = x._2; val by = y._2
-            var shared = 0; var minShared = -1; var i = 0
-            while (i < bx.length) {
-              if (bx(i) == by(i)) { shared += 1; if (minShared < 0) minShared = i }
-              i += 1
-            }
-            if (minShared == b) Some((x._1, y._1, shared.toLong)) else None
-          }
-        }
-        if (same) ma.indices.iterator.flatMap(i =>
-          (i + 1 until ma.length).iterator.flatMap(j => pair(ma(i), ma(j))))
-        else ma.iterator.flatMap(a => mb.iterator.flatMap(c => pair(a, c)))
-      }.toDF("doc_a", "doc_b", "n_buckets")
-  }
-
-  /** Cross-boundary BEST-match kernel: per kernel task, fold the best
-    * `(shared_bands desc, doc_a asc)` historical candidate of every new
-    * doc and emit ONE row per new doc per task — never the pair set.
-    * On a near-dup-dense corpus the incremental probe's candidate mass
-    * is quadratic-ish (an update of doc X co-buckets with every
-    * near-dup of X), but only the best candidate survives the q101
-    * window anyway; folding it in-kernel cuts emission from
-    * O(co-bucket pairs) to O(tasks × block size). A pair's shared-band
-    * count is the same wherever it is evaluated, so cross-task
-    * duplicates are harmless under the downstream max — the
-    * exactly-once min-band discipline [[bandBlockPairs]] needs is
-    * simply unnecessary here (q101 measured 5.5 s → 3.3 s at sf0.1).
-    */
-  private def bandBlockBest(s: SparkSession, bvecs: DataFrame, bound: Long): DataFrame = {
-    import s.implicits._
-    blockTasks(s, bvecs, bound, spreadKernel = true)
-      .flatMap { case (_, same, ma, mb) =>
-        // doc_b -> (shared, doc_a); members are doc_id-sorted, so in the
-        // mixed same-block case x=ma(i), y=ma(j) (i<j) is the only
-        // direction that can straddle the boundary
-        val best = scala.collection.mutable.HashMap.empty[Long, (Long, Long)]
-        def consider(x: (Long, Seq[Long]), y: (Long, Seq[Long])): Unit =
-          if (x._1 < bound && y._1 >= bound) {
-            val bx = x._2; val by = y._2
-            var shared = 0L; var i = 0
-            while (i < bx.length) { if (bx(i) == by(i)) shared += 1; i += 1 }
-            val cur = best.getOrElse(y._1, (0L, Long.MaxValue))
-            if (shared > cur._1 || (shared == cur._1 && x._1 < cur._2))
-              best(y._1) = (shared, x._1)
-          }
-        if (same) {
-          var i = 0
-          while (i < ma.length) {
-            var j = i + 1
-            while (j < ma.length) { consider(ma(i), ma(j)); j += 1 }
+    GroupPairs(bucketMembers(bvecs)) { c =>
+      val band = c.key._1
+      c.pairs { (a, x, b, y) =>
+        if (bound >= 0 && !(a < bound && b >= bound)) None
+        else {
+          var shared = 0; var minShared = -1; var i = 0
+          while (i < x.length) {
+            if (x(i) == y(i)) { shared += 1; if (minShared < 0) minShared = i }
             i += 1
           }
-        } else ma.foreach(a => mb.foreach(c => consider(a, c)))
-        best.iterator.map { case (db, (sh, da)) => (da, db, sh) }
-      }.toDF("doc_a", "doc_b", "n_buckets")
+          if (minShared == band) Some((a, b, shared.toLong)) else None
+        }
+      }
+    }.toDF("doc_a", "doc_b", "n_buckets")
+  }
+
+  /** Cross-boundary BEST-match kernel: per cell, fold the best
+    * `(shared_bands desc, doc_a asc)` historical candidate (`doc_a <
+    * bound`) of every new doc (`doc_b >= bound`) and emit ONE row per new
+    * doc per cell — never the pair set. On a near-dup-dense corpus the
+    * incremental probe's candidate mass is quadratic-ish (an update of
+    * doc X co-buckets with every near-dup of X), but only the best
+    * candidate survives the q101 window anyway; folding it in the cell
+    * cuts emission from O(co-bucket pairs) to O(cells × cell size). A
+    * pair's shared-band count is the same wherever it is evaluated, so
+    * duplicates across buckets are harmless under the downstream max —
+    * the exactly-once min-band rule [[bandPairs]] needs is unnecessary
+    * here (q101 measured 5.5 s → 3.3 s at sf0.1).
+    */
+  private def bandBest(bvecs: DataFrame, bound: Long): DataFrame = {
+    val s = bvecs.sparkSession
+    import s.implicits._
+    GroupPairs(bucketMembers(bvecs)) { c =>
+      // doc_b -> (shared, doc_a)
+      val best = scala.collection.mutable.HashMap.empty[Long, (Long, Long)]
+      c.foreachPair { (a, x, b, y) =>
+        if (a < bound && b >= bound) {
+          var shared = 0L; var i = 0
+          while (i < x.length) { if (x(i) == y(i)) shared += 1; i += 1 }
+          val cur = best.getOrElse(b, (0L, Long.MaxValue))
+          if (shared > cur._1 || (shared == cur._1 && a < cur._2)) best(b) = (shared, a)
+        }
+      }
+      best.iterator.map { case (db, (sh, da)) => (da, db, sh) }
+    }.toDF("doc_a", "doc_b", "n_buckets")
   }
 
   /** Two-stage near-dup pipeline (q91): LSH candidate generation +
@@ -709,7 +627,7 @@ object DedupSim {
       .select(col("doc_id"), explode(array_distinct(tokens(col("text")))).as("tok"))
       .filter(length(col("tok")) > 0)
     val bvecs = minhashBandVecs(toks.select(col("doc_id"), strHash(col("tok")).as("v")))
-    val cand = bandBlockPairs(s, bvecs, None)
+    val cand = bandPairs(bvecs, None)
     // exact verification as an O(1)-per-pair popcount over the q25
     // bitmask view (dictionary-bounded corpus: one 64-bit mask per doc;
     // an open vocabulary falls back to the postings-intersection join,
@@ -1366,73 +1284,33 @@ object DedupSim {
       .orderBy(col("qid"), col("rn"))
   }
 
-  /** Embedding-cosine near-dup: all pairs with dot >= 0.4 (threshold fits
-    * this corpus's similarity distribution). All-pairs baseline; the
-    * LSH-bucketed variant is q30.
-    */
-  private val CosineBlocks = 8
+  /** The dot product of two embeddings, summed in double in dimension
+    * order — the one cosine both pair kernels (q29, q96) use. */
+  private def dot(x: Array[Float], y: Array[Float]): Double = {
+    var d = 0.0; var i = 0
+    while (i < x.length) { d += x(i).toDouble * y(i).toDouble; i += 1 }
+    d
+  }
 
-  // private[queries], not private: the codegen'd row deserializer lives
-  // outside this object and needs bytecode-public access to the class
-  private[queries] case class BVec(id: Long, emb: Array[Float])
-
-  /** Embedding-cosine near-dup, brute force as a BLOCK-NESTED join —
-    * nothing touches the driver: vectors hash into [[CosineBlocks]]
-    * blocks (`vec_id % B`), the B·(B+1)/2 block pairs are generated as an
-    * equi-joinable pair table, each task receives one (block_a, block_b)
-    * row and runs a tight primitive-array dot loop over the two slices
-    * (upper triangle when a == b). This is genuine per-partition numeric
-    * kernel work — the one place mapPartitions/flatMap beats expression
-    * evaluation (interpreted higher-order array folds are ~50x slower; a
-    * join on the 64 `dim` keys has catastrophic key fanout).
-    *
-    * Scale: total compute is the inherent O(n²) of exact all-pairs, but
-    * it distributes as B(B+1)/2 independent tasks and the only data
-    * movement is each block shipping to its B partner tasks (classic
-    * block-nested-loop replication, no broadcast, no driver
-    * materialization). B rises with corpus size so a block stays
-    * task-sized; when n² itself is the problem, q30's LSH bucketing is
-    * the scale path.
+  /** Embedding-cosine near-dup (q29): every pair with dot >= 0.4
+    * (threshold fits this corpus's similarity distribution), by brute
+    * force — the all-pairs baseline; the LSH-bucketed variant is q30.
+    * Every vector is one member of a single constant-key group, so
+    * [[GroupPairs]] splits the all-pairs triangle into blocks of
+    * [[GroupPairs.BlockSize]] vectors and spreads its cells over tasks,
+    * each running a tight primitive-array dot loop. No vector reaches
+    * the driver; the data movement is each vector copied to its block's
+    * B cells (block-nested-loop replication). When n² itself is the
+    * problem, q30's LSH bucketing is the scale path.
     */
   def q29CosineNearDup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val nb = CosineBlocks.toLong
-    val blocks = Tables.embeddings(s, dir)
-      // pmod, not %: Java % is negative for negative ids, which would
-      // silently drop those vectors from the 0..nb-1 block pair table
-      .select(pmod(col("vec_id"), lit(nb)).as("blk"),
-        struct(col("vec_id").as("id"), col("embedding").as("emb")).as("v"))
-      .groupBy(col("blk"))
-      .agg(sort_array(collect_list(col("v"))).as("vecs"))
-    val pairs = s.range(nb * nb)
-      .select((col("id") / nb).cast("long").as("blk_a"), (col("id") % nb).as("blk_b"))
-      .filter(col("blk_a") <= col("blk_b"))
-    val scored = pairs
-      .join(blocks.select(col("blk").as("blk_a"), col("vecs").as("vecs_a")), Seq("blk_a"))
-      .join(blocks.select(col("blk").as("blk_b"), col("vecs").as("vecs_b")), Seq("blk_b"))
-      .repartition(col("blk_a"), col("blk_b"))
-      .select(col("blk_a"), col("blk_b"), col("vecs_a"), col("vecs_b"))
-      .as[(Long, Long, Seq[BVec], Seq[BVec])]
-      .flatMap { case (ba, bb, va, vb) =>
-        val ia = va.iterator.map(_.id).toArray
-        val ma = va.iterator.map(_.emb.map(_.toDouble)).toArray
-        val (ib, mb) =
-          if (ba == bb) (ia, ma)
-          else (vb.iterator.map(_.id).toArray, vb.iterator.map(_.emb.map(_.toDouble)).toArray)
-        ia.indices.iterator.flatMap { a =>
-          val x = ma(a)
-          val from = if (ba == bb) a + 1 else 0
-          (from until ib.length).iterator.flatMap { b =>
-            val y = mb(b)
-            var d = 0.0; var i = 0
-            while (i < x.length) { d += x(i) * y(i); i += 1 }
-            if (d >= 0.4) {
-              val (lo, hi) = if (ia(a) < ib(b)) (ia(a), ib(b)) else (ib(b), ia(a))
-              Some((lo, hi, d))
-            } else None
-          }
-        }
-      }.toDF("id_a", "id_b", "score_raw")
+    val vecs = Tables.embeddings(s, dir)
+      .select(lit(0), col("vec_id"), col("embedding")).as[(Int, Long, Array[Float])]
+    val scored = GroupPairs(vecs)(_.pairs { (a, x, b, y) =>
+      val d = dot(x, y)
+      if (d >= 0.4) Some((a, b, d)) else None
+    }).toDF("id_a", "id_b", "score_raw")
     val labels = Tables.embeddings(s, dir).select(col("vec_id"), col("label"))
     scored
       .join(broadcast(labels.select(col("vec_id").as("id_a"), col("label").as("label_a"))), Seq("id_a"))
@@ -1676,78 +1554,30 @@ object DedupSim {
     * pipeline shape, Abbas et al. 2023, arXiv:2303.09540). Stage 1 is
     * the q38 coarse quantizer ([[KmeansIters]] deterministic Lloyd
     * iterations, quantized-integer centroid means); stage 2 computes
-    * exact cosine ONLY within each cluster and drops every vector that
-    * has an earlier (lower-id) in-cluster neighbor with
-    * sim >= [[SemDedupTau]] — keep-one-representative with a
+    * exact cosine ONLY within each cluster ([[clusterPairs]]) and drops
+    * every vector that has an earlier (lower-id) in-cluster neighbor
+    * with sim >= [[SemDedupTau]] — keep-one-representative with a
     * deterministic representative (min id).
     *
     * Scale shape: clustering bounds the quadratic — pairwise work is
     * Σ|cluster|², never n² — and no task ever holds a whole cluster:
-    * the within-cluster upper triangle is BLOCK-PARTITIONED exactly
-    * like q91's bucket kernel. Members rank by vec_id into
-    * [[VerifyBlockSz]]-sized blocks, a cluster with B blocks fans out
-    * to B(B+1)/2 independent (ba ≤ bb) kernel tasks, and each task's
-    * state is ≤ 2·[[VerifyBlockSz]] vectors. K-means routinely
-    * produces one mega-cluster on real data; under this kernel a
-    * mega-cluster is many bounded tasks, not one task's collect_list.
-    * Blocks are vec_id-ordered, so cross-block tasks emit id_a < id_b
-    * by construction and every pair is evaluated exactly once. Emits
-    * every vector with its cluster, earlier-neighbor count, max
-    * similarity and kept flag, so the dedup itself is a `kept` filter
-    * downstream.
+    * K-means routinely produces one mega-cluster on real data, and
+    * [[GroupPairs]] walks it as many bounded cells. Emits every vector
+    * with its cluster, earlier-neighbor count, max similarity and kept
+    * flag, so the dedup itself is a `kept` filter downstream.
     */
-  /** Within-cluster cosine pair kernel over `(list_id, vec_id,
-    * embedding)` members: the q91 block discipline applied to a
-    * cluster's upper triangle. Emits `(id_a, id_b, sim)` with
-    * id_a < id_b and sim ≥ [[SemDedupTau]]; each pair is evaluated in
-    * exactly one kernel task and no task holds more than `2·blockSz`
-    * vectors. `blockSz` is a parameter so the multi-block path is
-    * testable below the 256-member production size.
+  /** Within-cluster cosine pairs over `(list_id, vec_id, embedding)`
+    * members: `(id_a, id_b, sim)` with id_a < id_b, sim the dot rounded
+    * to 6 decimals and ≥ [[SemDedupTau]], each pair evaluated once.
     */
-  private[graft] def clusterBlockPairs(s: SparkSession, members: DataFrame,
-      blockSz: Int): DataFrame = {
+  private[graft] def clusterPairs(members: DataFrame): DataFrame = {
+    val s = members.sparkSession
     import s.implicits._
-    // blocked upper-triangle kernel (q91 discipline): vec_id-ranked
-    // blocks of blockSz per cluster, one task per (ba <= bb)
-    // block pair — task state is <= 2 blocks, never a cluster
-    val wC = Window.partitionBy(col("list_id")).orderBy(col("vec_id"))
-    // localCheckpoint: blocked feeds three consumers (the max(blk)
-    // block-pair fan-out and both member joins) — without it the
-    // rank+collect_list aggregate, the dominant cost, executes 3×
-    val blocked = members
-      .withColumn("blk", ((row_number().over(wC) - 1) / blockSz).cast("int"))
-      .groupBy(col("list_id"), col("blk"))
-      .agg(sort_array(collect_list(
-        struct(col("vec_id").as("id"), col("embedding").as("emb")))).as("ms"))
-      .localCheckpoint(true)
-    val bpairs = blocked.groupBy(col("list_id")).agg(max(col("blk")).as("mb"))
-      .select(col("list_id"),
-        explode(expr("flatten(transform(sequence(0, mb), " +
-          "a -> transform(sequence(a, mb), b -> struct(a AS ba, b AS bb))))")).as("p"))
-      .select(col("list_id"), col("p.ba").as("ba"), col("p.bb").as("bb"))
-    val pairs = bpairs
-      .join(blocked.select(col("list_id"), col("blk").as("ba"), col("ms").as("ms_a")),
-        Seq("list_id", "ba"))
-      .join(blocked.select(col("list_id"), col("blk").as("bb"), col("ms").as("ms_b")),
-        Seq("list_id", "bb"))
-      .repartition(col("list_id"), col("ba"), col("bb"))
-      .select((col("ba") === col("bb")).as("same"), col("ms_a"), col("ms_b"))
-      .as[(Boolean, Seq[BVec], Seq[BVec])]
-      .flatMap { case (same, ma, mb) =>
-        def sim(x: BVec, y: BVec): Option[(Long, Long, Double)] = {
-          val xe = x.emb; val ye = y.emb
-          var d = 0.0; var i = 0
-          while (i < xe.length) { d += xe(i).toDouble * ye(i).toDouble; i += 1 }
-          val r = round6(d)
-          if (r >= SemDedupTau) Some((x.id, y.id, r)) else None
-        }
-        // blocks are vec_id-ordered: ids in ba < ids in bb, so id_a <
-        // id_b holds by construction in the cross-block branch
-        if (same) ma.indices.iterator.flatMap(i =>
-          (i + 1 until ma.length).iterator.flatMap(j => sim(ma(i), ma(j))))
-        else ma.iterator.flatMap(a => mb.iterator.flatMap(c => sim(a, c)))
-      }.toDF("id_a", "id_b", "sim")
-    pairs
+    GroupPairs(members.select(col("list_id").cast("long"), col("vec_id"), col("embedding"))
+      .as[(Long, Long, Array[Float])])(_.pairs { (a, x, b, y) =>
+      val r = round6(dot(x, y))
+      if (r >= SemDedupTau) Some((a, b, r)) else None
+    }).toDF("id_a", "id_b", "sim")
   }
 
   def q96SemDedup(s: SparkSession, dir: String): DataFrame = {
@@ -1756,9 +1586,8 @@ object DedupSim {
     val cents = kmeansCentroids(s, raw, e, KmeansIters)
     val bc = s.sparkContext.broadcast(collectCentroids(cents))
     val assign = nearestCentroid(raw, bc)
-    val pairs = clusterBlockPairs(s,
-      raw.join(assign, Seq("vec_id"))
-        .select(col("list_id"), col("vec_id"), col("embedding")), VerifyBlockSz)
+    val pairs = clusterPairs(raw.join(assign, Seq("vec_id"))
+      .select(col("list_id"), col("vec_id"), col("embedding")))
     val dups = pairs.groupBy(col("id_b").as("vec_id"))
       .agg(count(lit(1)).as("n_dups_earlier"), max(col("sim")).as("max_sim_earlier"))
     assign.join(dups, Seq("vec_id"), "left")

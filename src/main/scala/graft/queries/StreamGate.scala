@@ -197,7 +197,6 @@ object StreamGate {
     * batching.
     */
   def q69StreamDedup(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     // the formula version rides in the dir name (v1-N-copies): changing
     // the closed form changes the path, so the exists() reuse guard can
     // never serve stale data from an older formula

@@ -817,7 +817,6 @@ object TextAnalytics {
     * maximal repeats; q205 turns it into the removal pass. */
   private def suffixOcc(input: DataFrame)
       : (DataFrame, DataFrame, () => Unit) = {
-    import graft.functions.PortableStringHash.strHash
     import org.apache.spark.sql.expressions.Window
     // spread the hashed docs BEFORE the suffix explode: a single-file
     // corpus scans as ONE partition, which would compute and

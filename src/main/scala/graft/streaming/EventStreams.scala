@@ -4,7 +4,6 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types._
 
 /** Incremental mode for the event pipeline (SURVEY.md §2.10): the
   * reference's batch-only status-change / resample computations expressed

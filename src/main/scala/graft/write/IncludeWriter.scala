@@ -1,6 +1,6 @@
 package graft.write
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 
 /** Include-file text sinks — the reverse path (df2res): DataFrame →
   * Eclipse keyword text.

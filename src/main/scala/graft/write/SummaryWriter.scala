@@ -1,7 +1,7 @@
 package graft.write
 
 import java.time.LocalDate
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Binary UNSMRY/SMSPEC writer (SURVEY.md §2.1 S16, the reverse-summary

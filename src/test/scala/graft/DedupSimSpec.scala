@@ -360,21 +360,36 @@ class DedupSimSpec extends AnyFunSuite {
     assert(joined.filter(col("jaccard") =!= col("jx")).count() == 0)
   }
 
-  test("q96 block kernel: a mega-cluster split across blocks equals one-block brute force") {
-    // force a cluster far larger than the test block size: all 500 sf0.01
-    // vectors into 2 clusters -> the bigger one spans ~16 blocks at
-    // blockSz=16, exercising same-block, cross-block and the block-pair
-    // fan-out. A huge blockSz degenerates to the old whole-cluster task,
-    // which is the brute-force referee.
-    val members = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.01")
-      .select((col("vec_id") % 2).as("list_id"), col("vec_id"), col("embedding"))
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.select("id_a", "id_b", "sim").as[(Long, Long, Double)].collect().sorted.toSeq
-    val blockedOut = canon(DedupSim.clusterBlockPairs(spark, members, 16))
-    val bruteOut = canon(DedupSim.clusterBlockPairs(spark, members, 1000000))
-    assert(blockedOut.nonEmpty && blockedOut == bruteOut)
-    // exactly-once emission: no pair may appear twice
-    assert(blockedOut.map(p => (p._1, p._2)).distinct.size == blockedOut.size)
-    assert(blockedOut.forall(p => p._1 < p._2))
+  test("q91 plan: no Window and no SortMergeJoin between the band signatures and the pair kernel") {
+    val plan = PlanText.finalPlanOf(DedupSim.q91LshVerify(spark, dir))
+    val kernel = plan.indexOf("MapPartitions graft.core.GroupPairs")
+    // the signature aggregate (minhashBandVecs) is the first min() fold
+    // under the kernel on its main (left-most) path
+    val sig = plan.indexOf("functions=[min(", kernel)
+    assert(kernel >= 0 && sig > kernel, plan)
+    val between = plan.substring(kernel, sig)
+    assert(!between.contains("Window") && !between.contains("SortMergeJoin"), between)
   }
+
+  test("q96 block kernel: a mega-cluster split across blocks equals one-block brute force") {
+    // one cluster of all 500 sf0.01 vectors: more than BlockSize members,
+    // so the kernel walks it as 2 blocks (two same-block cells and one
+    // cross-block cell); driver brute force with the kernel's rounding
+    // is the referee
+    val members = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.01")
+      .select(lit(0L).as("list_id"), col("vec_id"), col("embedding"))
+    val rows = members.select("vec_id", "embedding").as[(Long, Array[Float])]
+      .collect().sortBy(_._1)
+    assert(rows.length > graft.core.GroupPairs.BlockSize)
+    val brute = (for {
+      i <- rows.indices; j <- (i + 1) until rows.length
+      d = rows(i)._2.map(_.toDouble).zip(rows(j)._2.map(_.toDouble)).map(p => p._1 * p._2).sum
+      r = BigDecimal(d).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      if r >= 0.4
+    } yield (rows(i)._1, rows(j)._1, r)).toSeq
+    val got = DedupSim.clusterPairs(members)
+      .select("id_a", "id_b", "sim").as[(Long, Long, Double)].collect().sorted.toSeq
+    assert(got.nonEmpty && got == brute)
+  }
+
 }

@@ -2071,7 +2071,7 @@ class GateQueriesSpec extends AnyFunSuite {
     val plan = PlanText.finalPlanOf(q)
     val range = plan.indexOf("Exchange rangepartitioning(doc_a")
     val hash = plan.indexOf("Exchange hashpartitioning(doc_a")
-    val kernel = plan.indexOf("MapPartitions graft.core.SetSimJoin")
+    val kernel = plan.indexOf("MapPartitions graft.core.GroupPairs")
     assert(range >= 0 && range < hash && hash < kernel, plan)
   }
 
