@@ -160,33 +160,7 @@ object Ops {
       .drop("__prev")
   }
 
-  /** As-of join (event-time <=): for each left row, the single latest right
-    * row with rightTime <= leftTime, matched on equi `keys`.
-    * Reference: WELOPEN/WLIST/COMPLUMP as-of expansion,
-    * compdat.py:291-363, 757-788 (J9-J12).
-    *
-    * Implementation: equi-join on keys + range predicate, then
-    * row_number()==1 per left row ordered by rightTime desc. The equi keys
-    * carry the shuffle, so this scales as a normal shuffled join; when the
-    * right side is a small dimension (the reference's case) Catalyst
-    * broadcasts it and the range predicate never causes a cartesian.
-    */
-  def asofJoinLe(
-      left: DataFrame, right: DataFrame, keys: Seq[String],
-      leftTime: String, rightTime: String, leftIdCols: Seq[String],
-      rightCols: Seq[String]): DataFrame = {
-    val l = left.alias("l")
-    val r = right.alias("r")
-    val cond = keys.map(k => col(s"l.$k") === col(s"r.$k")).reduce(_ && _) &&
-      col(s"r.$rightTime") <= col(s"l.$leftTime")
-    val joined = l.join(r, cond, "left")
-    val w = Window.partitionBy(leftIdCols.map(c => col(s"l.$c")).toIndexedSeq: _*)
-      .orderBy(col(s"r.$rightTime").desc_nulls_last)
-    joined.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-  }
-
-  /** As-of join via union + forward-fill — the scalable formulation: tag
+  /** As-of join (event-time <=) via union + forward-fill: tag
     * right rows as state events, union with left rows, one window per key
     * ordered by (time, side) forward-fills the latest right-side payload
     * onto each left row. Right rows sort before left rows at equal

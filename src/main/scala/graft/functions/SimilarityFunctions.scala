@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Vector- and set-similarity primitives: dot/cosine over Array[Float]
-  * embedding columns, MinHash signatures + LSH banding, SimHash.
+  * embedding columns, and SimHash.
   *
   * Pure Column expressions (zip_with / aggregate / transform higher-order
   * functions) — no UDF serialization, vectors never leave Tungsten rows.
@@ -25,30 +25,6 @@ object SimilarityFunctions {
   /** Cosine similarity. For L2-normalized embeddings this equals dot(). */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  /** MinHash signature of a token/shingle set: k independent permutations
-    * approximated by seeded xxhash64; each signature slot is the min hash
-    * over the set. One pass per slot over the array — linear, codegen'd.
-    */
-  def minhashSignature(toks: Column, k: Int): Column =
-    transform(sequence(lit(0), lit(k - 1)),
-      s => array_min(transform(toks, t => xxhash64(t, s))))
-
-  /** Estimated Jaccard from two MinHash signatures: fraction of agreeing slots. */
-  def minhashEstJaccard(sigA: Column, sigB: Column, k: Int): Column =
-    size(filter(zip_with(sigA, sigB, (x, y) => x === y), b => b)).cast("double") / lit(k.toDouble)
-
-  /** LSH band hashes: split a k-slot signature into `bands` bands of
-    * k/bands rows each; hash each band (band index salted in). Two sets
-    * with Jaccard j collide in ≥1 band with prob 1-(1-j^r)^b — the classic
-    * S-curve. Returns array of band hashes (band i at position i).
-    */
-  def lshBandHashes(sig: Column, k: Int, bands: Int): Column = {
-    val r = k / bands
-    require(bands * r == k, s"bands ($bands) must divide k ($k)")
-    array((0 until bands).map(b =>
-      xxhash64(concat_ws(",", transform(slice(sig, b * r + 1, r), x => x.cast("string"))), lit(b))): _*)
-  }
-
   /** SimHash (64-bit) of a token set: per-bit votes (+1 if the token's
     * xxhash64 has the bit set, -1 otherwise) accumulated in a single pass
     * over the tokens with an array accumulator, then sign → bit.
@@ -64,9 +40,6 @@ object SimilarityFunctions {
     aggregate(votes, lit(0L),
       (acc, v) => shiftleft(acc, 1).bitwiseOR(when(v > 0, 1L).otherwise(0L)))
   }
-
-  /** Hamming distance between two 64-bit hashes. */
-  def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 }
 
 /** Engine-portable seeded hash family over small-integer keys.

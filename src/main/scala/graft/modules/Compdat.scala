@@ -1,7 +1,9 @@
 package graft.modules
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import java.time.ZoneId
+import java.util.regex.Pattern
+import scala.collection.mutable
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Ops
 import graft.io.{DeckParser, Records => R}
@@ -10,27 +12,67 @@ import graft.io.{DeckParser, Records => R}
   * WELOPEN state overrides applied.
   *
   * Reference: compdat.py deck2dfs + applywelopen (compdat.py:961-991,
-  * 791-924). The reference's sequential state machine becomes: schedule
-  * dates via window forward-fill (Schedule), defaulted COMPDAT I/J from the
-  * as-of WELSPECS header (J9-style as-of join), K1-K2 unroll via
-  * explode(sequence) (R1), WELOPEN application as a join + union + last-wins
-  * window dedup (R11/W7).
+  * 791-924), one sequential pass over a deck's keywords. Here that pass is
+  * [[walkDeck]], a pure function over one deck's events in
+  * (keywordIdx, recordIdx) order on the [[Schedule]] clock. Its state and
+  * rules:
+  *  - WELSPECS: a defaulted (null or <= 0) COMPDAT I/J takes the well's
+  *    latest earlier WELSPECS head (compdat.py:115-143).
+  *  - COMPDAT: K1..K2 unrolls to one row per layer (R1,
+  *    compdat.py:415-470); per well, the latest COMPDAT row of each
+  *    connection is the connection state.
+  *  - WLIST folds into per-list snapshots ([[wlistAction]], R8); COMPLUMP
+  *    collects each well's lumped layers.
+  *  - WELOPEN resolves in this order: a `*LIST` well → the wells of the
+  *    list's latest snapshot (J12, compdat.py:757-788); a positive C1/C2
+  *    range → the layers of earlier COMPLUMP records whose lump number is
+  *    in range (J11, compdat.py:656-754; a half-given range collapses to
+  *    its given bound, where the reference raises); partially defaulted
+  *    I/J/K → the matching connections of earlier keywords (J9,
+  *    compdat.py:291-363); a `*`/`?` template → the wells first seen in
+  *    COMPDAT at an earlier keyword (J10, compdat.py:366-412). A template
+  *    row with C1/C2 or partial coordinates matches nothing.
+  *  - All of I/J/K defaulted acts on every connection of the well, and
+  *    STOP gives OPEN; otherwise it acts on one connection, and STOP gives
+  *    SHUT. POPN gives OPEN. Each acted-on connection gets a copy of its
+  *    latest prior COMPDAT row (never an earlier WELOPEN's output) with
+  *    OP/SH replaced, stamped with the WELOPEN's date.
+  *  - Rows collapse last-wins per (WELL, I, J, K1, K2, DATE) in
+  *    (keywordIdx, recordIdx) order (R11/W7).
   *
-  * CORPUS-NATIVE: every as-of join, wildcard expansion, WLIST fold and
-  * last-wins window is keyed on `(deckId, WELL)` when the event frame
-  * carries a `deckId` column (the eclipse-deck source always emits one), so
-  * ONE frame holding a fleet of decks processes each deck's state machine
-  * independently — the reference's per-deck semantics (compdat.py:791-924)
-  * at 1000-deck scale without a driver loop. [[fromEvents]] with
-  * `keepDeckId = true` is the corpus entry point; the default keeps the
-  * reference's single-deck output schema (and fails fast on multi-deck
-  * input, since dropping the deck key there would silently interleave
-  * unrelated wells).
+  * [[fromEvents]] runs one projection over the event scan (the record
+  * readers below), one `deckId` exchange with one walk task per deck, and
+  * the final sort; [[df]] runs the same walk on the driver.
   */
 object Compdat {
 
   val Cols = Seq("WELL", "I", "J", "K1", "K2", "OP/SH", "SATN", "TRAN",
     "WBDIA", "KH", "SKIN", "DFACT", "DIR", "PEQVR")
+
+  /** The typed records the walk reads, one per reader keyword. */
+  final case class CompdatRec(WELL: Option[String], I: Option[Int], J: Option[Int],
+      K1: Option[Int], K2: Option[Int], OPSH: String, SATN: Int, TRAN: Option[Double],
+      WBDIA: Option[Double], KH: Double, SKIN: Double, DFACT: Option[Double], DIR: String,
+      PEQVR: Option[Double])
+  final case class WelspecsRec(WELL: Option[String], GROUP: Option[String],
+      HEAD_I: Option[Int], HEAD_J: Option[Int])
+  final case class WelopenRec(WELL: Option[String], STATUS: String, I: Option[Int],
+      J: Option[Int], K: Option[Int], C1: Option[Int], C2: Option[Int])
+  final case class WlistRec(NAME: Option[String], ACTION: Option[String], WELLS: Seq[String])
+  final case class ComplumpRec(WELL: Option[String], I: Option[Int], J: Option[Int],
+      K1: Option[Int], K2: Option[Int], N: Option[Int])
+
+  final case class WalkEvent(deckId: String, keywordIdx: Int, recordIdx: Int,
+      dateRec: Boolean, date: Option[Long], days: Option[Double],
+      compdat: Option[CompdatRec], welspecs: Option[WelspecsRec],
+      welopen: Option[WelopenRec], wlist: Option[WlistRec],
+      complump: Option[ComplumpRec]) extends Schedule.Event
+
+  /** One output row; DATE in epoch micros. */
+  final case class Conn(deckId: String, WELL: Option[String], I: Option[Int], J: Option[Int],
+      K1: Int, K2: Int, OPSH: String, SATN: Int, TRAN: Option[Double], WBDIA: Option[Double],
+      KH: Double, SKIN: Double, DFACT: Option[Double], DIR: String, PEQVR: Option[Double],
+      DATE: Option[Long])
 
   /** The corpus key columns ([[Schedule.deckKeys]]). Appended LAST in
     * record frames so single-deck positional access is unchanged.
@@ -40,54 +82,77 @@ object Compdat {
   private def withDeck(df: DataFrame, cols: Seq[Column]): Seq[Column] =
     cols ++ deckCols(df).map(col)
 
+  private val CompdatItems: Seq[(String, Column)] = Seq(
+    "WELL" -> R.str(0), "I" -> R.int(1), "J" -> R.int(2),
+    "K1" -> R.int(3), "K2" -> R.int(4), "OP/SH" -> R.str(5, "OPEN"),
+    // defaulted items carry the opm schema defaults exactly like the
+    // reference's deck view (opmkeywords/COMPDAT: SAT_TABLE 0, Kh -1,
+    // SKIN 0 — visible in the reference's published compdat.csv);
+    // TRAN/WBDIA/DFACT/PEQVR have no schema default and stay null
+    "SATN" -> R.int(6, 0), "TRAN" -> R.dbl(7), "WBDIA" -> R.dbl(8),
+    "KH" -> R.dbl(9, -1.0), "SKIN" -> R.dbl(10, 0.0), "DFACT" -> R.dbl(11),
+    "DIR" -> R.str(12, "Z"), "PEQVR" -> R.dbl(13))
+  private val WelspecsItems: Seq[(String, Column)] = Seq(
+    "WELL" -> R.str(0), "GROUP" -> R.str(1), "HEAD_I" -> R.int(2), "HEAD_J" -> R.int(3))
+  private val WelopenItems: Seq[(String, Column)] = Seq(
+    "WELL" -> R.str(0), "STATUS" -> R.str(1, "OPEN"),
+    "I" -> R.int(2), "J" -> R.int(3), "K" -> R.int(4), "C1" -> R.int(5), "C2" -> R.int(6))
+  private val WlistItems: Seq[(String, Column)] = Seq(
+    "NAME" -> R.str(0), "ACTION" -> R.str(1), "WELLS" -> R.rest(2))
+  private val ComplumpItems: Seq[(String, Column)] = Seq(
+    "WELL" -> R.str(0), "I" -> R.int(1), "J" -> R.int(2),
+    "K1" -> R.int(3), "K2" -> R.int(4), "N" -> R.int(5))
+
+  /** The item readers per record keyword, in [[WalkEvent]] order. */
+  private val Readers: Seq[(String, Seq[(String, Column)])] = Seq(
+    "COMPDAT" -> CompdatItems, "WELSPECS" -> WelspecsItems, "WELOPEN" -> WelopenItems,
+    "WLIST" -> WlistItems, "COMPLUMP" -> ComplumpItems)
+
+  private def isRecord(keyword: String): Column =
+    col("keyword") === keyword && size(col("items")) > 0
+
+  private def records(events: DataFrame, keyword: String, items: Seq[(String, Column)]): DataFrame =
+    events.filter(isRecord(keyword)).select(withDeck(events,
+      Seq(col("keywordIdx"), col("recordIdx")) ++ items.map { case (n, c) => c.as(n) }): _*)
+
   /** Typed COMPDAT records (pre-unroll). */
-  def compdatRecords(events: DataFrame): DataFrame =
-    events.filter(col("keyword") === "COMPDAT" && size(col("items")) > 0)
-      .select(withDeck(events, Seq(col("keywordIdx"), col("recordIdx"),
-        R.str(0).as("WELL"), R.int(1).as("I"), R.int(2).as("J"),
-        R.int(3).as("K1"), R.int(4).as("K2"), R.str(5, "OPEN").as("OP/SH"),
-        // defaulted items carry the opm schema defaults exactly like the
-        // reference's deck view (opmkeywords/COMPDAT: SAT_TABLE 0, Kh -1,
-        // SKIN 0 — visible in the reference's published compdat.csv);
-        // TRAN/WBDIA/DFACT/PEQVR have no schema default and stay null
-        R.int(6, 0).as("SATN"), R.dbl(7).as("TRAN"), R.dbl(8).as("WBDIA"),
-        R.dbl(9, -1.0).as("KH"), R.dbl(10, 0.0).as("SKIN"), R.dbl(11).as("DFACT"),
-        R.str(12, "Z").as("DIR"), R.dbl(13).as("PEQVR"))): _*)
+  def compdatRecords(events: DataFrame): DataFrame = records(events, "COMPDAT", CompdatItems)
 
-  def welspecsRecords(events: DataFrame): DataFrame =
-    events.filter(col("keyword") === "WELSPECS" && size(col("items")) > 0)
-      .select(withDeck(events, Seq(col("keywordIdx"), col("recordIdx"),
-        R.str(0).as("WELL"), R.str(1).as("GROUP"),
-        R.int(2).as("HEAD_I"), R.int(3).as("HEAD_J"))): _*)
+  def welspecsRecords(events: DataFrame): DataFrame = records(events, "WELSPECS", WelspecsItems)
 
-  def welopenRecords(events: DataFrame): DataFrame =
-    events.filter(col("keyword") === "WELOPEN" && size(col("items")) > 0)
-      .select(withDeck(events, Seq(col("keywordIdx"), col("recordIdx"),
-        R.str(0).as("WELL"), R.str(1, "OPEN").as("STATUS"),
-        R.int(2).as("I"), R.int(3).as("J"), R.int(4).as("K"),
-        R.int(5).as("C1"), R.int(6).as("C2"))): _*)
+  def welopenRecords(events: DataFrame): DataFrame = records(events, "WELOPEN", WelopenItems)
 
-  def wlistRecords(events: DataFrame): DataFrame =
-    events.filter(col("keyword") === "WLIST" && size(col("items")) > 0)
-      .select(withDeck(events, Seq(col("keywordIdx"), col("recordIdx"),
-        R.str(0).as("NAME"), R.str(1).as("ACTION"), R.rest(2).as("WELLS"))): _*)
+  def wlistRecords(events: DataFrame): DataFrame = records(events, "WLIST", WlistItems)
 
-  def complumpRecords(events: DataFrame): DataFrame =
-    events.filter(col("keyword") === "COMPLUMP" && size(col("items")) > 0)
-      .select(withDeck(events, Seq(col("keywordIdx"), col("recordIdx"),
-        R.str(0).as("WELL"), R.int(1).as("I"), R.int(2).as("J"),
-        R.int(3).as("K1"), R.int(4).as("K2"), R.int(5).as("N"))): _*)
+  def complumpRecords(events: DataFrame): DataFrame = records(events, "COMPLUMP", ComplumpItems)
 
-  /** WLIST action algebra (R8, expand_wlist compdat.py:517-653): NEW
-    * replaces a list, ADD unions, DEL removes, MOV adds here and removes
-    * from every other list OF THE SAME DECK; `*LIST` references inside the
-    * well items resolve against the current per-deck state. Emitted as NEW
-    * snapshots per action record. The fold is inherently sequential
-    * small-state but the state is PER DECK by construction (MOV never
-    * crosses decks), so corpus mode runs it as a `groupByKey(deckId)` +
-    * `flatMapGroups` ordered fold — one task per deck, no driver collect,
-    * state bounded by one deck's WLIST records. SURVEY §2.7's driver-fold
-    * prescription is the single-deck degenerate case (one group).
+  /** One WLIST action record applied to a deck's list state (R8,
+    * expand_wlist compdat.py:517-653): NEW replaces a list, ADD unions,
+    * DEL removes, MOV adds here and removes from every other list of the
+    * deck; `*LIST` references inside the well items resolve against the
+    * current state.
+    */
+  private[modules] def wlistAction(state: Map[String, Vector[String]], name: String, action: String,
+      rawWells: Seq[String]): Map[String, Vector[String]] = {
+    val wells = rawWells.flatMap { w =>
+      if (w.startsWith("*")) state.getOrElse(w, Vector.empty) else Vector(w)
+    }.toVector
+    action match {
+      case "NEW" => state + (name -> wells.distinct.sorted)
+      case "ADD" => state + (name -> (state.getOrElse(name, Vector.empty) ++ wells).distinct.sorted)
+      case "DEL" => state + (name -> state.getOrElse(name, Vector.empty).filterNot(wells.contains))
+      case "MOV" =>
+        val moved = state.map { case (n, ws) => n -> ws.filterNot(wells.contains) }
+        moved + (name -> (moved.getOrElse(name, Vector.empty) ++ wells).distinct.sorted)
+      case other => throw new IllegalArgumentException(s"WLIST action $other")
+    }
+  }
+
+  /** WLIST snapshots: one NEW-style snapshot (the list's wells after the
+    * record) per action record, by [[wlistAction]]. The fold's state is
+    * per deck (MOV never crosses decks), so it runs as one
+    * `groupByKey(deckId)` + `flatMapGroups` ordered fold, one task per
+    * deck.
     */
   def expandWlist(wlist: DataFrame): DataFrame = {
     val spark = wlist.sparkSession
@@ -104,21 +169,7 @@ object Compdat {
         val recs = it.toArray.sortBy(r => (r._2, r._3))
         var state = Map.empty[String, Vector[String]]
         recs.iterator.map { case (_, kwIdx, recIdx, name, action, rawWells) =>
-          val wells = rawWells.flatMap { w =>
-            if (w.startsWith("*")) state.getOrElse(w, Vector.empty) else Vector(w)
-          }.toVector
-          action match {
-            case "NEW" => state += name -> wells.distinct.sorted
-            case "ADD" => state += name ->
-              (state.getOrElse(name, Vector.empty) ++ wells).distinct.sorted
-            case "DEL" => state += name ->
-              state.getOrElse(name, Vector.empty).filterNot(wells.contains)
-            case "MOV" =>
-              state = state.map { case (n, ws) => n -> ws.filterNot(wells.contains) }
-              state += name ->
-                (state.getOrElse(name, Vector.empty) ++ wells).distinct.sorted
-            case other => throw new IllegalArgumentException(s"WLIST action $other")
-          }
+          state = wlistAction(state, name, action, rawWells)
           (kwIdx, recIdx, name, state(name): Seq[String], deck)
         }
       }
@@ -133,289 +184,154 @@ object Compdat {
     fromEvents(spark.read.format("eclipse-deck").load(path))
 
   /** FLEET entry: one multi-deck frame from a glob/directory of deck
-    * files — every state operator keyed on (deckId, …), output carries
-    * the deck key. The 100 TB shape: 10⁵ decks = 10⁵ input partitions
-    * through ONE plan.
+    * files — one walk task per deck, output carries the deck key. The
+    * 100 TB shape: 10⁵ decks = 10⁵ input partitions through ONE plan.
     */
   def corpusFromPath(spark: SparkSession, paths: String*): DataFrame =
     fromEvents(spark.read.format("eclipse-deck").load(paths: _*), keepDeckId = true)
 
-  /** Full pipeline from deck text. */
-  def df(spark: SparkSession, deckText: String): DataFrame =
-    fromEvents(DeckParser.toDS(spark, deckText).toDF())
+  /** Full pipeline from deck text: the walk runs on the driver and the
+    * result is a local relation (a parsed text is one deck).
+    */
+  def df(spark: SparkSession, deckText: String): DataFrame = {
+    import spark.implicits._
+    present(Schedule.onDriver(walkEvents(DeckParser.toDS(spark, deckText).toDF()))(walkDeck).toDF(),
+      keepDeckId = false)
+  }
 
   def fromEvents(events: DataFrame): DataFrame =
     fromEvents(events, keepDeckId = false)
 
   /** `keepDeckId = true` is corpus mode: the output carries `deckId` and a
     * multi-deck frame yields, per deck, exactly what a single-deck run
-    * yields — all state operators below key on (deckId, WELL). The default
-    * drops the column for reference-schema parity and therefore refuses
-    * multi-deck input.
+    * yields. The default drops the column for reference-schema parity and
+    * therefore refuses multi-deck input.
     */
   def fromEvents(events: DataFrame, keepDeckId: Boolean): DataFrame = {
+    import events.sparkSession.implicits._
     if (!keepDeckId) Schedule.requireSingleDeck(events, "compdat")
-    val dk = deckCols(events)
-    val dates = Schedule.keywordDates(events, keepDeckId = dk.nonEmpty)
-    val compdat0 = compdatRecords(events)
-    val welspecs = welspecsRecords(events)
-    val welopenRecs = welopenRecords(events)
-
-    // ONE bounded driver action over the RAW record frame decides which
-    // WELOPEN expansion stages this corpus needs — replacing four isEmpty
-    // probes that each executed a progressively longer join/window
-    // lineage. The flags are computable on raw records because resolve
-    // steps never create list/C/partial rows: *LIST explode keeps I/J/K,
-    // and COMPLUMP rewrite sets all three (never partial afterwards).
-    def dflt(c: Column) = c.isNull || c <= 0
-    val nDef = when(dflt(col("I")), 1).otherwise(0) +
-      when(dflt(col("J")), 1).otherwise(0) +
-      when(dflt(col("K")), 1).otherwise(0)
-    val rawHasC = coalesce(col("C1"), lit(0)) > 0 || coalesce(col("C2"), lit(0)) > 0
-    val feat = welopenRecs.agg(
-      count(lit(1)).as("n"),
-      count(when(col("WELL").startsWith("*"), 1)).as("nList"),
-      count(when(rawHasC, 1)).as("nC"),
-      count(when(!rawHasC && nDef > 0 && nDef < 3, 1)).as("nPartial")).head()
-    val (hasWelopen, hasList, hasC) =
-      (feat.getLong(0) > 0, feat.getLong(1) > 0, feat.getLong(2) > 0)
-    // C rows can BECOME partial during resolve (a COMPLUMP record with
-    // defaulted I/J rewrites them to null coordinates), so any C row
-    // forces the partial-expansion stage too — running it over zero
-    // partial rows is a correct no-op, skipping it over one is not
-    val hasPartial = feat.getLong(3) > 0 || hasC
-
-    // Defaulted (null or <=0) I/J inherit the as-of WELSPECS wellhead
-    // (reference compdat.py:115-143).
-    val headAsof = Ops.asofJoinLe(
-      compdat0, welspecs.select(withDeck(welspecs, Seq(col("WELL"),
-        col("keywordIdx").as("wsIdx"), col("HEAD_I"), col("HEAD_J"))): _*),
-      keys = dk :+ "WELL", leftTime = "keywordIdx", rightTime = "wsIdx",
-      leftIdCols = dk ++ Seq("keywordIdx", "recordIdx"),
-      rightCols = Seq("HEAD_I", "HEAD_J"))
-      .select(compdat0.columns.map(c => col(s"l.$c")) :+ col("HEAD_I") :+ col("HEAD_J"): _*)
-    val withHead = headAsof
-      .withColumn("I", when(col("I").isNull || col("I") <= 0, col("HEAD_I")).otherwise(col("I")))
-      .withColumn("J", when(col("J").isNull || col("J") <= 0, col("HEAD_J")).otherwise(col("J")))
-      .drop("HEAD_I", "HEAD_J")
-
-    // K1-K2 unroll: one row per layer, K1==K2 afterwards (compdat.py:415-470).
-    val unrolled = withHead
-      .withColumn("K", explode(sequence(col("K1"), col("K2"))))
-      .withColumn("K1", col("K")).withColumn("K2", col("K")).drop("K")
-
-    val dated = unrolled.join(dates, dk :+ "keywordIdx", "left")
-    val welopenRaw = welopenRecs.join(dates, dk :+ "keywordIdx", "left")
-    val welopen = expandWelopenDefaults(
-      resolveWelopen(welopenRaw,
-        expandWlist(wlistRecords(events)), complumpRecords(events),
-        doList = Some(hasList), doC = Some(hasC)),
-      dated, doPartial = Some(hasPartial))
-    val outCols = (if (keepDeckId) dk else Nil) ++ Cols :+ "DATE"
-    applyWelopen(dated, welopen, nonEmpty = Some(hasWelopen))
-      .select(outCols.map(col): _*)
-      .orderBy(((if (keepDeckId) dk else Nil) ++
-        Seq("DATE", "WELL", "I", "J", "K1")).map(col): _*)
+    val conns = Schedule.perDeck(walkEvents(events))(walkDeck).toDF()
+    present(Ops.sortAfterHeavyStage(conns, "deckId", "DATE", "WELL", "I", "J", "K1"),
+      keepDeckId && deckCols(events).nonEmpty)
   }
 
-  /** Resolve indirections in WELOPEN rows before state application:
-    * `*NAME` well entries → the as-of WLIST snapshot's wells (J12,
-    * compdat.py:757-788); C1/C2 completion ranges → the as-of COMPLUMP
-    * lump assignments' explicit (I,J,K) connections (J11,
-    * compdat.py:656-754). Both are as-of joins on the keyword ordinal
-    * against dimension-sized state tables → broadcast; both match within
-    * the owning deck on a corpus frame.
+  /** Walk output → the module's columns (DATE as a timestamp). */
+  private def present(conns: DataFrame, keepDeckId: Boolean): DataFrame =
+    conns.select((if (keepDeckId) Seq(col("deckId")) else Nil) ++
+      Cols.map(c => col(fieldName(c)).as(c)) :+ timestamp_micros(col("DATE")).as("DATE"): _*)
+
+  /** The walk's input: the clock columns plus one typed record per
+    * reader keyword, read by the same item readers as the record frames.
     */
-  def resolveWelopen(welopen: DataFrame, wlistSnaps: DataFrame,
-      complump: DataFrame, doList: Option[Boolean] = None,
-      doC: Option[Boolean] = None): DataFrame = {
-    val dk = deckCols(welopen)
-    val outCols = welopen.columns.toSeq
-    val isList = col("WELL").startsWith("*")
-    val afterList = {
-      lazy val lists = welopen.filter(isList)
-      if (!doList.getOrElse(!lists.isEmpty)) welopen
-      else {
-        val s = wlistSnaps.select(Seq(col("NAME"), col("keywordIdx").as("snapIdx"),
-          col("recordIdx").as("snapRec"), col("WELLS")) ++
-          dk.map(c => col(c).as("snapDeck")): _*)
-        val deckMatch = dk.map(_ => col("snapDeck") === col("deckId"))
-        val joined = lists.join(broadcast(s),
-          deckMatch.foldLeft(col("NAME") === col("WELL") &&
-            col("snapIdx") <= col("keywordIdx"))(_ && _))
-        val w = Window
-          .partitionBy((dk :+ "keywordIdx" :+ "recordIdx").map(col): _*)
-          .orderBy(col("snapIdx").desc, col("snapRec").desc)
-        val exploded = joined
-          .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-          .withColumn("WELL", explode(col("WELLS")))
-          .select(outCols.map(col): _*)
-        welopen.filter(!isList).unionByName(exploded)
+  private def walkEvents(events: DataFrame): Dataset[WalkEvent] = {
+    import events.sparkSession.implicits._
+    events.filter(col("keyword").isin(Schedule.ClockKeywords ++ Readers.map(_._1): _*))
+      .select(Schedule.eventColumns(events) ++ Readers.map { case (kw, items) =>
+        when(isRecord(kw), struct(items.map { case (n, c) => c.as(fieldName(n)) }: _*))
+          .as(kw.toLowerCase) }: _*)
+      .as[WalkEvent]
+  }
+
+  private def fieldName(column: String): String = column.replace("/", "")
+
+  private type Coord = (Option[Int], Option[Int], Int) // one layer's I, J, K
+
+  private def dflt(v: Option[Int]): Boolean = v.forall(_ <= 0)
+
+  /** Equality as the engine's `===`: an absent side never matches. */
+  private def same(a: Option[Int], b: Option[Int]): Boolean = a.isDefined && a == b
+
+  /** K1..K2 as `sequence(K1, K2)`: descending when K1 > K2. */
+  private def layers(k1: Int, k2: Int): Range = if (k1 <= k2) k1 to k2 else k1 to k2 by -1
+
+  private val OutputOrder: Ordering[Conn] = Ordering.by((c: Conn) => (c.DATE, c.WELL, c.I, c.J, c.K1))(
+    Ordering.Tuple5(Ordering.Option[Long], Ordering.Option(Schedule.BinaryOrder),
+      Ordering.Option[Int], Ordering.Option[Int], Ordering.Int))
+
+  /** The COMPDAT/WELOPEN state machine over one deck's events (rules in
+    * the object doc); rows in output order.
+    */
+  private[modules] def walkDeck(events: Iterable[WalkEvent], zone: ZoneId): Iterator[Conn] = {
+    val heads = mutable.HashMap.empty[String, (Option[Int], Option[Int])]
+    // per well: the latest COMPDAT row of each connection
+    val conns = mutable.HashMap.empty[String, mutable.LinkedHashMap[Coord, Conn]]
+    // per well: (I, J, K, lump number) of every COMPLUMP layer so far
+    val lumps = mutable.HashMap.empty[String, mutable.ArrayBuffer[(Option[Int], Option[Int], Int, Int)]]
+    var lists = Map.empty[String, Vector[String]]
+    var snapshots = Map.empty[String, Vector[String]] // per list: its state after its last record
+    // last wins per (WELL, I, J, K1 = K2, DATE)
+    val out = mutable.HashMap.empty[(Option[String], Option[Int], Option[Int], Int, Option[Long]), Conn]
+    def emit(c: Conn): Unit = out((c.WELL, c.I, c.J, c.K1, c.DATE)) = c
+
+    /** One WELOPEN record → the rows it states (resolution order in the
+      * object doc); one row per acted-on connection.
+      */
+    def welopen(w: WelopenRec, date: Option[Long]): Iterable[Conn] = {
+      val wells = w.WELL.toSeq.flatMap(n =>
+        if (n.startsWith("*")) snapshots.getOrElse(n, Vector.empty) else Seq(n))
+      val (c1, c2) = (w.C1.filter(_ > 0), w.C2.filter(_ > 0))
+      val targets = for {
+        well <- wells
+        (i, j, k) <- (c1.orElse(c2), c2.orElse(c1)) match {
+          case (Some(lo), Some(hi)) => lumps.getOrElse(well, Nil).collect {
+            case (li, lj, lk, n) if lo <= n && n <= hi => (li, lj, Some(lk)) }.distinct
+          case _ => Seq((w.I, w.J, w.K))
+        }
+        (pi, pj, pk) <- Seq(i, j, k).count(dflt) match {
+          case 1 | 2 => conns.get(well).toSeq.flatMap(_.keys).collect {
+            case (ci, cj, ck) if (dflt(i) || same(i, ci)) && (dflt(j) || same(j, cj)) &&
+                (dflt(k) || k.contains(ck)) => (ci, cj, Some(ck)) }
+          case _ => Seq((i, j, k))
+        }
+        target <- if (well.contains('*') || well.contains('?')) {
+          val re = Pattern.compile("^" + well.replace("*", ".*").replace("?", ".") + "$")
+          conns.keys.filter(re.matcher(_).find()).toSeq
+        } else Seq(well)
+      } yield (target, pi, pj, pk)
+      val acted = mutable.LinkedHashMap.empty[(String, Coord), Conn]
+      targets.foreach { case (well, i, j, k) =>
+        val onWell = dflt(i) && dflt(j) && dflt(k)
+        val status = w.STATUS match {
+          case "POPN" => "OPEN"
+          case "STOP" => if (onWell) "OPEN" else "SHUT"
+          case s => s
+        }
+        conns.get(well).foreach(_.foreach { case (coord @ (ci, cj, ck), c) =>
+          if (onWell || (same(i, ci) && same(j, cj) && k.contains(ck)))
+            acted.getOrElseUpdate((well, coord), c.copy(OPSH = status, DATE = date))
+        })
+      }
+      acted.values
+    }
+
+    Schedule.walk(events, zone) { (records, date) =>
+      records.foreach { e =>
+        e.welspecs.foreach(w => w.WELL.foreach(heads(_) = (w.HEAD_I, w.HEAD_J)))
+        e.compdat.foreach { c =>
+          val head = c.WELL.flatMap(heads.get)
+          val i = if (dflt(c.I)) head.flatMap(_._1) else c.I
+          val j = if (dflt(c.J)) head.flatMap(_._2) else c.J
+          for (k1 <- c.K1; k2 <- c.K2; k <- layers(k1, k2)) {
+            val row = Conn(e.deckId, c.WELL, i, j, k, k, c.OPSH, c.SATN, c.TRAN, c.WBDIA,
+              c.KH, c.SKIN, c.DFACT, c.DIR, c.PEQVR, date)
+            c.WELL.foreach(w => conns.getOrElseUpdate(w, mutable.LinkedHashMap.empty)((i, j, k)) = row)
+            emit(row)
+          }
+        }
+        e.wlist.foreach { l =>
+          val name = l.NAME.orNull
+          lists = wlistAction(lists, name, l.ACTION.orNull, l.WELLS)
+          snapshots += name -> lists(name)
+        }
+        e.complump.foreach { l =>
+          for (w <- l.WELL; n <- l.N; k1 <- l.K1; k2 <- l.K2; k <- layers(k1, k2))
+            lumps.getOrElseUpdate(w, mutable.ArrayBuffer.empty) += ((l.I, l.J, k, n))
+        }
+        e.welopen.foreach(w => welopen(w, date).foreach(emit))
       }
     }
-    // explicit 0 / negative completion numbers are defaults, same as 1*
-    // (reference zero/negative-values cases): only a positive C1 or C2
-    // names a real completion range. coalesce keeps the predicate
-    // two-valued so !hasC doesn't drop both-null rows. A half-given range
-    // (one bound positive, the other 0/defaulted) collapses to the given
-    // bound — the reference raises "Zeros for C1/C2 is not implemented"
-    // here; the engine generalizes instead of failing the job.
-    val c1p = when(col("C1") > 0, col("C1"))
-    val c2p = when(col("C2") > 0, col("C2"))
-    val hasC = coalesce(col("C1"), lit(0)) > 0 || coalesce(col("C2"), lit(0)) > 0
-    val cRows = afterList.filter(hasC)
-    if (!doC.getOrElse(!cRows.isEmpty)) afterList
-    else {
-      val cl = complump
-        .withColumn("CL_K", explode(sequence(col("K1"), col("K2"))))
-        .select(Seq(col("WELL"), col("I").as("CL_I"), col("J").as("CL_J"),
-          col("CL_K"), col("N"),
-          col("keywordIdx").as("clIdx"), col("recordIdx").as("clRec")) ++
-          dk.map(c => col(c).as("clDeck")): _*)
-      val deckMatch = dk.map(_ => cRows("deckId") === cl("clDeck"))
-      val joined = cRows.drop("I", "J", "K").join(broadcast(cl),
-        deckMatch.foldLeft(cRows("WELL") === cl("WELL") &&
-          col("clIdx") <= col("keywordIdx") &&
-          col("N").between(coalesce(c1p, c2p), coalesce(c2p, c1p)))(_ && _))
-        .drop(cl("WELL"))
-      // latest lump assignment per (welopen row, WELL, connection) —
-      // *LIST-expanded rows share (keywordIdx, recordIdx) across wells
-      val w = Window
-        .partitionBy((dk :+ "keywordIdx" :+ "recordIdx").map(col) ++
-          Seq(col("WELL"), col("CL_I"), col("CL_J"), col("CL_K")): _*)
-        .orderBy(col("clIdx").desc, col("clRec").desc)
-      val expanded = joined
-        .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-        .withColumn("I", col("CL_I")).withColumn("J", col("CL_J"))
-        .withColumn("K", col("CL_K"))
-        .withColumn("C1", lit(null).cast("int")).withColumn("C2", lit(null).cast("int"))
-        .select(outCols.map(col): _*)
-      afterList.filter(!hasC).unionByName(expanded)
-    }
-  }
 
-  /** Partially-defaulted WELOPEN coordinates (J9, expand_welopen_defaults
-    * compdat.py:291-363): a row giving some but not all of I/J/K expands
-    * against the as-of COMPDAT connections matching the given coordinates,
-    * yielding explicit per-connection rows. Fully-defaulted rows stay
-    * (acts-on-well); fully-given rows stay (single connection).
-    */
-  def expandWelopenDefaults(welopen: DataFrame, compdat: DataFrame,
-      doPartial: Option[Boolean] = None): DataFrame = {
-    def dflt(c: Column) = c.isNull || c <= 0
-    val nDefaulted =
-      when(dflt(col("I")), 1).otherwise(0) +
-        when(dflt(col("J")), 1).otherwise(0) +
-        when(dflt(col("K")), 1).otherwise(0)
-    val isPartial = nDefaulted > 0 && nDefaulted < 3
-    val partial = welopen.filter(isPartial)
-    if (!doPartial.getOrElse(!partial.isEmpty)) return welopen
-    val dk = deckCols(welopen)
-    val outCols = welopen.columns.toSeq
-    val conns = compdat.select(Seq(col("WELL").as("cWELL"), col("keywordIdx").as("cIdx"),
-      col("recordIdx").as("cRec"), col("I").as("cI"), col("J").as("cJ"),
-      col("K1").as("cK")) ++ dk.map(c => col(c).as("cDeck")): _*)
-    val deckMatch = dk.map(_ => col("cDeck") === col("deckId"))
-    val joined = partial.join(conns,
-      deckMatch.foldLeft(col("cWELL") === col("WELL") &&
-        col("cIdx") < col("keywordIdx") &&
-        (dflt(col("I")) || col("I") === col("cI")) &&
-        (dflt(col("J")) || col("J") === col("cJ")) &&
-        (dflt(col("K")) || col("K") === col("cK")))(_ && _))
-    // one expansion per distinct matching connection per (welopen row,
-    // WELL) — *LIST-expanded rows share (keywordIdx, recordIdx) across
-    // wells, so the well key must partition too
-    val w = Window
-      .partitionBy((dk :+ "keywordIdx" :+ "recordIdx").map(col) ++
-        Seq(col("WELL"), col("cI"), col("cJ"), col("cK")): _*)
-      .orderBy(col("cIdx").desc, col("cRec").desc)
-    val expanded = joined
-      .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-      .withColumn("I", col("cI")).withColumn("J", col("cJ")).withColumn("K", col("cK"))
-      .select(outCols.map(col): _*)
-    welopen.filter(!isPartial).unionByName(expanded)
-  }
-
-  /** WELOPEN → explicit COMPDAT state rows (reference applywelopen,
-    * compdat.py:791-924):
-    *  - all of I,J,K defaulted/<=0 → acts on the whole well
-    *    (STOP→OPEN: stopping the well leaves connections open);
-    *  - all of I,J,K given, C1/C2 defaulted → acts on one connection
-    *    (STOP→SHUT at connection level); POPN→OPEN always.
-    *  - `*`/`?` well templates expand against wells defined earlier in the
-    *    SAME deck (compdat.py:366-412).
-    * New rows copy the latest prior state per connection with OP/SH
-    * replaced, stamped with the WELOPEN's keywordIdx/DATE; final last-wins
-    * dedup per (deckId?, WELL,I,J,K1,K2,DATE) ordered by keyword position.
-    */
-  def applyWelopen(compdat: DataFrame, welopen: DataFrame,
-      nonEmpty: Option[Boolean] = None): DataFrame = {
-    if (!nonEmpty.getOrElse(!welopen.isEmpty)) return compdat
-    val dk = deckCols(compdat)
-    // single-key contract (Schedule.deckKeys): the defDeck alias below
-    // would silently collapse multiple keys into one column
-    require(dk.size <= 1, s"deck key must be a single column, got $dk")
-
-    // wildcard well templates → concrete wells known earlier in the deck
-    val wellsFirstDef = compdat
-      .groupBy(dk.map(c => col(c).as("defDeck")) :+ col("WELL").as("defWell"): _*)
-      .agg(min(col("keywordIdx")).as("firstDefIdx"))
-    val isTemplate = col("WELL").contains("*") || col("WELL").contains("?")
-    val literal = welopen.filter(!isTemplate)
-    val deckMatch = dk.map(_ => col("defDeck") === col("deckId"))
-    val expanded = welopen.filter(isTemplate)
-      .join(wellsFirstDef,
-        deckMatch.foldLeft(
-          regexp_like(col("defWell"), concat(lit("^"),
-            regexp_replace(regexp_replace(col("WELL"),
-              lit("\\*"), lit(".*")), lit("\\?"), lit(".")), lit("$"))) &&
-            col("firstDefIdx") < col("keywordIdx"))(_ && _))
-      .drop("WELL").withColumnRenamed("defWell", "WELL")
-      .drop("firstDefIdx").drop("defDeck")
-    val wo = literal.unionByName(expanded.select(literal.columns.map(col): _*))
-      .withColumn("actsOnWell",
-        (col("I").isNull || col("I") <= 0) &&
-          (col("J").isNull || col("J") <= 0) &&
-          (col("K").isNull || col("K") <= 0))
-
-    val c = compdat.alias("c")
-    val w = wo.alias("w")
-    val deckMatchCW = dk.map(k => col(s"c.$k") === col(s"w.$k"))
-    val joined = c.join(w,
-      deckMatchCW.foldLeft(col("c.WELL") === col("w.WELL") &&
-        col("c.keywordIdx") < col("w.keywordIdx") &&
-        (col("w.actsOnWell") ||
-          (col("c.I") === col("w.I") && col("c.J") === col("w.J") &&
-            col("c.K1") === col("w.K") && col("c.K2") === col("w.K"))))(_ && _))
-    // latest prior state per (welopen row, WELL, connection) — the WELL
-    // must be in the partition: one wildcard/*LIST record expands to
-    // several wells SHARING (keywordIdx, recordIdx), and two wells'
-    // connections at equal coordinates must not collapse to one row
-    val latest = Window
-      .partitionBy(dk.map(k => col(s"w.$k")) ++
-        Seq(col("w.keywordIdx"), col("w.recordIdx"), col("c.WELL"),
-          col("c.I"), col("c.J"), col("c.K1"), col("c.K2")): _*)
-      .orderBy(col("c.keywordIdx").desc, col("c.recordIdx").desc)
-    val newRows = joined
-      .withColumn("__rn", row_number().over(latest)).filter(col("__rn") === 1)
-      .select(dk.map(k => col(s"c.$k").as(k)) ++ Seq(
-        col("w.keywordIdx").as("keywordIdx"), col("w.recordIdx").as("recordIdx"),
-        col("c.WELL").as("WELL"), col("c.I").as("I"), col("c.J").as("J"),
-        col("c.K1").as("K1"), col("c.K2").as("K2"),
-        when(col("w.STATUS") === "POPN", "OPEN")
-          .when(col("w.STATUS") === "STOP",
-            when(col("w.actsOnWell"), "OPEN").otherwise("SHUT"))
-          .otherwise(col("w.STATUS")).as("OP/SH"),
-        col("c.SATN").as("SATN"), col("c.TRAN").as("TRAN"),
-        col("c.WBDIA").as("WBDIA"), col("c.KH").as("KH"),
-        col("c.SKIN").as("SKIN"), col("c.DFACT").as("DFACT"),
-        col("c.DIR").as("DIR"), col("c.PEQVR").as("PEQVR"),
-        col("w.DATE").as("DATE")): _*)
-
-    Ops.lastWinsDedup(
-      compdat.unionByName(newRows),
-      keys = dk ++ Seq("WELL", "I", "J", "K1", "K2", "DATE"),
-      ord = Seq(col("keywordIdx"), col("recordIdx")))
+    out.values.toVector.sorted(OutputOrder).iterator
   }
 
   /** WELOPEN validation report: resolved WELOPEN rows that matched NO prior
@@ -423,7 +339,9 @@ object Compdat {
     * connections are matching WELOPEN keyword", "not acting on any
     * existing well"); a distributed engine must not fail a whole corpus on
     * one bad record, so the anomalies surface as data — the caller decides
-    * whether they are fatal. Same join shape as applyWelopen, anti-form.
+    * whether they are fatal. The match is the walk's: a whole-well row
+    * needs any earlier connection of the well, a connection row the one
+    * earlier connection at its (I, J, K).
     */
   def welopenAnomalies(compdat: DataFrame, welopen: DataFrame): DataFrame = {
     val dk = deckCols(welopen).intersect(deckCols(compdat))

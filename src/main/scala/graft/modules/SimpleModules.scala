@@ -1,7 +1,9 @@
 package graft.modules
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.time.ZoneId
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Ops
 import graft.io.{DeckParser, Records => R}
 
 /** FAULTS: one row per (fault, cell) — the 3-D range unroll (R2,
@@ -182,11 +184,56 @@ object Pvt {
 }
 
 /** WCON* production/injection control records + in-effect DATE
-  * (wcon.py:22-64): per-keyword typed frames unioned (U1).
+  * (wcon.py:22-64): one typed row per WCONPROD/WCONHIST/WCONINJE/WCONINJH
+  * record, the four keywords' columns unioned by name (U1) and dated by
+  * the [[Schedule]] clock in one deck walk. [[fromEvents]] runs that walk
+  * once per deck after one `deckId` exchange, [[df]] on the driver.
   */
 object Wcon {
-  def df(spark: SparkSession, deckText: String): DataFrame =
-    fromEvents(DeckParser.toDS(spark, deckText).toDF())
+
+  /** One control record: the union of the four keywords' columns. */
+  final case class Rec(KEYWORD: String, WELL: Option[String], STATUS: Option[String],
+      CMODE: Option[String], ORAT: Option[Double], WRAT: Option[Double], GRAT: Option[Double],
+      LRAT: Option[Double], RESV: Option[Double], BHP: Option[Double], THP: Option[Double],
+      VFP_TABLE: Option[Int], ALQ: Option[Double], NGLRAT: Option[Double],
+      TYPE: Option[String], RATE: Option[Double])
+
+  final case class WalkEvent(deckId: String, keywordIdx: Int, recordIdx: Int,
+      dateRec: Boolean, date: Option[Long], days: Option[Double],
+      rec: Option[Rec]) extends Schedule.Event
+
+  /** One dated record; DATE in epoch micros. */
+  final case class Dated(deckId: String, keywordIdx: Int, recordIdx: Int,
+      DATE: Option[Long], rec: Rec)
+
+  // item positions and defaults follow the keyword schemas the reference
+  // ships (opmkeywords/WCON*): unspecified numeric items default to the
+  // schema default, not null, exactly like opm's deck view
+  private val Readers: Seq[(String, Map[String, Column])] = Seq(
+    "WCONPROD" -> Map("WELL" -> R.str(0), "STATUS" -> R.str(1, "OPEN"), "CMODE" -> R.str(2),
+      "ORAT" -> R.dbl(3, 0.0), "WRAT" -> R.dbl(4, 0.0), "GRAT" -> R.dbl(5, 0.0),
+      "LRAT" -> R.dbl(6, 0.0), "RESV" -> R.dbl(7, 0.0), "BHP" -> R.dbl(8, 1.01325),
+      "THP" -> R.dbl(9, 0.0), "VFP_TABLE" -> R.int(10, 0), "ALQ" -> R.dbl(11, 0.0)),
+    "WCONHIST" -> Map("WELL" -> R.str(0), "STATUS" -> R.str(1, "OPEN"), "CMODE" -> R.str(2),
+      "ORAT" -> R.dbl(3, 0.0), "WRAT" -> R.dbl(4, 0.0), "GRAT" -> R.dbl(5, 0.0),
+      "VFP_TABLE" -> R.int(6, 0), "ALQ" -> R.dbl(7, 0.0), "THP" -> R.dbl(8, 0.0),
+      "BHP" -> R.dbl(9, 0.0), "NGLRAT" -> R.dbl(10, 0.0)),
+    "WCONINJE" -> Map("WELL" -> R.str(0), "TYPE" -> R.str(1), "STATUS" -> R.str(2, "OPEN"),
+      "CMODE" -> R.str(3), "RATE" -> R.dbl(4), "RESV" -> R.dbl(5),
+      "BHP" -> R.dbl(6, 6895.0), "THP" -> R.dbl(7), "VFP_TABLE" -> R.int(8, 0)),
+    "WCONINJH" -> Map("WELL" -> R.str(0), "TYPE" -> R.str(1), "STATUS" -> R.str(2, "OPEN"),
+      "RATE" -> R.dbl(3), "BHP" -> R.dbl(4), "THP" -> R.dbl(5),
+      "VFP_TABLE" -> R.int(6, 0), "CMODE" -> R.str(11, "RATE")))
+
+  /** The output columns after KEYWORD and DATE, in union order. */
+  private val Fields = Seq("WELL", "STATUS", "CMODE", "ORAT", "WRAT", "GRAT", "LRAT",
+    "RESV", "BHP", "THP", "VFP_TABLE", "ALQ", "NGLRAT", "TYPE", "RATE")
+
+  def df(spark: SparkSession, deckText: String): DataFrame = {
+    import spark.implicits._
+    present(Schedule.onDriver(walkEvents(DeckParser.toDS(spark, deckText).toDF()))(walkDeck).toDF(),
+      keepDeckId = false)
+  }
 
   /** FLEET entry: control records for a glob/directory of deck files in
     * one plan, each deck's schedule clock independent.
@@ -194,52 +241,47 @@ object Wcon {
   def corpusFromPath(spark: SparkSession, paths: String*): DataFrame =
     fromEvents(spark.read.format("eclipse-deck").load(paths: _*), keepDeckId = true)
 
-  /** `keepDeckId = true` is corpus mode: dates join per deck and the
-    * output carries `deckId` (wcon has no cross-record state beyond the
-    * clock, so this is the whole of its per-deck semantics).
+  /** `keepDeckId = true` is corpus mode: the output carries `deckId` (wcon
+    * has no cross-record state beyond the clock, so the per-deck clock is
+    * the whole of its per-deck semantics).
     */
   def fromEvents(events: DataFrame, keepDeckId: Boolean = false): DataFrame = {
+    import events.sparkSession.implicits._
     if (!keepDeckId) Schedule.requireSingleDeck(events, "wcon")
-    val dk = Schedule.deckKeys(events)
-    val dates = Schedule.keywordDates(events, keepDeckId = dk.nonEmpty)
-    val head = (if (keepDeckId) dk.map(col) else Nil)
-    // ONE clock join feeds all four keyword families, and the joined hub
-    // is eagerly checkpointed (the gruptree hub pattern): the four union
-    // branches below are narrow filters over the materialized blocks, so
-    // the schedule-clock window + join run ONCE — four pre-join filters
-    // each re-ran them (1000-deck ScaleStress wcon row 3.8× → 1.8×).
-    // The hub is record-count-sized (only WCON* rows survive the filter).
-    val joined = events.filter(
-        col("keyword").isin("WCONPROD", "WCONHIST", "WCONINJE", "WCONINJH") &&
-          size(col("items")) > 0)
-      .join(dates, dk :+ "keywordIdx", "left")
-      .localCheckpoint(true)
-    def base(kw: String) = joined.filter(col("keyword") === kw)
-    // item positions and defaults follow the keyword schemas the reference
-    // ships (opmkeywords/WCON*): unspecified numeric items default to the
-    // schema default, not null, exactly like opm's deck view
-    val prod = base("WCONPROD").select(head ++ Seq(lit("WCONPROD").as("KEYWORD"), col("DATE"),
-      R.str(0).as("WELL"), R.str(1, "OPEN").as("STATUS"), R.str(2).as("CMODE"),
-      R.dbl(3, 0.0).as("ORAT"), R.dbl(4, 0.0).as("WRAT"), R.dbl(5, 0.0).as("GRAT"),
-      R.dbl(6, 0.0).as("LRAT"), R.dbl(7, 0.0).as("RESV"), R.dbl(8, 1.01325).as("BHP"),
-      R.dbl(9, 0.0).as("THP"), R.int(10, 0).as("VFP_TABLE"), R.dbl(11, 0.0).as("ALQ")): _*)
-    val hist = base("WCONHIST").select(head ++ Seq(lit("WCONHIST").as("KEYWORD"), col("DATE"),
-      R.str(0).as("WELL"), R.str(1, "OPEN").as("STATUS"), R.str(2).as("CMODE"),
-      R.dbl(3, 0.0).as("ORAT"), R.dbl(4, 0.0).as("WRAT"), R.dbl(5, 0.0).as("GRAT"),
-      R.int(6, 0).as("VFP_TABLE"), R.dbl(7, 0.0).as("ALQ"), R.dbl(8, 0.0).as("THP"),
-      R.dbl(9, 0.0).as("BHP"), R.dbl(10, 0.0).as("NGLRAT")): _*)
-    val inje = base("WCONINJE").select(head ++ Seq(lit("WCONINJE").as("KEYWORD"), col("DATE"),
-      R.str(0).as("WELL"), R.str(1).as("TYPE"), R.str(2, "OPEN").as("STATUS"),
-      R.str(3).as("CMODE"), R.dbl(4).as("RATE"), R.dbl(5).as("RESV"),
-      R.dbl(6, 6895.0).as("BHP"), R.dbl(7).as("THP"), R.int(8, 0).as("VFP_TABLE")): _*)
-    val injh = base("WCONINJH").select(head ++ Seq(lit("WCONINJH").as("KEYWORD"), col("DATE"),
-      R.str(0).as("WELL"), R.str(1).as("TYPE"), R.str(2, "OPEN").as("STATUS"),
-      R.dbl(3).as("RATE"), R.dbl(4).as("BHP"), R.dbl(5).as("THP"),
-      R.int(6, 0).as("VFP_TABLE"), R.str(11, "RATE").as("CMODE")): _*)
-    prod.unionByName(hist, allowMissingColumns = true)
-      .unionByName(inje, allowMissingColumns = true)
-      .unionByName(injh, allowMissingColumns = true)
-      .orderBy((if (keepDeckId) dk.map(col) else Nil) ++
-        Seq(col("DATE"), col("WELL"), col("KEYWORD")): _*)
+    val dated = Schedule.perDeck(walkEvents(events))(walkDeck).toDF()
+    present(Ops.sortAfterHeavyStage(dated, "deckId", "DATE", "rec.WELL", "rec.KEYWORD",
+      "keywordIdx", "recordIdx"), keepDeckId && Schedule.deckKeys(events).nonEmpty)
+  }
+
+  private def present(dated: DataFrame, keepDeckId: Boolean): DataFrame =
+    dated.select((if (keepDeckId) Seq(col("deckId")) else Nil) ++ Seq(col("rec.KEYWORD").as("KEYWORD"),
+      timestamp_micros(col("DATE")).as("DATE")) ++ Fields.map(f => col(s"rec.$f").as(f)): _*)
+
+  /** The walk's input: the clock columns plus the typed control record. */
+  private def walkEvents(events: DataFrame): Dataset[WalkEvent] = {
+    import events.sparkSession.implicits._
+    val kw = col("keyword")
+    val fields = Fields.map(f => Readers.foldLeft(lit(null)) { case (other, (k, items)) =>
+      items.get(f).fold(other)(c => when(kw === k, c).otherwise(other))
+    }.as(f))
+    events.filter(kw.isin(Schedule.ClockKeywords ++ Readers.map(_._1): _*))
+      .select(Schedule.eventColumns(events) :+
+        when(kw.isin(Readers.map(_._1): _*) && size(col("items")) > 0,
+          struct(kw.as("KEYWORD") +: fields: _*)).as("rec"): _*)
+      .as[WalkEvent]
+  }
+
+  private val OutputOrder: Ordering[Dated] =
+    Ordering.by((d: Dated) => (d.DATE, d.rec.WELL, d.rec.KEYWORD, d.keywordIdx, d.recordIdx))(
+      Ordering.Tuple5(Ordering.Option[Long], Ordering.Option(Schedule.BinaryOrder),
+        Schedule.BinaryOrder, Ordering.Int, Ordering.Int))
+
+  /** One deck's control records, dated, in output order. */
+  private[modules] def walkDeck(events: Iterable[WalkEvent], zone: ZoneId): Iterator[Dated] = {
+    val out = Vector.newBuilder[Dated]
+    Schedule.walk(events, zone) { (records, date) =>
+      records.foreach(e => e.rec.foreach(r => out += Dated(e.deckId, e.keywordIdx, e.recordIdx, date, r)))
+    }
+    out.result().sorted(OutputOrder).iterator
   }
 }

@@ -4,9 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Reservoir-module pipeline with a DuckDB oracle: a generated corpus of
-  * [[CorpusDecks]] schedule decks runs through the CORPUS-NATIVE compdat
-  * pipeline (one multi-deck frame, every operator keyed on (deckId,
-  * WELL)), and the oracle replays each operator relationally in SQL from
+  * [[CorpusDecks]] schedule decks runs through the corpus compdat
+  * pipeline (one multi-deck frame, one deck walk per deckId), and the
+  * oracle replays each rule relationally in SQL from
   * the same closed-form event corpus: forward-filled schedule clock (A8),
   * WELSPECS as-of header fill (J9), K1–K2 unroll (R1), wildcard WELOPEN
   * expansion (J10) and last-wins state collapse (R11/W7) — the reference's

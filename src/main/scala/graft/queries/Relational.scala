@@ -62,9 +62,9 @@ object Relational {
 
   // ---- §2.3 J9-J12: as-of join (latest right row with ts <= left ts) -----
   // Union-and-forward-fill formulation (Ops.asofJoinUnion): O(n log n) with
-  // one shuffle on the key — the join+window variant (Ops.asofJoinLe)
-  // degenerates to a per-key cartesian when both sides are large. This is
-  // the 100 TB as-of shape.
+  // one shuffle on the key — a join + row_number variant degenerates to a
+  // per-key cartesian when both sides are large. This is the 100 TB as-of
+  // shape.
   def q04Asof(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
     val purchases = ev.filter(col("event_type") === "purchase")

@@ -310,44 +310,4 @@ object EventStreams {
   }
 
   case class Ev(event_id: Long, ts: Timestamp, user_id: Long, event_type: String, value: Double)
-  case class SessionState(start: Timestamp, last: Timestamp, n: Long, total: Double)
-  case class ClosedSession(user_id: Long, session_start: Timestamp, session_end: Timestamp,
-      n_events: Long, total_value: Double)
-
-  /** Gap-based sessionization with explicit state (the streaming analog of
-    * Ops.sessionize): closes a session when the processing-time timeout
-    * fires after `gapSeconds` of silence per user.
-    */
-  def sessionized(events: Dataset[Ev], gapSeconds: Long): Dataset[ClosedSession] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout)(
-        (user: Long, rows: Iterator[Ev], state: GroupState[SessionState]) => {
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator(ClosedSession(user, s.start, s.last, s.n, s.total))
-          } else {
-            val sorted = rows.toSeq.sortBy(_.ts.getTime)
-            var closed = List.empty[ClosedSession]
-            var cur = state.getOption
-            sorted.foreach { e =>
-              cur match {
-                case Some(s) if e.ts.getTime - s.last.getTime <= gapSeconds * 1000 =>
-                  cur = Some(s.copy(last = e.ts, n = s.n + 1, total = s.total + e.value))
-                case Some(s) =>
-                  closed ::= ClosedSession(user, s.start, s.last, s.n, s.total)
-                  cur = Some(SessionState(e.ts, e.ts, 1, e.value))
-                case None =>
-                  cur = Some(SessionState(e.ts, e.ts, 1, e.value))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              state.setTimeoutDuration(gapSeconds * 1000)
-            }
-            closed.reverseIterator
-          }
-        })
-  }
 }

@@ -2455,7 +2455,6 @@ class GateQueriesSpec extends AnyFunSuite {
   }
 
   test("q208: the scrubbed text drops exactly the clipped spans, first copy intact") {
-    import org.apache.spark.sql.functions.col
     val A = (1 to 20).map(i => s"a$i")
     val T = (1 to 14).map(i => s"t$i") // doc 4 is a verbatim copy of doc 5's text
     val docs = Seq(
