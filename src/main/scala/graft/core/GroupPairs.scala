@@ -15,11 +15,10 @@ import org.apache.spark.sql.functions._
   * partition's output.
   *
   * The plan:
-  *   1. One small aggregate counts each group. The hot keys, groups of
-  *      more than [[BlockSize]] members, join back by broadcast with
-  *      their block count `B = ⌈g / BlockSize⌉`; every other group has
-  *      `B = 1`. Each hot key stands for more than [[BlockSize]] input
-  *      rows, so the broadcast holds under 1/256 of the input's rows.
+  *   1. Each row carries its group's size bound, the same on every row
+  *      of the key ([[bounded]]; [[apply]] counts the groups), and the
+  *      group has `B = ⌈bound / BlockSize⌉` blocks, at least 1. A bound
+  *      over the group's size only adds cells.
   *   2. A member goes to block `b = pmod(id, B)` and is copied to its
   *      `B` cells `(min(b, j), max(b, j))`, `j = 0 … B−1`. In a cell
   *      `(ba, bb)` with `ba < bb`, the members of block `ba` are its left
@@ -33,7 +32,8 @@ import org.apache.spark.sql.functions._
   *      cell yields left × right, and the caller always gets the pair
   *      with the lower id first.
   *
-  * Exactly once: take two members x, y of one group, in blocks bx, by.
+  * Exactly once, for any B ≥ 1: take two members x, y of one group, in
+  * blocks bx, by.
   *   - `bx = by = b`: both are in the cells `(min(b, j), max(b, j))` for
   *     every j. For j = b that is the same-block cell `(b, b)`, where the
   *     upper triangle yields the pair once. For j ≠ b both sit on the
@@ -85,25 +85,35 @@ object GroupPairs {
   }
 
   /** Run `f` over every cell of every group of `rows` and emit what it
-    * returns. */
-  def apply[K, P, O: Encoder](rows: Dataset[(K, Long, P)])(f: Cell[K, P] => Iterator[O])
-      : Dataset[O] = {
+    * returns. One aggregate counts the groups; those of more than
+    * [[BlockSize]] members (under 1/256 of the rows) join back by
+    * broadcast with their count as the bound, the others' bound is 1. */
+  def apply[K: Encoder, P: Encoder, O: Encoder](rows: Dataset[(K, Long, P)])
+      (f: Cell[K, P] => Iterator[O]): Dataset[O] = {
     val m = rows.toDF("key", "id", "payload")
-    val hot = m.groupBy(col("key")).agg(count(lit(1)).as("g"))
-      .filter(col("g") > BlockSize)
-      .select(col("key"), ceil(col("g") / BlockSize).cast("int").as("nb"))
-    val nb = coalesce(col("nb"), lit(1))
-    m.join(broadcast(hot), Seq("key"), "left")
-      .select(col("key"), col("id"), col("payload"),
-        pmod(col("id"), nb.cast("long")).cast("int").as("blk"),
+    val hot = m.groupBy(col("key")).agg(count(lit(1)).as("g")).filter(col("g") > BlockSize)
+    bounded(m.join(broadcast(hot), Seq("key"), "left").na.fill(1L, Seq("g"))
+      .toDF("_1", "_2", "_3", "_4").as(Encoders.tuple(implicitly[Encoder[K]], Encoders.scalaLong,
+        implicitly[Encoder[P]], Encoders.scalaLong)))(f)
+  }
+
+  /** Run `f` over every cell of every group of `rows`, `(key, id,
+    * payload, bound)` rows whose `bound` is the same on every row of a
+    * key and at least its member count, and emit what it returns. */
+  def bounded[K, P, O: Encoder](rows: Dataset[(K, Long, P, Long)])
+      (f: Cell[K, P] => Iterator[O]): Dataset[O] = {
+    val m = rows.toDF("key", "id", "payload", "bound")
+    val nb = greatest(ceil(col("bound") / BlockSize), lit(1L)).cast("int")
+    m.select(col("*"), pmod(col("id"), nb.cast("long")).cast("int").as("blk"),
         explode(sequence(lit(0), nb - 1)).as("j"))
-      .select(col("key"), col("id"), col("payload"),
+      .select(col("key"), col("id"), col("payload"), col("bound"),
         least(col("blk"), col("j")).as("ba"), greatest(col("blk"), col("j")).as("bb"),
         (col("blk") > col("j")).as("right"))
       .repartition(m.sparkSession.sparkContext.defaultParallelism,
         col("key"), col("ba"), col("bb"))
       .sortWithinPartitions(col("key"), col("ba"), col("bb"), col("right"), col("id"))
-      .select(struct(col("key").as("_1"), col("id").as("_2"), col("payload").as("_3")).as("_1"),
+      .select(struct(col("key").as("_1"), col("id").as("_2"), col("payload").as("_3"),
+        col("bound").as("_4")).as("_1"),
         col("ba").as("_2"), col("bb").as("_3"), col("right").as("_4"))
       .as(Encoders.tuple(rows.encoder, Encoders.scalaInt, Encoders.scalaInt,
         Encoders.scalaBoolean))
@@ -111,17 +121,17 @@ object GroupPairs {
   }
 
   /** A partition sorted by `(key, ba, bb, right, id)`, cut into cells. */
-  private def cells[K, P](in: BufferedIterator[((K, Long, P), Int, Int, Boolean)])
+  private def cells[K, P](in: BufferedIterator[((K, Long, P, Long), Int, Int, Boolean)])
       : Iterator[Cell[K, P]] =
     new Iterator[Cell[K, P]] {
       def hasNext: Boolean = in.hasNext
       def next(): Cell[K, P] = {
-        val ((key, _, _), ba, bb, _) = in.head
+        val ((key, _, _, _), ba, bb, _) = in.head
         val ids = Array.newBuilder[Long]
         val pays = ArrayBuffer.empty[P]
         var n = 0; var split = -1
         while (in.hasNext && in.head._2 == ba && in.head._3 == bb && in.head._1._1 == key) {
-          val ((_, id, p), _, _, right) = in.next()
+          val ((_, id, p, _), _, _, right) = in.next()
           if (right && split < 0) split = n
           ids += id; pays += p; n += 1
         }

@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
 object SetSimJoin {
 
   /** Every pair of documents whose distinct-token sets reach Jaccard
-    * ≥ 1/2, found without all-pairs work and without missing a pair.
+    * ≥ p/q (0 < p < q ≤ Int.MaxValue), found without all-pairs work and
+    * without missing a pair.
     *
     * Input: distinct `(doc_id, tok)` rows (`doc_id` integral, `tok` any
     * orderable type). Output: `(doc_a, doc_b, inter, sa, sb)`, all long,
@@ -21,7 +22,7 @@ object SetSimJoin {
     *
     * The algorithm:
     *   1. An exact dense int dictionary ranks tokens by ascending
-    *      document frequency, ties by token (`zipWithIndex` over one
+    *      document frequency `dfc`, ties by token (`zipWithIndex` over one
     *      global sort, so ids are injective and ascending id IS the
     *      prefix order). The ranked rows are one token-keyed aggregate
     *      that also collects each token's postings, so numbering a token
@@ -29,21 +30,22 @@ object SetSimJoin {
     *      The eager `localCheckpoint` pins the sampled range boundaries,
     *      so a task retry can never re-derive a different id assignment.
     *   2. Each document becomes one sorted `Array[Int]` set. Its PREFIX
-    *      is the first `sz − ⌈sz/2⌉ + 1` ids. If two sets reach
-    *      Jaccard ≥ 1/2, the smallest id they share lies in both
-    *      prefixes: the `o ≥ |x ∪ y|/2 ≥ ⌈|x|/2⌉` shared ids all sit at
-    *      or after it in `x`, so at most `|x| − ⌈|x|/2⌉` ids precede it
-    *      (and likewise in `y`).
-    *   3. Every prefix id becomes one posting that carries the whole
-    *      set, and [[GroupPairs]] walks each id's postings: one exchange
-    *      keyed by id, a hot id's group spread over blocks.
-    *   4. A pair is a candidate when `2·min ≥ max` in size (Jaccard is
+    *      is the first `sz − ⌈p·sz/q⌉ + 1` ids. If two sets reach
+    *      Jaccard ≥ p/q, the smallest id they share lies in both
+    *      prefixes: the `o ≥ p·|x ∪ y|/q ≥ ⌈p·|x|/q⌉` shared ids all sit
+    *      at or after it in `x`, so at most `|x| − ⌈p·|x|/q⌉` ids precede
+    *      it (and likewise in `y`).
+    *   3. Every prefix id of `dfc > 1` (a token of one document pairs
+    *      with nothing) posts the whole set, and [[GroupPairs.bounded]]
+    *      walks each id's postings in one exchange keyed by id, a hot
+    *      group over blocks, with `dfc` as its size bound: no count runs.
+    *   4. A pair is a candidate when `q·min ≥ p·max` in size (Jaccard is
     *      at most min/max). It is emitted only from the group of the
     *      smallest id the two sets share, which is in both prefixes by
     *      step 2 — so every pair is emitted exactly once and no
     *      `distinct` is needed. A two-pointer intersection checks that
     *      rule and counts `inter`, and the threshold is decided in
-    *      integers (`3·inter ≥ sa + sb`), so no float sits on the
+    *      longs (`(p+q)·inter ≥ p·(sa+sb)`), so no float sits on the
     *      keep/drop boundary.
     *
     * Cost: a group of g postings costs O(g²) pair checks, the same as a
@@ -54,36 +56,37 @@ object SetSimJoin {
     * so the most frequent token's document count (one long each) bounds
     * the largest row.
     */
-  def jaccardHalf(tokens: DataFrame): DataFrame = {
+  def jaccard(tokens: DataFrame, p: Long, q: Long): DataFrame = {
+    require(0 < p && p < q && q <= Int.MaxValue, s"Jaccard threshold $p/$q not in (0, 1)")
     val s = tokens.sparkSession
     import s.implicits._
     val postings = tokens
       .groupBy(col("tok"))
       .agg(count(lit(1)).as("dfc"), collect_list(col("doc_id").cast("long")).as("docs"))
-      .orderBy(col("dfc"), col("tok")).select(col("docs")).rdd.zipWithIndex
+      .orderBy(col("dfc"), col("tok")).select(col("docs"), col("dfc")).rdd.zipWithIndex
       .flatMap { case (r, i) =>
         if (i > Int.MaxValue.toLong) throw new IllegalStateException(
           s"token dictionary exceeds Int range ($i) — widen ids to long")
-        r.getSeq[Long](0).map(d => (d, i.toInt))
+        r.getSeq[Long](0).map(d => (d, i.toInt, r.getLong(1)))
       }
-      .toDF("doc_id", "tid")
+      .toDF("doc_id", "tid", "dfc")
       .localCheckpoint(true)
-    val sets = postings
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(col("tid"))).as("st"))
-      .select(explode(expr("slice(st, 1, size(st) - (size(st) + 1) div 2 + 1)")).as("tid"),
-        col("doc_id"), col("st"))
-      .as[(Int, Long, Array[Int])]
-    GroupPairs(sets)(c => c.pairs(verify(c.key, _, _, _, _)))
+    val sets = postings.as[(Long, Int, Long)].groupByKey(_._1).flatMapGroups { (doc, ps) =>
+      val td = ps.map(r => (r._2, r._3)).toArray.sortBy(_._1)
+      val st = td.map(_._1)
+      td.iterator.take(st.length - ((p * st.length + q - 1) / q).toInt + 1)
+        .collect { case (tid, dfc) if dfc > 1 => (tid, doc, st, dfc) }
+    }
+    GroupPairs.bounded(sets)(c => c.pairs(verify(c.key, p, q, _, _, _, _)))
       .toDF("doc_a", "doc_b", "inter", "sa", "sb")
   }
 
   /** The pair `(a, b)` (`a < b`) of sets `x`, `y` from the group of
     * `tid`: `Some` iff the sizes pass the length filter, `tid` is the
-    * smallest id the sets share, and their Jaccard is ≥ 1/2. */
-  private def verify(tid: Int, a: Long, x: Array[Int], b: Long, y: Array[Int])
+    * smallest id the sets share, and their Jaccard is ≥ p/q. */
+  private def verify(tid: Int, p: Long, q: Long, a: Long, x: Array[Int], b: Long, y: Array[Int])
       : Option[(Long, Long, Long, Long, Long)] =
-    if (2 * math.min(x.length, y.length) < math.max(x.length, y.length)) None
+    if (q * math.min(x.length, y.length) < p * math.max(x.length, y.length)) None
     else {
       var i = 0; var j = 0; var inter = 0
       var first = true
@@ -96,7 +99,7 @@ object SetSimJoin {
           inter += 1; i += 1; j += 1
         }
       }
-      if (3L * inter >= x.length + y.length)
+      if ((p + q) * inter >= p * (x.length.toLong + y.length))
         Some((a, b, inter.toLong, x.length.toLong, y.length.toLong))
       else None
     }

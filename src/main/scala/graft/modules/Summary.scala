@@ -283,8 +283,9 @@ object Summary {
     wide.select(cols.toIndexedSeq: _*)
   }
 
-  /** Crop to [start, end], force-including boundary rows if present
-    * (reference _crop_datelist, summary.py:88-127).
+  /** The rows whose `DATE` lies in [start, end], both bounds inclusive;
+    * no row is added or moved (the reference's _crop_datelist window,
+    * summary.py:88-127).
     */
   def cropDates(df: DataFrame, start: Column, end: Column): DataFrame =
     df.filter(col("DATE").between(start, end))

@@ -182,16 +182,6 @@ object DedupSim {
     }
   }
 
-  /** Token-set Jaccard near-dup. This corpus has a tiny vocabulary
-    * (≤64 distinct tokens), so each document's distinct-token set packs
-    * into one 64-bit mask (vocabulary index built at runtime, bit_or
-    * aggregate) and Jaccard becomes codegen'd integer bit math:
-    * popcount(a&b)/popcount(a|b). The pair space is walked over *distinct
-    * masks* (deduped set shapes), then expanded back to qualifying doc
-    * pairs — interpreted array ops never run per pair. For open
-    * vocabularies the MinHash path (q26) is the scale route; a postings
-    * prefix-filter join is the exact-threshold route.
-    */
   /** One 64-bit token-presence mask per doc over the [[docTokenBits]]
     * dictionary view — the O(1) popcount-Jaccard operand (q25, q91,
     * q103). INVARIANT: the dictionary must fit in 64 bits; `shiftleft`
@@ -205,6 +195,17 @@ object DedupSim {
       .groupBy(col("doc_id"))
       .agg(expr("bit_or(shiftleft(1L, cast(bit AS int)))").as("mask"))
 
+  /** Token-set Jaccard near-dup. This corpus has a tiny vocabulary
+    * (≤64 distinct tokens), so each document's distinct-token set packs
+    * into one 64-bit mask (vocabulary index built at runtime, bit_or
+    * aggregate) and Jaccard becomes codegen'd integer bit math:
+    * popcount(a&b)/popcount(a|b). The pair space is walked over *distinct
+    * masks* (deduped set shapes), then expanded back to qualifying doc
+    * pairs — interpreted array ops never run per pair. For open
+    * vocabularies the MinHash path (q26) is the scale route, and
+    * [[graft.core.SetSimJoin.jaccard]] the exact-threshold route (here
+    * slower: it walks documents, not distinct masks).
+    */
   def q25Jaccard(s: SparkSession, dir: String): DataFrame = {
     val masks = docTokenMasks(s, dir)
     val dm = masks.select(col("mask")).distinct()
@@ -1047,9 +1048,9 @@ object DedupSim {
   private val NgramN = 3
   private val NgramThreshold = 0.5
   // stop-shingle cap: shingles present in more than max(Floor, corpus/Frac)
-  // documents are dropped from the postings before the self-join — the head
-  // of the df distribution is the skew killer (one shingle with df=d
-  // contributes d² join pairs). NOT a lossless filter: similarity is then
+  // documents are dropped from the postings before the join — the head
+  // of the df distribution is the skew killer (a shingle with df=d can
+  // head a d-member prefix group). NOT a lossless filter: similarity is then
   // measured over the capped shingle space, so pairs alike only through
   // corpus-wide boilerplate intentionally stop qualifying (see the
   // ngramJaccard scaladoc; the oracle applies the same cap).
@@ -1061,10 +1062,10 @@ object DedupSim {
     * token ARRAY in one narrow projection (transform over an index
     * sequence — no per-doc window shuffle+sort, no separate distinct
     * exchange; array_distinct dedupes in place), then an EXACT
-    * set-similarity join in postings form: self-join on the shingle key
-    * computes every co-occurring pair's intersection size as a count,
-    * post-cap sizes join in, and the Jaccard threshold filters. Cost is
-    * linear in shingle CO-OCCURRENCE (Σ df(shingle)²), not all-pairs —
+    * set-similarity join over the capped shingle sets (prefix filtering
+    * by [[graft.core.SetSimJoin.jaccard]] just under 0.5, then the same
+    * 6-decimal rounded filter at 0.5 as the oracle), which walks only the
+    * pairs sharing a prefix shingle, not every co-occurring pair —
     * the standard exact path when the shingle space is open (no bitmask)
     * and candidates must not be missed (no MinHash approximation).
     *
@@ -1090,11 +1091,9 @@ object DedupSim {
     val shingleArr = expr(
       s"transform(sequence(0, size(t) - $NgramN), i -> " +
         (0 until NgramN).map(k => s"t[i + $k]").mkString("concat_ws(' ', ", ", ", "))"))
-    // The postings table is the hub of the whole query — it feeds the
-    // df-cap aggregate (plus its logged count), the anti-join, the sizes
-    // aggregate and both sides of the self-join. Materialize it ONCE
-    // (executor-local blocks, spillable; the parquet-temp equivalent at
-    // corpus scale) instead of re-deriving the scan+explode per consumer.
+    // The postings feed the df-cap aggregate (plus its logged count) and
+    // the join: materialize them ONCE (executor-local blocks, spillable)
+    // instead of re-deriving the scan+explode per consumer.
     val sh = docs
       .select(col("doc_id"), tokens(col("text")).as("t"))
       .select(col("doc_id"),
@@ -1121,26 +1120,13 @@ object DedupSim {
     val kept =
       if (stop.isEmpty) sh
       else sh.filter(!col("shingle").isInCollection(stop))
-    val sizes = kept.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    // shuffle_hash, not broadcast/SMJ: both sides are the same postings
-    // table — hash-partition on the shingle key and build per-partition
-    // maps (3x faster than the size-estimated broadcast here; no sort).
-    // The df cap bounds per-key fanout; the per-partition build side is
-    // postings/nPartitions, so scale by raising shuffle partitions with
-    // the corpus (drop the hint for spillable SMJ if a slice can't fit).
-    val inter = kept.select(col("doc_id").as("doc_a"), col("shingle"))
-      .join(kept.select(col("doc_id").as("doc_b"), col("shingle")).hint("shuffle_hash"),
-        Seq("shingle"))
-      .filter(col("doc_a") < col("doc_b"))
-      .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("i"))
-    inter
-      .join(broadcast(sizes.select(col("doc_id").as("doc_a"), col("n").as("na"))), Seq("doc_a"))
-      .join(broadcast(sizes.select(col("doc_id").as("doc_b"), col("n").as("nb"))), Seq("doc_b"))
+    // 49999/100000 is under 0.4999995, the least ratio that rounds to 0.5
+    val pairs = SetSimJoin.jaccard(kept.select(col("doc_id"), col("shingle").as("tok")), 49999, 100000)
       .withColumn("jaccard",
-        round(col("i").cast("double") / (col("na") + col("nb") - col("i")), 6))
+        round(col("inter").cast("double") / (col("sa") + col("sb") - col("inter")), 6))
       .filter(col("jaccard") >= NgramThreshold)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
-      .orderBy(col("doc_a"), col("doc_b"))
+    Ops.sortAfterHeavyStage(pairs, "doc_a", "doc_b")
   }
 
   /** q40 oracle: identical capped shingle postings join in DuckDB — the
@@ -2000,12 +1986,12 @@ object DedupSim {
     * share a token — in fact the rarest token they share lies in both
     * prefixes.
     *
-    * Kernel ([[graft.core.SetSimJoin.jaccardHalf]], τ = 1/2): an exact
-    * int dictionary in (df, token) order, one sorted int set per doc,
-    * and one posting per prefix token carrying the whole set. ONE
-    * exchange groups the postings by token; one pass per token group
-    * applies the length filter (2·min ≥ max), intersects the two sorted
-    * sets with two pointers and keeps 3·|∩| ≥ |a|+|b| in integers.
+    * Kernel ([[graft.core.SetSimJoin.jaccard]] at 1/2): an exact int
+    * dictionary in (df, token) order, one sorted int set per doc, and
+    * one posting per prefix token carrying the whole set. ONE exchange
+    * groups the postings by token; one pass per token group applies the
+    * length filter (2·min ≥ max), intersects the two sorted sets with
+    * two pointers and keeps 3·|∩| ≥ |a|+|b| in integers.
     * Exactly-once rule: a pair is emitted only from the group of the
     * first (rarest) token the two sets share, so no `distinct` and no
     * join back to the sets runs.
@@ -2022,7 +2008,7 @@ object DedupSim {
     val tok = Tables.documents(s, dir)
       .select(col("doc_id"), explode(array_distinct(tokens(col("text")))).as("tok"))
       .filter(length(col("tok")) > 0)
-    val pairs = SetSimJoin.jaccardHalf(tok)
+    val pairs = SetSimJoin.jaccard(tok, 1, 2)
       .withColumn("jaccard", round(col("inter").cast("double")
         / (col("sa") + col("sb") - col("inter")).cast("double"), 6))
     Ops.sortAfterHeavyStage(pairs, "doc_a", "doc_b")

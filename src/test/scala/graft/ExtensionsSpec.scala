@@ -283,6 +283,19 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(rt == "2*1 3.5")
   }
 
+  test("include writer: a grid vector is ordered by its index column, RLE'd and wrapped") {
+    // 12 cells given out of order: index 0..11 holds 5×1.0, 2.5, 2×3.0,
+    // then 0..3 singly; runs of 2 or more become N*value
+    val vals = Seq(1.0, 1.0, 1.0, 1.0, 1.0, 2.5, 3.0, 3.0, 0.0, 1.0, 2.0, 3.0)
+    val df = new scala.util.Random(5).shuffle(vals.zipWithIndex).toDF("PORO", "IDX")
+    assert(IncludeWriter.gridVector(df, "PORO", "IDX", "PORO") ==
+      "PORO\n5*1 2.5 2*3 0 1 2 3\n/\n")
+    // 14 distinct tokens: ten on the first line, four on the next
+    val wide = (0 until 14).map(i => (i.toDouble, i.toLong)).toDF("NTG", "IDX")
+    assert(IncludeWriter.gridVector(wide, "NTG", "IDX", "NTG") ==
+      "NTG\n0 1 2 3 4 5 6 7 8 9\n10 11 12 13\n/\n")
+  }
+
   test("include writer round-trip: table text reparses to the same records") {
     val df = Seq(("OP1", 1, 1, 1, 2, "OPEN"), ("OP2", 2, 2, 1, 1, "SHUT"))
       .toDF("WELL", "I", "J", "K1", "K2", "OPSH")

@@ -2073,6 +2073,18 @@ class GateQueriesSpec extends AnyFunSuite {
     val hash = plan.indexOf("Exchange hashpartitioning(doc_a")
     val kernel = plan.indexOf("MapPartitions graft.core.GroupPairs")
     assert(range >= 0 && range < hash && hash < kernel, plan)
+    // each token's df bounds its prefix group, so no count of the groups
+    // joins back by broadcast under the walk
+    assert(!plan.contains("BroadcastHashJoin"), plan)
+  }
+
+  test("q40 plan: the capped shingles go through the prefix-filter kernel, no postings self-join") {
+    val q = graft.queries.DedupSim.q40NgramJaccard(spark, Sf)
+    q.collect()
+    val plan = PlanText.finalPlanOf(q)
+    assert(plan.contains("MapPartitions graft.core.GroupPairs"), plan)
+    assert(!plan.contains("ShuffledHashJoin") && !plan.contains("SortMergeJoin"), plan)
+    assert(!raw"Aggregate\(keys=\[doc_a#\d+L?, doc_b".r.findFirstIn(plan).isDefined, plan)
   }
 
   test("q197: uptime islands follow the phase lattice exactly") {

@@ -87,4 +87,34 @@ class GroupPairsSpec extends AnyFunSuite {
       .collect().toSeq
     checkPairs(got, brute(rows))
   }
+
+  /** `(key, id, payload, bound)` rows: key k holds the ids of `groups(k)`
+    * and carries its bound on every row. */
+  private def boundedRows(groups: Seq[(Seq[Long], Long)]): Seq[(Int, Long, Long, Long)] =
+    groups.zipWithIndex.flatMap { case ((ids, bound), k) => ids.map(id => (k, id, id % 7, bound)) }
+
+  test("bounded: every pair exactly once, lower id first, whatever the bound") {
+    val rng = new scala.util.Random(5)
+    def ids(g: Int): Seq[Long] =
+      Iterator.continually(rng.nextInt(200000).toLong - 50000).distinct.take(g).toSeq
+    val rows = boundedRows(Seq(
+      ids(5) -> 1000L,    // far above: B = 4 for five members
+      ids(2) -> 10000L,   // B = 40, most blocks empty
+      ids(256) -> 256L,   // B = 1
+      ids(256) -> 257L,   // B = 2 for a group that would fit one block
+      ids(257) -> 257L,   // B = 2
+      ids(1) -> 300L))    // one member, no pair
+    val got = GroupPairs.bounded(rows.toDS())(c => c.pairs((a, _, b, _) => Some((c.key, a, b))))
+      .collect().toSeq
+    checkPairs(got, brute(rows.map(r => (r._1, r._2, r._3))))
+  }
+
+  test("bounded: a group's bound sets its B(B+1)/2 cells") {
+    // consecutive ids fill every block, so every cell has members
+    val groups = Seq(40 -> 1000L, 256 -> 256L, 256 -> 257L, 600 -> 600L, 100 -> 2560L)
+    val rows = boundedRows(groups.map { case (g, b) => (0L until g).toSeq -> b })
+    val cells = GroupPairs.bounded(rows.toDS())(c => Iterator(c.key)).collect().toSeq
+      .groupBy(identity).map { case (k, cs) => k -> cs.size }
+    assert(cells == Map(0 -> 10, 1 -> 1, 2 -> 3, 3 -> 6, 4 -> 55))
+  }
 }

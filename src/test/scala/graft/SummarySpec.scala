@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
+import org.apache.spark.sql.functions.lit
 import graft.modules.Summary
 
 class SummarySpec extends AnyFunSuite {
@@ -180,6 +181,14 @@ class SummarySpec extends AnyFunSuite {
     // values pass through untouched
     assert(restored.agg(sum("FOPR")).collect().head.getDouble(0) ==
       computed.agg(sum("FOPR")).collect().head.getDouble(0))
+  }
+
+  test("cropDates keeps both boundary dates and nothing outside them") {
+    val days = Seq("2000-01-14", "2000-01-15", "2000-02-01", "2000-03-15", "2000-03-16")
+      .map(d => ("FOPT", ts(s"$d 00:00:00"), 1.0)).toDF("VECTOR", "DATE", "VALUE")
+    val out = Summary.cropDates(days, lit(ts("2000-01-15 00:00:00")), lit(ts("2000-03-15 00:00:00")))
+      .collect().map(_.getTimestamp(1).toString).sorted.toSeq
+    assert(out == Seq("2000-01-15 00:00:00.0", "2000-02-01 00:00:00.0", "2000-03-15 00:00:00.0"))
   }
 
   test("toWide pivots vectors into columns") {

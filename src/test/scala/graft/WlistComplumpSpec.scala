@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.modules.{Compdat, Schedule}
+import graft.modules.Compdat
 import graft.io.DeckParser
 
 class WlistComplumpSpec extends AnyFunSuite {
