@@ -82,8 +82,8 @@ object EclBinary {
   }
 
   /** One EGRID's parsed state, decodable on the driver (the single-case
-    * [[egrid]] plan) or inside one executor task (the [[gridFleet]]
-    * ensemble read — plain java.io over shared storage).
+    * [[egrid]] plan) or inside one executor task (the `eclipse-egrid`
+    * fleet scan — plain java.io over shared storage).
     */
   private final case class EgridCase(nx: Int, ny: Int, nz: Int,
       coord: Array[Float], zcorn: Array[Float], actnum: Array[Int],
@@ -143,8 +143,8 @@ object EclBinary {
   }
 
   /** The per-slab geometry kernel shared by [[egrid]]'s slab tasks and
-    * [[gridFleet]]'s per-case tasks: corner-point pillar interpolation,
-    * 8-corner center mean, 24-tetrahedron volume, active-ordinal rows.
+    * [[gridCaseRows]]: corner-point pillar interpolation, 8-corner
+    * center mean, 24-tetrahedron volume, active-ordinal rows.
     */
   private def cellRows(sl: GridSlab, coordA: Array[Float],
       mapx: Option[(Double, Double, Double, Double, Double, Double)]): Iterator[Row] =
@@ -184,43 +184,12 @@ object EclBinary {
       }
     }
 
-  /** Ensemble grid read (S3/S4 at fleet scale): every case matching the
-    * glob — `realizations/&#42;/CASE.EGRID` is the reference users'
-    * layout, 100–1000 realizations per ensemble — decoded in ONE distributed
-    * plan, one task per case, EGRID + INIT parsed EXECUTOR-side (plain
-    * java.io over shared storage, the same convention as the UNSMRY
-    * fleet read). `vectors` are EXACT INIT vector names (not globs —
-    * the unioned schema must be fixed before any file is opened);
-    * vectors missing in a case's INIT surface as nulls. Per-task state
-    * is one realization's arrays — the ensemble axis is the parallel
-    * unit, matching how a 1000-realization history-match actually runs.
-    */
-  def gridFleet(spark: SparkSession, pattern: String, vectors: Seq[String] = Nil,
-      applyMapaxes: Boolean = false): DataFrame = {
-    import graft.io.datasource.DeckScan
-    val paths = DeckScan.splitPaths(pattern)
-      .flatMap(p => DeckScan.expand(p, ext = ".EGRID"))
-      .filter(_.toUpperCase.endsWith(".EGRID"))
-      .distinct.sorted
-    require(paths.nonEmpty, s"no .EGRID files match $pattern")
-    val vecNames = vectors.map(_.toUpperCase)
-    val schema = StructType(
-      StructField("CASE", StringType, nullable = false) +:
-        (GeomSchema.fields.toSeq ++
-          vecNames.map(v => StructField(v, DoubleType, nullable = true))))
-    val par = math.max(1, math.min(paths.length, spark.sparkContext.defaultParallelism))
-    val rows = spark.sparkContext.parallelize(paths, par)
-      .flatMap(path => gridCaseRows(path, vecNames, applyMapaxes))
-    spark.createDataFrame(rows, schema)
-  }
-
   /** One EGRID+INIT case decoded to `(CASE, geom…, vec…)` rows — the
-    * per-case kernel shared by [[gridFleet]]'s RDD tasks and the
-    * `eclipse-egrid` DataSourceV2 partition readers (one decode path, so
-    * the SQL-reachable format can never diverge from the fleet read).
-    * Takes the EGRID file path AS LISTED (never re-derives the
-    * extension, so a lowercase `.egrid` opens on a case-sensitive
-    * filesystem); CASE = the path minus its 6-char extension; the INIT
+    * per-case kernel of the `eclipse-egrid` DataSourceV2 partition
+    * readers, the one fleet read of EGRID+INIT (one task per case,
+    * EGRID + INIT parsed executor-side over shared storage). Takes the
+    * EGRID file path AS LISTED (never re-derives the extension, so a
+    * lowercase `.egrid` opens on a case-sensitive filesystem); CASE = the path minus its 6-char extension; the INIT
     * sibling is resolved preferring the canonical uppercase name, then
     * lowercase. `vecNames` are uppercase EXACT INIT names; empty skips
     * the INIT open entirely (the DSv2 column-pruning path).
@@ -381,11 +350,11 @@ object EclBinary {
   }
 
   /** Plain-IO core of the INIT selection protocol, shared by [[init]]
-    * (the driver-side single-case plan) and [[gridFleet]] (one executor
-    * task per case): INTEHEAD[11] fixes nactive, cell vectors passing
-    * `wanted` at active length are kept — ONE definition, so the fleet
-    * path can never silently diverge from the single-case path the
-    * q117 gate claims it equals.
+    * (the driver-side single-case plan), [[gridCaseRows]] and
+    * [[initFleet]] (one executor task per case): INTEHEAD[11] fixes
+    * nactive, cell vectors passing `wanted` at active length are kept —
+    * ONE definition, so the fleet paths can never silently diverge from
+    * the single-case path the q117 gate claims they equal.
     */
   private def readInitVectors(path: String,
       wanted: String => Boolean): (Int, Vector[EclKw.Kw]) = {
@@ -409,10 +378,13 @@ object EclBinary {
     * [[readInitVectors]] — the single-case and fleet paths cannot
     * diverge). `vectors` are EXACT vector names (the fleet schema is
     * fixed before any file opens); values publish as DOUBLE (the
-    * [[restartFleet]] fleet convention — INTE region vectors cast back
-    * losslessly). Completes the per-filetype fleet family: UNSMRY
-    * (corpusFromPath), EGRID+INIT ([[gridFleet]]), UNRST
-    * ([[restartFleet]]), RFT ([[rftFleet]]), INIT-only (this).
+    * `eclipse-unrst` convention — INTE region vectors cast back
+    * losslessly).
+    *
+    * The one RDD fleet reader left: EGRID+INIT, UNRST, RFT and UNSMRY
+    * fleets read through their `eclipse-*` DataSourceV2 scans, but
+    * there is no `eclipse-init` format, and an INIT-only case (no EGRID
+    * beside it — q151's fixtures) has no other fleet route.
     */
   def initFleet(spark: SparkSession, pattern: String,
       vectors: Seq[String]): DataFrame = {
@@ -443,42 +415,9 @@ object EclBinary {
     spark.createDataFrame(rows, schema)
   }
 
-  /** Ensemble restart read (S5 at fleet scale): every UNRST case
-    * matching the glob decoded in ONE distributed plan, one task per
-    * case, SEQNUM-group streaming EXECUTOR-side — the restart member
-    * of the fleet trio ([[graft.write.SummaryWriter.corpusFromPath]]
-    * for UNSMRY, [[gridFleet]] for EGRID+INIT). `vectors` are EXACT
-    * vector names (the unioned schema must be fixed before any file
-    * is opened); a vector missing at a report step surfaces as null
-    * for that step. Per-task state is one case's SELECTED vectors —
-    * the same bound as the single-case reader's driver contract,
-    * moved onto the executor where the ensemble axis parallelizes it.
-    */
-  def restartFleet(spark: SparkSession, pattern: String,
-      vectors: Seq[String]): DataFrame = {
-    import graft.io.datasource.DeckScan
-    require(vectors.nonEmpty,
-      "restartFleet needs explicit vector names - the fleet schema is fixed up front")
-    val bases = DeckScan.splitPaths(pattern)
-      .flatMap(p => DeckScan.expand(p, ext = ".UNRST"))
-      .filter(_.toUpperCase.endsWith(".UNRST"))
-      .distinct.sorted
-    require(bases.nonEmpty, s"no .UNRST files match $pattern")
-    val vecNames = vectors.map(_.toUpperCase)
-    val schema = StructType(
-      StructField("CASE", StringType, nullable = false) ::
-        StructField("DATE", DateType, nullable = false) ::
-        StructField("ACTIVE_IDX", LongType, nullable = false) ::
-        vecNames.map(v => StructField(v, DoubleType, nullable = true)).toList)
-    val par = math.max(1, math.min(bases.length, spark.sparkContext.defaultParallelism))
-    val rows = spark.sparkContext.parallelize(bases, par)
-      .flatMap(path => restartCaseRows(path, vecNames))
-    spark.createDataFrame(rows, schema)
-  }
-
   /** One UNRST case streamed to `(CASE, DATE, ACTIVE_IDX, vec…)` rows —
-    * the per-case kernel shared by [[restartFleet]]'s RDD tasks and the
-    * `eclipse-unrst` DataSourceV2 partition readers. Streams SEQNUM
+    * the per-case kernel of the `eclipse-unrst` DataSourceV2 partition
+    * readers (one task per case, executor-side). Streams SEQNUM
     * groups exactly like the single-case reader: unselected payloads
     * are seeked past, selected ones buffer only until their step
     * flushes to rows.
@@ -675,51 +614,9 @@ object EclBinary {
 
   // ---- RFT -----------------------------------------------------------------
 
-  /** Read an RFT file's per-connection report rows: one row per (report,
-    * connection) with `DATE`, `WELL`, the CON* topology vectors and every
-    * data vector of connection length (DEPTH, PRESSURE, SWAT, SGAS, …) —
-    * S7, `rft.py:63-135` (the reference walks the same TIME-delimited
-    * record groups via resdata). Groups STREAM one at a time
-    * ([[EclKw.streamGroups]]) — a many-thousand-report RFT never
-    * materializes whole; only the retained connection vectors live on.
-    */
-  /** RFT FLEET read: every .RFT matching the pattern decoded in ONE
-    * distributed plan, one task per case, TIME-group streaming
-    * EXECUTOR-side — completing the binary ensemble QUARTET (UNSMRY
-    * [[graft.write.SummaryWriter.corpusFromPath]], EGRID+INIT
-    * [[gridFleet]], UNRST [[restartFleet]], RFT here). `vectors` are
-    * EXACT connection-vector names (the fleet schema is fixed before
-    * any file opens); a vector absent from a report surfaces null.
-    * Per-task state is one report group's selected vectors — the
-    * single-case reader's bound, moved onto the executor where the
-    * ensemble axis parallelizes.
-    */
-  def rftFleet(spark: SparkSession, pattern: String,
-      vectors: Seq[String]): DataFrame = {
-    import graft.io.datasource.DeckScan
-    require(vectors.nonEmpty,
-      "rftFleet needs explicit vector names - the fleet schema is fixed up front")
-    val bases = DeckScan.splitPaths(pattern)
-      .flatMap(p => DeckScan.expand(p, ext = ".RFT"))
-      .filter(_.toUpperCase.endsWith(".RFT"))
-      .distinct.sorted
-    require(bases.nonEmpty, s"no .RFT files match $pattern")
-    val vecNames = vectors.map(_.toUpperCase)
-    val schema = StructType(
-      StructField("CASE", StringType, nullable = false) ::
-        StructField("DATE", DateType, nullable = true) ::
-        StructField("WELL", StringType, nullable = false) ::
-        StructField("CONIDX", IntegerType, nullable = false) ::
-        vecNames.map(v => StructField(v, DoubleType, nullable = true)).toList)
-    val par = math.max(1, math.min(bases.length, spark.sparkContext.defaultParallelism))
-    val rows = spark.sparkContext.parallelize(bases, par)
-      .flatMap(path => rftCaseRows(path, vecNames))
-    spark.createDataFrame(rows, schema)
-  }
-
   /** One .RFT case streamed to `(CASE, DATE, WELL, CONIDX, vec…)` rows —
-    * the per-case kernel shared by [[rftFleet]]'s RDD tasks and the
-    * `eclipse-rft` DataSourceV2 partition readers. Only the SELECTED
+    * the per-case kernel of the `eclipse-rft` DataSourceV2 partition
+    * readers (one task per case, executor-side). Only the SELECTED
     * vectors are kept per TIME group; the rest seek past.
     *
     * `datePred` / `wells` are the DSv2 pushed-down filters: an RFT
@@ -795,6 +692,14 @@ object EclBinary {
     }
   }
 
+  /** Read an RFT file's per-connection report rows: one row per (report,
+    * connection) with `DATE`, `WELL`, the CON* topology vectors and every
+    * data vector of connection length (DEPTH, PRESSURE, SWAT, SGAS, …) —
+    * S7, `rft.py:63-135` (the reference walks the same TIME-delimited
+    * record groups via resdata). Groups STREAM one at a time
+    * ([[EclKw.streamGroups]]) — a many-thousand-report RFT never
+    * materializes whole; only the retained connection vectors live on.
+    */
   def rft(spark: SparkSession, path: String): DataFrame = {
     val perGroup = EclKw.streamGroups(path, "TIME") { g =>
       g.find(_.name == "CONIPOS").map { conipos =>

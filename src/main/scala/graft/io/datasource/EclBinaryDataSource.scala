@@ -27,12 +27,14 @@ import graft.io.EclBinary
   *   spark.read.format("eclipse-rft").option("vectors", "DEPTH,PRESSURE")
   *     .load("realizations/&#42;/CASE.RFT")
   *
-  * All four formats decode through the SAME per-case kernels as the
-  * library fleet readers ([[EclBinary.gridCaseRows]] /
-  * [[EclBinary.restartCaseRows]] / [[EclBinary.rftCaseRows]] /
-  * [[graft.write.SummaryWriter.summaryCaseTuples]] — one decode path,
-  * so the SQL-reachable form can never diverge from the gates over the
-  * library fleet reads). Partitioning is ONE INPUT PARTITION PER CASE:
+  * These scans are the ONE fleet reader of each format: every fleet
+  * query reads through them, and each decodes a case with its per-case
+  * kernel ([[EclBinary.gridCaseRows]] / [[EclBinary.restartCaseRows]] /
+  * [[EclBinary.rftCaseRows]] /
+  * [[graft.write.SummaryWriter.summaryCaseTuples]]); the single-case
+  * library readers ([[EclBinary.egrid]], [[EclBinary.unrst]],
+  * [[EclBinary.rft]], [[graft.write.SummaryWriter.read]]) stay as their
+  * independent referees. Partitioning is ONE INPUT PARTITION PER CASE:
   * a realization is the natural parallel unit of an ensemble (the
   * 100–1000-realization history-match layout), and each task's state is
   * one case's selected arrays.
@@ -45,8 +47,9 @@ import graft.io.EclBinary
   * interleave all vectors per step, so its long form prunes columns
   * after decode — the record is the decode unit there.) `vectors` is a
   * comma list of EXACT uppercase vector names (the unioned fleet schema
-  * must be fixed before any file opens, the same contract as the
-  * library fleet readers); vectors missing in a case surface as nulls.
+  * must be fixed before any file opens); vectors missing in a case
+  * surface as nulls. `mapaxes` (egrid, default false) rebases X/Y into
+  * the MAPAXES frame, as [[EclBinary.egrid]]'s `applyMapaxes` does.
   *
   * FILTER OPTIONS (`filter.dates`, `filter.wells` [rft],
   * `filter.vectors` [unsmry], `filter.cases`) seed the same byte-level

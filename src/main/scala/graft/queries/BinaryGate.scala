@@ -32,6 +32,25 @@ object BinaryGate {
     d.toString
   }
 
+  /** Realization number from a fleet row's CASE: the fixtures name case
+    * `c` CASE`c` plus the format's extension, and the scans carry that
+    * path minus the extension (egrid/unsmry) or as listed (unrst/rft),
+    * so the one pattern takes an optional extension. */
+  private val caseId: Column =
+    regexp_extract(col("CASE"), "CASE([0-9]+)(?:\\.[A-Za-z]+)?$", 1).cast("int")
+
+  /** The one batch fleet read of the binary gates: `eclipse-<kind>`
+    * over `paths` (files or globs), with the exact `vectors` (none for
+    * unsmry, whose long form has no vector columns, or for a
+    * geometry-only egrid read), plus [[caseId]] as `case_id`. */
+  private def readFleet(s: SparkSession, kind: String, paths: Seq[String],
+      vectors: String*): DataFrame = {
+    val reader = s.read.format(s"eclipse-$kind")
+    (if (vectors.isEmpty) reader else reader.option("vectors", vectors.mkString(",")))
+      .load(paths: _*)
+      .withColumn("case_id", caseId)
+  }
+
   private val GridCases = 4
   private val Nx = 20
   private val Ny = 20
@@ -248,9 +267,7 @@ object BinaryGate {
     */
   def q182TrendFit(s: SparkSession, dir: String): DataFrame = {
     val tmp = writeTrendFixture(s, "q182")
-    val obs = graft.write.SummaryWriter.corpusFromPath(s, s"$tmp/*.UNSMRY")
-      .withColumn("case_id",
-        regexp_extract(col("CASE"), "CASE([0-9]+)$", 1).cast("int"))
+    val obs = readFleet(s, "unsmry", Seq(s"$tmp/*.UNSMRY"))
       .select(col("case_id"), col("VECTOR").as("vector"),
         datediff(col("DATE"), lit(java.sql.Date.valueOf("2021-01-01")))
           .cast("long").as("x"),
@@ -301,9 +318,7 @@ object BinaryGate {
     */
   def q185Breakthrough(s: SparkSession, dir: String): DataFrame = {
     val tmp = writeFleetFixture(s, "q185")
-    val obs = graft.write.SummaryWriter.corpusFromPath(s, s"$tmp/*.UNSMRY")
-      .withColumn("case_id",
-        regexp_extract(col("CASE"), "CASE([0-9]+)$", 1).cast("int"))
+    val obs = readFleet(s, "unsmry", Seq(s"$tmp/*.UNSMRY"))
       .select(col("case_id"), col("VECTOR").as("vector"),
         datediff(col("DATE"), lit(java.sql.Date.valueOf("2021-01-01")))
           .cast("long").as("day"),
@@ -322,47 +337,51 @@ object BinaryGate {
       .orderBy(col("case_id"), col("vector"))
   }
 
-  /** q114: the summary FLEET read (S6 at ensemble scale) under the gate —
-    * [[graft.write.SummaryWriter.corpusFromPath]] reads every case
+  /** The summary FLEET read (S6 at ensemble scale) under the gate, over
+    * fixtureDir(`q`): the `eclipse-unsmry` scan reads every case
     * matching a glob in ONE distributed plan (one task per case, SMSPEC
     * catalog + PARAMS decode executor-side), the ensemble layout the
     * reservoir side's deck fleets already have. Four closed-form cases
     * with a case-dependent dyadic formula (float32-exact), case
     * identity recovered from the CASE path — the hash proves per-case
-    * decode state never leaks across cases.
+    * decode state never leaks across cases. q114 and q167 run it over
+    * their own fixture dirs, each with its own registry entry and oracle
+    * hash.
     */
-  def q114SummaryFleet(s: SparkSession, dir: String): DataFrame = {
-    val tmp = writeFleetFixture(s, "q114")
+  private def summaryFleet(s: SparkSession, q: String): DataFrame = {
+    val tmp = writeFleetFixture(s, q)
     // summaryCaseTuples excludes TIME by construction (it becomes DATE)
-    graft.write.SummaryWriter.corpusFromPath(s, s"$tmp/*.UNSMRY")
-      .withColumn("case_id",
-        regexp_extract(col("CASE"), "CASE([0-9]+)$", 1).cast("int"))
+    readFleet(s, "unsmry", Seq(s"$tmp/*.UNSMRY"))
       .select(col("case_id"), col("VECTOR").as("vector"),
         col("DATE").cast("timestamp").as("date"), col("VALUE").as("value"))
       .orderBy(col("case_id"), col("vector"), col("date"))
   }
 
-  /** q117: the GRID FLEET read (S3/S4 at ensemble scale) under the gate
-    * — [[graft.io.EclBinary.gridFleet]] decodes every EGRID+INIT case
-    * matching a glob in ONE distributed plan, one task per case,
-    * executor-side corner-point math and active-vector selection (the
-    * grid mirror of q114's UNSMRY fleet; reference users run 100–1000
-    * realizations per ensemble). Same closed-form fixtures as q59, so
-    * the oracle is q59's verbatim — a hash match proves the per-case
-    * decode (geometry AND init ordinals) never leaks state across
-    * cases and equals the single-case driver-orchestrated path.
+  /** q114: [[summaryFleet]] over its own fixtures. */
+  def q114SummaryFleet(s: SparkSession, dir: String): DataFrame =
+    summaryFleet(s, "q114")
+
+  /** The GRID FLEET read (S3/S4 at ensemble scale) under the gate, over
+    * fixtureDir(`q`): the `eclipse-egrid` scan decodes every EGRID+INIT
+    * case in ONE distributed plan, one task per case, executor-side
+    * corner-point math and active-vector selection (the grid mirror of
+    * q114's UNSMRY fleet; reference users run 100–1000 realizations per
+    * ensemble). Same closed-form fixtures as q59, so the oracle is q59's
+    * verbatim — a hash match proves the per-case decode (geometry AND
+    * init ordinals) never leaks state across cases and equals the
+    * single-case driver-orchestrated path. q117 and q164 run it over
+    * their own fixture dirs, each with its own registry entry and oracle
+    * hash.
     */
-  def q117GridFleet(s: SparkSession, dir: String): DataFrame = {
-    val tmp = fixtureDir("q117")
-    // enumerate the exact per-case paths just written (comma list, not a
-    // *.EGRID glob): a persistent fixture dir can hold stale CASE files
-    // from an older revision, and a glob would silently gate against them
+  private def gridFleet(s: SparkSession, q: String): DataFrame = {
+    val tmp = fixtureDir(q)
+    // enumerate the exact per-case paths just written (not a *.EGRID
+    // glob): a persistent fixture dir can hold stale CASE files from an
+    // older revision, and a glob would silently gate against them
     val paths = (0 until GridCases).map { c =>
       writeGridCase(tmp, c); s"$tmp/CASE$c.EGRID"
     }
-    graft.io.EclBinary.gridFleet(s, paths.mkString(","), Seq("PORO", "PERMX"))
-      .withColumn("case_id",
-        regexp_extract(col("CASE"), "CASE([0-9]+)$", 1).cast("int"))
+    readFleet(s, "egrid", paths, "PORO", "PERMX")
       .select(col("case_id"), col("I").as("i"), col("J").as("j"), col("K").as("k"),
         col("X").as("x"), col("Y").as("y"), col("Z").as("z"),
         col("Z_MIN").as("z_min"), col("Z_MAX").as("z_max"),
@@ -371,6 +390,10 @@ object BinaryGate {
         col("PORO").as("poro"), col("PERMX").as("permx"))
       .orderBy(col("case_id"), col("global_index"))
   }
+
+  /** q117: [[gridFleet]] over its own fixtures. */
+  def q117GridFleet(s: SparkSession, dir: String): DataFrame =
+    gridFleet(s, "q117")
 
   /** q146: FLEET COMPLETION-PRESSURE ENVELOPE — q141 at ensemble
     * scale: the same schedule located in EVERY realization's grid
@@ -401,14 +424,10 @@ object BinaryGate {
     val conns = graft.modules.Compdat.df(s, CompletionDeck)
       .select(col("WELL").as("well"), col("I").as("i"), col("J").as("j"),
         col("K1").as("k"))
-    val grid = graft.io.EclBinary.gridFleet(s, gridPaths.mkString(","))
-      .withColumn("case_id",
-        regexp_extract(col("CASE"), "CASE([0-9]+)$", 1).cast("int"))
+    val grid = readFleet(s, "egrid", gridPaths)
       .select(col("case_id"), col("I").as("i"), col("J").as("j"),
         col("K").as("k"), col("ACTIVE_IDX").as("active_idx"))
-    val rst = graft.io.EclBinary.restartFleet(s, rstPaths.mkString(","), Seq("PRESSURE"))
-      .withColumn("case_id",
-        regexp_extract(col("CASE"), "CASE([0-9]+)\\.UNRST$", 1).cast("int"))
+    val rst = readFleet(s, "unrst", rstPaths, "PRESSURE")
       .select(col("case_id"), col("DATE").cast("timestamp").as("date"),
         col("ACTIVE_IDX").as("active_idx"),
         col("PRESSURE").cast("long").as("p"))
@@ -487,73 +506,38 @@ object BinaryGate {
       .orderBy(col("case_id"), col("date"), col("active_idx"))
   }
 
-  /** q120: the RESTART FLEET read (S5 at ensemble scale) under the gate
-    * — [[graft.io.EclBinary.restartFleet]] streams every UNRST case's
-    * SEQNUM groups executor-side, one task per case, completing the
-    * ensemble trio (q114 UNSMRY, q117 EGRID+INIT, q120 UNRST). Same
-    * closed-form fixtures as q62, so the oracle is q62's verbatim — a
-    * hash match proves the fleet path equals the single-case
-    * driver-streamed path with no cross-case state leakage.
+  /** The RESTART FLEET read (S5 at ensemble scale) under the gate, over
+    * fixtureDir(`q`): the `eclipse-unrst` scan streams every UNRST
+    * case's SEQNUM groups executor-side, one partition per case, pruned
+    * vectors seeked past at the byte level. Same closed-form fixtures
+    * as q62, so the oracle is q62's verbatim — a hash match proves the
+    * fleet path equals the single-case driver-streamed path with no
+    * cross-case state leakage. q120 and q165 run it over their own
+    * fixture dirs, each with its own registry entry and oracle hash.
     */
-  def q120RestartFleet(s: SparkSession, dir: String): DataFrame = {
-    val tmp = fixtureDir("q120")
+  private def restartFleet(s: SparkSession, q: String): DataFrame = {
+    val tmp = fixtureDir(q)
     val paths = (0 until RstCases).map(c => writeRstCase(tmp, c))
-    graft.io.EclBinary.restartFleet(s, paths.mkString(","), Seq("PRESSURE", "SWAT"))
-      .withColumn("case_id",
-        regexp_extract(col("CASE"), "CASE([0-9]+)\\.UNRST$", 1).cast("int"))
+    readFleet(s, "unrst", paths, "PRESSURE", "SWAT")
       .select(col("case_id"), col("DATE").cast("timestamp").as("date"),
         col("ACTIVE_IDX").as("active_idx"),
         col("PRESSURE").as("pressure"), col("SWAT").as("swat"))
       .orderBy(col("case_id"), col("date"), col("active_idx"))
   }
 
-  /** q165: q120's RESTART FLEET replayed through the REGISTERED
-    * DataSourceV2 format — `spark.read.format("eclipse-unrst")` over
-    * the same fixtures, gated against the SAME oracle (the q164
-    * contract for the UNRST axis: shared per-case kernel, one
-    * partition per case, pruned vectors seeked past at the byte
-    * level).
-    */
-  def q165RestartFleetSql(s: SparkSession, dir: String): DataFrame = {
-    val tmp = fixtureDir("q165")
-    val paths = (0 until RstCases).map(c => writeRstCase(tmp, c))
-    s.read.format("eclipse-unrst").option("vectors", "PRESSURE,SWAT")
-      .load(paths: _*)
-      .withColumn("case_id",
-        regexp_extract(col("CASE"), "CASE([0-9]+)\\.UNRST$", 1).cast("int"))
-      .select(col("case_id"), col("DATE").cast("timestamp").as("date"),
-        col("ACTIVE_IDX").as("active_idx"),
-        col("PRESSURE").as("pressure"), col("SWAT").as("swat"))
-      .orderBy(col("case_id"), col("date"), col("active_idx"))
-  }
+  /** q120: [[restartFleet]] over its own fixtures. */
+  def q120RestartFleet(s: SparkSession, dir: String): DataFrame =
+    restartFleet(s, "q120")
 
-  /** q164: q117's GRID FLEET replayed through the REGISTERED
-    * DataSourceV2 format — `spark.read.format("eclipse-egrid")
-    * .option("vectors", …).load(paths…)` over the same closed-form
-    * fixtures, gated against the SAME oracle. A hash match proves the
-    * SQL-reachable format (schema fixed from options before any file
-    * opens, one input partition per case, column pruning reaching the
-    * INIT byte level) decodes exactly like the library
-    * [[graft.io.EclBinary.gridFleet]] read — they share the per-case
-    * kernel, and this row pins that they stay shared.
-    */
-  def q164GridFleetSql(s: SparkSession, dir: String): DataFrame = {
-    val tmp = fixtureDir("q164")
-    val paths = (0 until GridCases).map { c =>
-      writeGridCase(tmp, c); s"$tmp/CASE$c.EGRID"
-    }
-    s.read.format("eclipse-egrid").option("vectors", "PORO,PERMX")
-      .load(paths: _*)
-      .withColumn("case_id",
-        regexp_extract(col("CASE"), "CASE([0-9]+)$", 1).cast("int"))
-      .select(col("case_id"), col("I").as("i"), col("J").as("j"), col("K").as("k"),
-        col("X").as("x"), col("Y").as("y"), col("Z").as("z"),
-        col("Z_MIN").as("z_min"), col("Z_MAX").as("z_max"),
-        round(col("VOLUME"), 6).as("volume"),
-        col("GLOBAL_INDEX").as("global_index"), col("ACTIVE_IDX").as("active_idx"),
-        col("PORO").as("poro"), col("PERMX").as("permx"))
-      .orderBy(col("case_id"), col("global_index"))
-  }
+  /** q165: [[restartFleet]] over its own fixtures — q120's twin, gated
+    * against the same oracle. */
+  def q165RestartFleetSql(s: SparkSession, dir: String): DataFrame =
+    restartFleet(s, "q165")
+
+  /** q164: [[gridFleet]] over its own fixtures — q117's twin, gated
+    * against the same oracle. */
+  def q164GridFleetSql(s: SparkSession, dir: String): DataFrame =
+    gridFleet(s, "q164")
 
   private val RftCases = 4
   private val RftDates = 2
@@ -599,17 +583,9 @@ object BinaryGate {
       .orderBy(col("case_id"), col("date"), col("conidx"))
   }
 
-  /** q148: the RFT FLEET read (S7 at ensemble scale) —
-    * [[graft.io.EclBinary.rftFleet]] decodes every case's TIME report
-    * groups executor-side, one task per case, completing the binary
-    * ensemble QUARTET (q114 UNSMRY, q117 EGRID+INIT, q120 UNRST, q148
-    * RFT). Same closed-form fixtures as q63; the hash proves the fleet
-    * path equals the single-case streaming reads with no cross-case
-    * group state.
-    */
-  /** The closed-form summary-fleet replay shared verbatim by q114 (the
-    * library corpusFromPath read) and q167 (the eclipse-unsmry DSv2
-    * format) — identical fixtures, identical expected frame. */
+  /** The closed-form summary-fleet replay shared verbatim by the
+    * [[summaryFleet]] twins q114 and q167 — identical fixtures,
+    * identical expected frame. */
   private def summaryFleetOracle: String = summaryFleetOracleWhere("TRUE")
 
   /** summaryFleetOracle restricted to the ministeps a pushed-down DATE
@@ -645,8 +621,8 @@ object BinaryGate {
       |       CAST(sum(y32) AS BIGINT) AS sum_y32
       |FROM o GROUP BY 1 ORDER BY case_id""".stripMargin
 
-  /** q63's replay minus the CONIPOS vector, shared verbatim by q148 (the
-    * library rftFleet read) and q168 (the eclipse-rft DSv2 format). */
+  /** q63's replay minus the CONIPOS vector, shared verbatim by the
+    * [[rftFleet]] twins q148 and q168. */
   private def rftFleetOracle: String = rftFleetOracleWhere("TRUE")
 
   /** rftFleetOracle restricted to the report groups a pushed-down
@@ -665,21 +641,10 @@ object BinaryGate {
               CAST(200 + i + 50 * t + 7 * c AS DOUBLE) AS pressure
        FROM cons WHERE $cond ORDER BY case_id, date, conidx"""
 
-  /** q167: q114's SUMMARY FLEET replayed through the REGISTERED
-    * `eclipse-unsmry` DataSourceV2 format — glob load, one partition
-    * per case, gated against the SAME oracle (the q164 contract for
-    * the UNSMRY axis: the format and corpusFromPath share
-    * summaryCaseTuples). */
-  def q167SummaryFleetSql(s: SparkSession, dir: String): DataFrame = {
-    val tmp = writeFleetFixture(s, "q167")
-    // summaryCaseTuples excludes TIME by construction (it becomes DATE)
-    s.read.format("eclipse-unsmry").load(s"$tmp/*.UNSMRY")
-      .withColumn("case_id",
-        regexp_extract(col("CASE"), "CASE([0-9]+)$", 1).cast("int"))
-      .select(col("case_id"), col("VECTOR").as("vector"),
-        col("DATE").cast("timestamp").as("date"), col("VALUE").as("value"))
-      .orderBy(col("case_id"), col("vector"), col("date"))
-  }
+  /** q167: [[summaryFleet]] over its own fixtures — q114's twin, gated
+    * against the same oracle. */
+  def q167SummaryFleetSql(s: SparkSession, dir: String): DataFrame =
+    summaryFleet(s, "q167")
 
   /** q189: CO-LOCATED PER-CASE FLEET AGGREGATE — the plan-shape payoff
     * of the DSv2 sources reporting KeyGroupedPartitioning(CASE): each
@@ -706,8 +671,7 @@ object BinaryGate {
       .agg(count(lit(1)).as("n_rows"),
         sum(round(col("VALUE") * 32).cast("long")).as("sum_y32"),
         countDistinct(col("VECTOR")).as("n_vectors"))
-      .withColumn("case_id",
-        regexp_extract(col("CASE"), "CASE([0-9]+)$", 1).cast("int"))
+      .withColumn("case_id", caseId)
       .select(col("case_id"), col("n_rows"), col("n_vectors"), col("sum_y32"))
       .orderBy(col("case_id"))
   }
@@ -738,8 +702,7 @@ object BinaryGate {
       .groupBy(col("CASE"))
       .agg(max(round(col("VALUE") * 32).cast("long")).as("cum_final32"))
     rates.hint("merge").join(finalCum.hint("merge"), Seq("CASE"))
-      .withColumn("case_id",
-        regexp_extract(col("CASE"), "CASE([0-9]+)$", 1).cast("int"))
+      .withColumn("case_id", caseId)
       .select(col("case_id"),
         datediff(col("DATE"), lit(java.sql.Date.valueOf("2021-01-01")))
           .cast("long").as("day"),
@@ -768,8 +731,7 @@ object BinaryGate {
       .select(col("CASE"), col("DATE"),
         round(col("VALUE") * 32).cast("long").as("rate32"))
       .withColumn("delta32", col("rate32") - lag(col("rate32"), 1).over(w))
-      .withColumn("case_id",
-        regexp_extract(col("CASE"), "CASE([0-9]+)$", 1).cast("int"))
+      .withColumn("case_id", caseId)
       .select(col("case_id"),
         datediff(col("DATE"), lit(java.sql.Date.valueOf("2021-01-01")))
           .cast("long").as("day"),
@@ -809,29 +771,15 @@ object BinaryGate {
       .agg(count(lit(1)).as("n_rows"),
         sum(round(col("VALUE") * 32).cast("long")).as("sum_y32"),
         countDistinct(col("VECTOR")).as("n_vectors"))
-      .withColumn("case_id",
-        regexp_extract(col("CASE"), "CASE([0-9]+)$", 1).cast("int"))
+      .withColumn("case_id", caseId)
       .select(col("case_id"), col("n_rows"), col("n_vectors"), col("sum_y32"))
       .orderBy(col("case_id"))
   }
 
-  /** q168: q148's RFT FLEET replayed through the REGISTERED
-    * `eclipse-rft` DataSourceV2 format — same fixtures, same oracle,
-    * shared rftCaseRows kernel; pruned connection vectors seek past at
-    * the byte level. Completes the DSv2 QUARTET (q164 EGRID+INIT, q165
-    * UNRST, q167 UNSMRY, q168 RFT). */
-  def q168RftFleetSql(s: SparkSession, dir: String): DataFrame = {
-    val tmp = fixtureDir("q168")
-    val paths = (0 until RftCases).map(c => writeRftCase(tmp, c))
-    s.read.format("eclipse-rft").option("vectors", "DEPTH,PRESSURE")
-      .load(paths: _*)
-      .withColumn("case_id",
-        regexp_extract(col("CASE"), "CASE([0-9]+)\\.RFT$", 1).cast("int"))
-      .select(col("case_id"), col("DATE").cast("timestamp").as("date"),
-        col("WELL").as("well"), col("CONIDX").as("conidx"),
-        col("DEPTH").as("depth"), col("PRESSURE").as("pressure"))
-      .orderBy(col("case_id"), col("date"), col("conidx"))
-  }
+  /** q168: [[rftFleet]] over its own fixtures — q148's twin, gated
+    * against the same oracle. */
+  def q168RftFleetSql(s: SparkSession, dir: String): DataFrame =
+    rftFleet(s, "q168")
 
   /** q171: DATE-SELECTIVE DSv2 RESTART READ — q165 replayed with a
     * pushed-down `WHERE DATE = …` (`SupportsPushDownFilters`), gated
@@ -848,11 +796,8 @@ object BinaryGate {
   def q171RestartDatePushdown(s: SparkSession, dir: String): DataFrame = {
     val tmp = fixtureDir("q171")
     val paths = (0 until RstCases).map(c => writeRstCase(tmp, c))
-    s.read.format("eclipse-unrst").option("vectors", "PRESSURE,SWAT")
-      .load(paths: _*)
+    readFleet(s, "unrst", paths, "PRESSURE", "SWAT")
       .where(col("DATE") === lit(java.sql.Date.valueOf("2022-01-02")))
-      .withColumn("case_id",
-        regexp_extract(col("CASE"), "CASE([0-9]+)\\.UNRST$", 1).cast("int"))
       .select(col("case_id"), col("DATE").cast("timestamp").as("date"),
         col("ACTIVE_IDX").as("active_idx"),
         col("PRESSURE").as("pressure"), col("SWAT").as("swat"))
@@ -981,12 +926,9 @@ object BinaryGate {
   def q173RftWellPushdown(s: SparkSession, dir: String): DataFrame = {
     val tmp = fixtureDir("q173")
     val paths = (0 until RftCases).map(c => writeRftCase(tmp, c))
-    s.read.format("eclipse-rft").option("vectors", "DEPTH,PRESSURE")
-      .load(paths: _*)
+    readFleet(s, "rft", paths, "DEPTH", "PRESSURE")
       .where(col("WELL").isin("W1", "W2") &&
         col("DATE") === lit(java.sql.Date.valueOf("2023-02-02")))
-      .withColumn("case_id",
-        regexp_extract(col("CASE"), "CASE([0-9]+)\\.RFT$", 1).cast("int"))
       .select(col("case_id"), col("DATE").cast("timestamp").as("date"),
         col("WELL").as("well"), col("CONIDX").as("conidx"),
         col("DEPTH").as("depth"), col("PRESSURE").as("pressure"))
@@ -1005,12 +947,10 @@ object BinaryGate {
     */
   def q174SummaryDatePushdown(s: SparkSession, dir: String): DataFrame = {
     val tmp = writeFleetFixture(s, "q174")
-    s.read.format("eclipse-unsmry").load(s"$tmp/*.UNSMRY")
+    readFleet(s, "unsmry", Seq(s"$tmp/*.UNSMRY"))
       .where(col("DATE").between(
         lit(java.sql.Date.valueOf("2021-01-10")),
         lit(java.sql.Date.valueOf("2021-01-12"))))
-      .withColumn("case_id",
-        regexp_extract(col("CASE"), "CASE([0-9]+)$", 1).cast("int"))
       .select(col("case_id"), col("VECTOR").as("vector"),
         col("DATE").cast("timestamp").as("date"), col("VALUE").as("value"))
       .orderBy(col("case_id"), col("vector"), col("date"))
@@ -1033,10 +973,8 @@ object BinaryGate {
     */
   def q198SummaryVectorPushdown(s: SparkSession, dir: String): DataFrame = {
     val tmp = writeFleetFixture(s, "q198")
-    s.read.format("eclipse-unsmry").load(s"$tmp/*.UNSMRY")
+    readFleet(s, "unsmry", Seq(s"$tmp/*.UNSMRY"))
       .where(col("VECTOR").isin("FOPR", "WBHP:W0"))
-      .withColumn("case_id",
-        regexp_extract(col("CASE"), "CASE([0-9]+)$", 1).cast("int"))
       .select(col("case_id"), col("VECTOR").as("vector"),
         col("DATE").cast("timestamp").as("date"), col("VALUE").as("value"))
       .orderBy(col("case_id"), col("vector"), col("date"))
@@ -1055,11 +993,8 @@ object BinaryGate {
   def q176CasePushdown(s: SparkSession, dir: String): DataFrame = {
     val tmp = fixtureDir("q176")
     val paths = (0 until RstCases).map(c => writeRstCase(tmp, c))
-    s.read.format("eclipse-unrst").option("vectors", "PRESSURE,SWAT")
-      .load(paths: _*)
+    readFleet(s, "unrst", paths, "PRESSURE", "SWAT")
       .where(col("CASE") === paths(2))
-      .withColumn("case_id",
-        regexp_extract(col("CASE"), "CASE([0-9]+)\\.UNRST$", 1).cast("int"))
       .select(col("case_id"), col("DATE").cast("timestamp").as("date"),
         col("ACTIVE_IDX").as("active_idx"),
         col("PRESSURE").as("pressure"), col("SWAT").as("swat"))
@@ -1091,9 +1026,7 @@ object BinaryGate {
     rows.toDF("CASE", "DATE", "VECTOR", "VALUE")
       .orderBy(rand(11)) // prove the required clustering regroups it
       .write.format("eclipse-unsmry").mode("overwrite").save(tmp)
-    s.read.format("eclipse-unsmry").load(s"$tmp/*.UNSMRY")
-      .withColumn("case_id",
-        regexp_extract(col("CASE"), "CASE([0-9]+)$", 1).cast("int"))
+    readFleet(s, "unsmry", Seq(s"$tmp/*.UNSMRY"))
       .select(col("case_id"), col("VECTOR").as("vector"),
         col("DATE").cast("timestamp").as("date"), col("VALUE").as("value"))
       .orderBy(col("case_id"), col("vector"), col("date"))
@@ -1131,8 +1064,7 @@ object BinaryGate {
       .start()
     q.awaitTermination()
     s.table(sink)
-      .withColumn("case_id",
-        regexp_extract(col("CASE"), "CASE([0-9]+)$", 1).cast("int"))
+      .withColumn("case_id", caseId)
       .select(col("case_id"), col("VECTOR").as("vector"),
         col("DATE").cast("timestamp").as("date"), col("VALUE").as("value"))
       .orderBy(col("case_id"), col("vector"), col("date"))
@@ -1225,8 +1157,7 @@ object BinaryGate {
     val b1 = runOnce() // commits killAt batches, DIES on batch killAt
     val b2 = runOnce() // same checkpoint: replays killAt, drains the rest
     (s.read.parquet(out)
-      .withColumn("case_id",
-        regexp_extract(col("CASE"), "CASE([0-9]+)$", 1).cast("int"))
+      .withColumn("case_id", caseId)
       .select(col("case_id"), col("VECTOR").as("vector"),
         col("DATE").cast("timestamp").as("date"), col("VALUE").as("value"))
       .orderBy(col("case_id"), col("vector"), col("date")), b1, b2)
@@ -1281,8 +1212,7 @@ object BinaryGate {
     q.awaitTermination()
     val batches = q.lastProgress.batchId + 1
     (s.table(sink)
-      .withColumn("case_id",
-        regexp_extract(col("CASE"), "CASE([0-9]+)$", 1).cast("int"))
+      .withColumn("case_id", caseId)
       .groupBy(col("case_id"))
       .agg(count(lit(1)).as("n_rows"), sum(col("sqerr_fp4")).as("misfit_fp4"))
       .orderBy(col("misfit_fp4"), col("case_id")), batches)
@@ -1303,27 +1233,35 @@ object BinaryGate {
     val paths = (0 until GridCases).map { c =>
       writeGridCase(tmp, c); s"$tmp/CASE$c.EGRID"
     }
-    s.read.format("eclipse-egrid").option("vectors", "PORO,PERMX")
-      .load(paths: _*)
-      .withColumn("case_id",
-        regexp_extract(col("CASE"), "CASE([0-9]+)$", 1).cast("int"))
+    readFleet(s, "egrid", paths, "PORO", "PERMX")
       .select(col("case_id"), col("GLOBAL_INDEX").as("global_index"),
         col("ACTIVE_IDX").as("active_idx"),
         col("PORO").as("poro"), col("PERMX").as("permx"))
       .orderBy(col("case_id"), col("global_index"))
   }
 
-  def q148RftFleet(s: SparkSession, dir: String): DataFrame = {
-    val tmp = fixtureDir("q148")
+  /** The RFT FLEET read (S7 at ensemble scale) under the gate, over
+    * fixtureDir(`q`): the `eclipse-rft` scan decodes every case's TIME
+    * report groups executor-side, one partition per case, pruned
+    * connection vectors seeked past at the byte level. Same closed-form
+    * fixtures as q63; the hash proves the fleet path equals the
+    * single-case streaming reads with no cross-case group state. q148
+    * and q168 run it over their own fixture dirs, each with its own
+    * registry entry and oracle hash.
+    */
+  private def rftFleet(s: SparkSession, q: String): DataFrame = {
+    val tmp = fixtureDir(q)
     val paths = (0 until RftCases).map(c => writeRftCase(tmp, c))
-    graft.io.EclBinary.rftFleet(s, paths.mkString(","), Seq("DEPTH", "PRESSURE"))
-      .withColumn("case_id",
-        regexp_extract(col("CASE"), "CASE([0-9]+)\\.RFT$", 1).cast("int"))
+    readFleet(s, "rft", paths, "DEPTH", "PRESSURE")
       .select(col("case_id"), col("DATE").cast("timestamp").as("date"),
         col("WELL").as("well"), col("CONIDX").as("conidx"),
         col("DEPTH").as("depth"), col("PRESSURE").as("pressure"))
       .orderBy(col("case_id"), col("date"), col("conidx"))
   }
+
+  /** q148: [[rftFleet]] over its own fixtures. */
+  def q148RftFleet(s: SparkSession, dir: String): DataFrame =
+    rftFleet(s, "q148")
 
   /** q66: the NNC pair-list decode + cell-coordinate join (S3's NNC1/
     * NNC2 + TRANNNC surface and J7's `nncWithCoordinates`) under the
@@ -1366,7 +1304,7 @@ object BinaryGate {
     val paths = (0 until GridCases).map { c =>
       writeGridCase(tmp, c); s"$tmp/CASE$c.EGRID"
     }
-    graft.io.EclBinary.gridFleet(s, paths.mkString(","), Seq("PORO", "PERMX"))
+    readFleet(s, "egrid", paths, "PORO", "PERMX")
       .groupBy(col("GLOBAL_INDEX").as("global_index"),
         col("I").as("i"), col("J").as("j"), col("K").as("k"))
       .agg(count(lit(1)).as("n_cases"),
@@ -1390,7 +1328,7 @@ object BinaryGate {
     */
   def q124SummaryEnsembleStats(s: SparkSession, dir: String): DataFrame = {
     val tmp = writeFleetFixture(s, "q124")
-    graft.write.SummaryWriter.corpusFromPath(s, s"$tmp/*.UNSMRY")
+    readFleet(s, "unsmry", Seq(s"$tmp/*.UNSMRY"))
       .groupBy(col("VECTOR").as("vector"), col("DATE").cast("timestamp").as("date"))
       .agg(count(lit(1)).as("n_cases"),
         min(col("VALUE")).as("v_min"), max(col("VALUE")).as("v_max"),
@@ -1464,9 +1402,7 @@ object BinaryGate {
 
   def q126EnsembleMisfit(s: SparkSession, dir: String): DataFrame = {
     val tmp = writeFleetFixture(s, "q126")
-    val sims = graft.write.SummaryWriter.corpusFromPath(s, s"$tmp/*.UNSMRY")
-      .withColumn("case_id",
-        regexp_extract(col("CASE"), "CASE([0-9]+)$", 1).cast("int"))
+    val sims = readFleet(s, "unsmry", Seq(s"$tmp/*.UNSMRY"))
       .select(col("case_id"), col("VECTOR").as("vector"),
         col("DATE").cast("timestamp").as("ts"),
         (col("VALUE") * 32).cast("long").as("sim32"))
@@ -1486,9 +1422,7 @@ object BinaryGate {
   def q143StreamMisfit(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     val tmp = writeFleetFixture(s, "q143")
-    val fleet = graft.write.SummaryWriter.corpusFromPath(s, s"$tmp/*.UNSMRY")
-      .withColumn("case_id",
-        regexp_extract(col("CASE"), "CASE([0-9]+)$", 1).cast("int"))
+    val fleet = readFleet(s, "unsmry", Seq(s"$tmp/*.UNSMRY"))
       .select(col("case_id"), col("VECTOR").as("vector"),
         col("DATE").cast("timestamp").as("ts"),
         (col("VALUE") * 32).cast("long").as("sim32"))
@@ -1556,9 +1490,7 @@ object BinaryGate {
   def q128Depletion(s: SparkSession, dir: String): DataFrame = {
     val tmp = fixtureDir("q128")
     val paths = (0 until RstCases).map(c => writeDepletionRstCase(tmp, c))
-    val perCase = graft.io.EclBinary.restartFleet(s, paths.mkString(","), Seq("PRESSURE", "SWAT"))
-      .withColumn("case_id",
-        regexp_extract(col("CASE"), "CASE([0-9]+)\\.UNRST$", 1).cast("int"))
+    val perCase = readFleet(s, "unrst", paths, "PRESSURE", "SWAT")
       .select(col("case_id"), col("ACTIVE_IDX").as("active_idx"),
         col("DATE").cast("timestamp").as("ts"),
         col("PRESSURE").cast("double").as("p"),
@@ -1605,7 +1537,7 @@ object BinaryGate {
     * 1 − SWAT in the two-phase fixture).
     *
     * Scale shape: BOTH sides decode executor-side, one task per case
-    * ([[graft.io.EclBinary.initFleet]] / restartFleet). The INIT side
+    * ([[graft.io.EclBinary.initFleet]] / the `eclipse-unrst` scan). The INIT side
     * carries one row per (case, cell) — static properties; the restart
     * side one row per (case, cell, step). The equi-join key (case_id,
     * active_idx) co-partitions both scans (at 100 TB both sides bucket
@@ -1618,15 +1550,12 @@ object BinaryGate {
     val tmp = fixtureDir("q151")
     val initPaths = (0 until RstCases).map(c => writeInplaceInitCase(tmp, c))
     val init = graft.io.EclBinary.initFleet(s, initPaths.mkString(","), Seq("PORV", "FIPNUM"))
-      .withColumn("case_id",
-        regexp_extract(col("CASE"), "CASE([0-9]+)\\.INIT$", 1).cast("int"))
+      .withColumn("case_id", caseId)
       .select(col("case_id"), col("ACTIVE_IDX").as("active_idx"),
         (col("PORV") * 32).cast("long").as("porv32"),
         col("FIPNUM").cast("int").as("fipnum"))
     val rstPaths = (0 until RstCases).map(c => writeDepletionRstCase(tmp, c))
-    val rst = graft.io.EclBinary.restartFleet(s, rstPaths.mkString(","), Seq("SWAT"))
-      .withColumn("case_id",
-        regexp_extract(col("CASE"), "CASE([0-9]+)\\.UNRST$", 1).cast("int"))
+    val rst = readFleet(s, "unrst", rstPaths, "SWAT")
       .select(col("case_id"), col("DATE").cast("timestamp").as("date"),
         col("ACTIVE_IDX").as("active_idx"),
         (col("SWAT").cast("double") * 32).cast("long").as("sw32"))
@@ -1680,9 +1609,7 @@ object BinaryGate {
       .filter(size(col("kv")) === 2 && !col("kv")(0).startsWith("#"))
       .select(col("case_id"), col("kv")(0).as("param"),
         col("kv")(1).cast("double").as("pval"))
-    val sims = graft.write.SummaryWriter.corpusFromPath(s, s"$tmp/*.UNSMRY")
-      .withColumn("case_id",
-        regexp_extract(col("CASE"), "CASE([0-9]+)$", 1).cast("int"))
+    val sims = readFleet(s, "unsmry", Seq(s"$tmp/*.UNSMRY"))
       .select(col("case_id"), col("VECTOR").as("vector"),
         col("DATE").cast("timestamp").as("ts"),
         (col("VALUE") * 32).cast("long").as("sim32"))
@@ -1738,9 +1665,7 @@ object BinaryGate {
     val tmp = fixtureDir("q157")
     val paths = (0 until RstCases).map(c => writeDeltaRstCase(tmp, c))
     def fleet(ps: Seq[String]) =
-      graft.io.EclBinary.restartFleet(s, ps.mkString(","), Seq("PRESSURE"))
-        .withColumn("case_id",
-          regexp_extract(col("CASE"), "CASE([0-9]+)\\.UNRST$", 1).cast("int"))
+      readFleet(s, "unrst", ps, "PRESSURE")
         .select(col("case_id"), col("DATE").cast("timestamp").as("date"),
           col("ACTIVE_IDX").as("active_idx"),
           col("PRESSURE").cast("long").as("p"))
@@ -1898,10 +1823,8 @@ object BinaryGate {
       .distinct()
       .localCheckpoint(true)
     val wellAnc = wellAncestors(s, edges)
-    val sims = graft.write.SummaryWriter.corpusFromPath(s, s"$tmp/*.UNSMRY")
+    val sims = readFleet(s, "unsmry", Seq(s"$tmp/*.UNSMRY"))
       .filter(col("VECTOR").startsWith("WOPR:"))
-      .withColumn("case_id",
-        regexp_extract(col("CASE"), "CASE([0-9]+)$", 1).cast("int"))
       .select(col("case_id"), substring_index(col("VECTOR"), ":", -1).as("well"),
         col("DATE").cast("timestamp").as("date"),
         (col("VALUE") * 32).cast("long").as("v32"))
@@ -1991,9 +1914,7 @@ object BinaryGate {
   def q137EnsemblePercentiles(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val tmp = writeFleetFixture(s, "q137")
-    val base = graft.write.SummaryWriter.corpusFromPath(s, s"$tmp/*.UNSMRY")
-      .withColumn("case_id",
-        regexp_extract(col("CASE"), "CASE([0-9]+)$", 1).cast("int"))
+    val base = readFleet(s, "unsmry", Seq(s"$tmp/*.UNSMRY"))
       .select(col("VECTOR").as("vector"),
         col("DATE").cast("timestamp").as("date"),
         col("case_id"), (col("VALUE") * 32).cast("long").as("v32"))
@@ -2032,9 +1953,7 @@ object BinaryGate {
     import org.apache.spark.sql.expressions.Window
     val tmp = fixtureDir("q132")
     val paths = (0 until RstCases).map(c => writeDepletionRstCase(tmp, c))
-    graft.io.EclBinary.restartFleet(s, paths.mkString(","), Seq("PRESSURE"))
-      .withColumn("case_id",
-        regexp_extract(col("CASE"), "CASE([0-9]+)\\.UNRST$", 1).cast("int"))
+    readFleet(s, "unrst", paths, "PRESSURE")
       .select(col("case_id"), col("DATE").cast("timestamp").as("ts"),
         col("PRESSURE").cast("long").as("p"))
       .groupBy(col("case_id"), col("ts"))
@@ -2102,8 +2021,8 @@ object BinaryGate {
   /** Geometry/vector replay from the closed form: centers (i-½, j-½,
     * k²/2) for 1-based (i,j,k), VOLUME = k, ACTIVE_IDX = per-case rank
     * of the global index over active cells. Shared verbatim by q59
-    * (single-case reads unioned) and q117 (the fleet read) — identical
-    * fixtures, identical expected frame.
+    * (single-case reads unioned) and the [[gridFleet]] twins q117 and
+    * q164 — identical fixtures, identical expected frame.
     */
   private def gridOracle: String =
     s"""WITH cases AS (SELECT unnest(range($GridCases)) AS c),
@@ -2129,7 +2048,8 @@ object BinaryGate {
          FROM idx ORDER BY case_id, global_index"""
 
   /** Restart replay from the closed form — shared verbatim by q62
-    * (single-case reads unioned) and q120 (the fleet read).
+    * (single-case reads unioned) and the [[restartFleet]] twins q120
+    * and q165.
     */
   private def rstOracle: String = rstOracleWhere("TRUE")
 

@@ -135,11 +135,6 @@ object SummaryWriter {
   def read(spark: SparkSession, basePath: String): DataFrame =
     readWithStep(spark, basePath).drop("STEP")
 
-  /** As [[read]], plus the PARAMS-record ordinal as `STEP` — several
-    * ministeps can truncate to the same DATE, and STEP is the
-    * deterministic tiebreaker for last-state-wins consumers (the wide
-    * pivot; a bare `first()` over duplicate dates is order-dependent).
-    */
   /** Decode a SMSPEC's catalog: (per-param vector names, TIME index,
     * start date).
     */
@@ -201,41 +196,15 @@ object SummaryWriter {
       .filter(_.nonEmpty)
   }
 
-  /** FLEET read: every summary case matching the glob pattern(s) in ONE
-    * distributed plan — one task per case, the whole SMSPEC catalog +
-    * UNSMRY PARAMS decode EXECUTOR-side (the readers are plain
-    * java.io over the shared filesystem an ensemble layout lives on;
-    * [[read]]'s driver-streamed form remains for the single-case CLI
-    * path). Patterns address the `.UNSMRY` files —
-    * realizations/&#42;/CASE.UNSMRY, same glob dialect as the
-    * eclipse-deck source; output is the long form with the case base
-    * path as `CASE` — every downstream state operator keys on it
-    * exactly like `deckId` in the deck fleet. A 1000-realization
-    * ensemble runs as ~1000 independent tasks with no driver loop and
-    * no shuffle before the per-case frames.
-    */
-  def corpusFromPath(spark: SparkSession, patterns: String*): DataFrame = {
-    import graft.io.datasource.DeckScan
-    val paths = patterns
-      .flatMap(p => DeckScan.splitPaths(p))
-      .flatMap(p => DeckScan.expand(p, ext = ".UNSMRY"))
-      .filter(_.toUpperCase.endsWith(".UNSMRY"))
-      .distinct.sorted
-    require(paths.nonEmpty, s"no .UNSMRY files match ${patterns.mkString(", ")}")
-    import spark.implicits._
-    val par = math.max(1, math.min(paths.length, spark.sparkContext.defaultParallelism))
-    spark.createDataset(paths).repartition(par)
-      .flatMap(p => summaryCaseTuples(p))
-      .toDF("CASE", "DATE", "VECTOR", "VALUE", "STEP")
-  }
-
   /** One UNSMRY case decoded to `(CASE, DATE, VECTOR, VALUE, STEP)`
-    * tuples — the per-case kernel shared by [[corpusFromPath]]'s tasks
-    * and the `eclipse-unsmry` DataSourceV2 partition readers (one
-    * decode path). Takes the UNSMRY path AS LISTED (lowercase artifact
-    * sets stay readable); `CASE` = the path minus its 7-char extension;
-    * the SMSPEC sibling resolves preferring the canonical uppercase
-    * name, then lowercase. Held memory is the raw per-step float
+    * tuples — the per-case kernel of the `eclipse-unsmry` DataSourceV2
+    * partition readers (batch and streaming), the one fleet read of
+    * UNSMRY: one task per case, SMSPEC catalog + PARAMS decode
+    * executor-side over shared storage ([[read]]'s driver-streamed form
+    * remains for the single-case path). Takes the UNSMRY path AS
+    * LISTED (lowercase artifact sets stay readable); `CASE` = the path
+    * minus its 7-char extension; the SMSPEC sibling resolves
+    * preferring the canonical uppercase name, then lowercase. Held memory is the raw per-step float
     * payloads (≈ the file itself); the steps×vectors long-row expansion
     * is LAZY — [[readWithStep]]'s discipline, so a 1000-realization
     * ensemble task never materializes millions of boxed tuples. TIME
@@ -306,6 +275,11 @@ object SummaryWriter {
     }
   }
 
+  /** As [[read]], plus the PARAMS-record ordinal as `STEP` — several
+    * ministeps can truncate to the same DATE, and STEP is the
+    * deterministic tiebreaker for last-state-wins consumers (the wide
+    * pivot; a bare `first()` over duplicate dates is order-dependent).
+    */
   def readWithStep(spark: SparkSession, basePath: String): DataFrame = {
     val (vectors, timeIdx, start) = specCatalog(basePath)
     // STREAM one PARAMS record at a time (not EclKw.read's whole-file

@@ -179,12 +179,18 @@ class EclBinarySpec extends AnyFunSuite {
   }
 
   test("eclipse-egrid DSv2: format read equals the library read, pruning skips INIT") {
-    // the registered format and the library fleet read share the
-    // per-case kernel — equal row for row on the real artifact
+    // referee: the single-case readers, EGRID geometry joined on
+    // ACTIVE_IDX with the INIT vectors — equal row for row on the real
+    // artifact
     val viaFormat = spark.read.format("eclipse-egrid")
       .option("vectors", "PORO,PERMX")
       .load(s"$EightCells.EGRID").orderBy("ACTIVE_IDX").collect()
-    val lib = EclBinary.gridFleet(spark, s"$EightCells.EGRID", Seq("PORO", "PERMX"))
+    val lib = EclBinary.egrid(spark, s"$EightCells.EGRID")
+      .join(EclBinary.init(spark, s"$EightCells.INIT", Seq("PORO", "PERMX")),
+        Seq("ACTIVE_IDX"), "left")
+      .select((lit(EightCells).as("CASE") +: Seq("I", "J", "K", "X", "Y", "Z",
+        "Z_MIN", "Z_MAX", "VOLUME", "GLOBAL_INDEX", "ACTIVE_IDX", "PORO", "PERMX")
+        .map(col)): _*)
       .orderBy("ACTIVE_IDX").collect()
     assert(viaFormat.length == 8 && viaFormat.toSeq == lib.toSeq)
     // byte-level column pruning: an EGRID with NO INIT beside it scans
@@ -208,21 +214,26 @@ class EclBinarySpec extends AnyFunSuite {
   }
 
   test("eclipse-unsmry/rft DSv2: format reads equal the library reads on real artifacts") {
-    // UNSMRY: the format and corpusFromPath share summaryCaseTuples —
+    // UNSMRY: referee is the single-case driver-streamed reader —
     // row-identical on the real eightcells summary (incl. UNRST/RFT
     // siblings the extension filter must skip)
     val viaFormat = spark.read.format("eclipse-unsmry")
       .load(s"$EightCells.UNSMRY")
       .orderBy("VECTOR", "STEP").collect()
-    val lib = graft.write.SummaryWriter.corpusFromPath(spark, s"$EightCells.UNSMRY")
+    val lib = SummaryWriter.readWithStep(spark, EightCells)
+      .select(lit(EightCells).as("CASE"), col("DATE"), col("VECTOR"),
+        col("VALUE"), col("STEP"))
       .orderBy("VECTOR", "STEP").collect()
     assert(viaFormat.nonEmpty && viaFormat.toSeq == lib.toSeq)
-    // RFT: shared rftCaseRows on the real Reek RFT (OP_1 reports)
+    // RFT: referee is the single-case rft() read of the real Reek RFT
+    // (OP_1 reports)
     val reekRft = s"$ReekModel.RFT"
     val fmtRft = spark.read.format("eclipse-rft")
       .option("vectors", "DEPTH,PRESSURE").load(reekRft)
       .orderBy("DATE", "WELL", "CONIDX").collect()
-    val libRft = EclBinary.rftFleet(spark, reekRft, Seq("DEPTH", "PRESSURE"))
+    val libRft = EclBinary.rft(spark, reekRft)
+      .select(lit(reekRft).as("CASE"), col("DATE"), col("WELL"), col("CONIDX"),
+        col("DEPTH"), col("PRESSURE"))
       .orderBy("DATE", "WELL", "CONIDX").collect()
     assert(fmtRft.nonEmpty && fmtRft.toSeq == libRft.toSeq)
   }

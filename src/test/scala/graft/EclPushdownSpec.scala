@@ -639,8 +639,15 @@ class EclPushdownSpec extends AnyFunSuite {
     val stE = emptyScan.estimateStatistics()
     assert(stE.sizeInBytes.getAsLong === 0L)
     assert(!stE.numRows.isPresent)
-    intercept[Exception] { // the batch route keeps its loud failure
-      spark.read.format("eclipse-unsmry").load(s"$empty/*.UNSMRY").collect()
+    // the batch route keeps its loud failure on every binary format, and
+    // the message names the pattern that matched nothing
+    Seq("unsmry", "egrid", "unrst", "rft").foreach { kind =>
+      val pattern = s"$empty/*.${kind.toUpperCase}"
+      val e = intercept[Exception] {
+        spark.read.format(s"eclipse-$kind").load(pattern).collect()
+      }
+      assert(e.getMessage.contains(pattern),
+        s"eclipse-$kind empty-match message must name $pattern: ${e.getMessage}")
     }
     // STATS FRESHNESS on the SAME scan instance: a streaming query holds
     // one Scan for its whole life and realizations land mid-stream — a

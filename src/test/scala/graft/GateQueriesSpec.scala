@@ -796,6 +796,60 @@ class GateQueriesSpec extends AnyFunSuite {
     assert(fleet == perCase && fleet.nonEmpty)
   }
 
+  test("q117: the eclipse-egrid fleet equals the per-case egrid + init reads") {
+    val fleet = graft.queries.BinaryGate.q117GridFleet(spark, Sf).collect()
+      .map(_.toSeq).toSet
+    // referee: each case's single-case geometry read joined on
+    // ACTIVE_IDX with its single-case INIT read
+    val tmp = java.nio.file.Paths.get(
+      sys.props("java.io.tmpdir"), "graft-gate", "q117").toString
+    val perCase = (0 until 4).flatMap { c =>
+      graft.io.EclBinary.egrid(spark, s"$tmp/CASE$c.EGRID")
+        .join(graft.io.EclBinary.init(spark, s"$tmp/CASE$c.INIT", Seq("PORO", "PERMX")),
+          Seq("ACTIVE_IDX"), "left")
+        .select(lit(c).as("case_id"), col("I").as("i"), col("J").as("j"),
+          col("K").as("k"), col("X").as("x"), col("Y").as("y"), col("Z").as("z"),
+          col("Z_MIN").as("z_min"), col("Z_MAX").as("z_max"),
+          round(col("VOLUME"), 6).as("volume"),
+          col("GLOBAL_INDEX").as("global_index"), col("ACTIVE_IDX").as("active_idx"),
+          col("PORO").as("poro"), col("PERMX").as("permx"))
+        .collect().map(_.toSeq)
+    }.toSet
+    assert(fleet == perCase && fleet.nonEmpty)
+  }
+
+  test("q120: the eclipse-unrst fleet equals the per-case unrst reads") {
+    val fleet = graft.queries.BinaryGate.q120RestartFleet(spark, Sf).collect()
+      .map(_.toSeq).toSet
+    val tmp = java.nio.file.Paths.get(
+      sys.props("java.io.tmpdir"), "graft-gate", "q120").toString
+    val perCase = (0 until 4).flatMap { c =>
+      graft.io.EclBinary.unrst(spark, s"$tmp/CASE$c.UNRST", Seq("PRESSURE", "SWAT"))
+        .select(lit(c).as("case_id"), col("DATE").cast("timestamp").as("date"),
+          col("ACTIVE_IDX").as("active_idx"),
+          col("PRESSURE").as("pressure"), col("SWAT").as("swat"))
+        .collect().map(_.toSeq)
+    }.toSet
+    assert(fleet == perCase && fleet.nonEmpty)
+  }
+
+  test("binary fleet gates read through the eclipse-* scans, never an RDD") {
+    import graft.queries.BinaryGate._
+    Seq[(String, org.apache.spark.sql.DataFrame)](
+      "q114" -> q114SummaryFleet(spark, Sf), "q117" -> q117GridFleet(spark, Sf),
+      "q120" -> q120RestartFleet(spark, Sf), "q148" -> q148RftFleet(spark, Sf),
+      "q154" -> q154TreeRollup(spark, Sf), "q185" -> q185Breakthrough(spark, Sf)
+    ).foreach { case (q, df) =>
+      val optimized = df.queryExecution.optimizedPlan.toString
+      val physical = PlanText.finalPlanOf(df)
+      assert(physical.contains("BatchScan eclipse-"), s"$q: no eclipse-* scan\n$physical")
+      Seq("ExternalRDD", "LogicalRDD").foreach(n =>
+        assert(!optimized.contains(n), s"$q: $n in the optimized plan\n$optimized"))
+      Seq("ExistingRDD", "ExternalRDD").foreach(n =>
+        assert(!physical.contains(n), s"$q: $n in the physical plan\n$physical"))
+    }
+  }
+
   test("q144: coarse-block upscaling matches the closed-form volume weighting") {
     val out = graft.queries.BinaryGate.q144Upscale(spark, Sf).collect()
       .map(r => ((r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3)),
