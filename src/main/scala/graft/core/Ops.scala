@@ -70,45 +70,6 @@ object Ops {
   def unrollRange(df: DataFrame, c1: String, c2: String, out: String): DataFrame =
     df.withColumn(out, explode(sequence(col(c1).cast("long"), col(c2).cast("long"))))
 
-  /** Explicit table-count override for flat reshaped table records
-    * (reference inferdims.py:18-84 API parity): split each record's rows
-    * into tables wherever `sortCol` DECREASES (Eclipse tables are
-    * strictly increasing in their leading column — the same
-    * monotonicity rule opm's strict reparse enforces), number tables
-    * densely per keyword into `outCol`, and require the inferred count
-    * to equal `expected` PER KEYWORD OCCURRENCE (0 tables = keyword
-    * absent = nothing to check; the validation is one bounded driver
-    * action over a deck-sized frame). The decrease-at-boundary rule is
-    * a supported SUBSET of opm's TABDIMS-count-driven split: a deck
-    * whose adjacent tables do not decrease at the boundary (legal under
-    * opm when counts are explicit) fails loudly here rather than being
-    * mis-split. Expects `keywordIdx`/`recordIdx`/`rowIdx`.
-    */
-  def monotonicTableSplit(df: DataFrame, sortCol: String, outCol: String,
-      expected: Int, keyword: String): DataFrame = {
-    val sat = col(sortCol)
-    val byRow = Window.partitionBy(col("keywordIdx"), col("recordIdx"))
-      .orderBy(col("rowIdx"))
-    val cum = byRow.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val split = df
-      .withColumn("__newTab", when(sat < lag(sat, 1).over(byRow), 1).otherwise(0))
-      .withColumn("__tabInRec", sum(col("__newTab")).over(cum))
-    val byTab = Window.partitionBy(col("keywordIdx"))
-      .orderBy(col("recordIdx"), col("__tabInRec"))
-    val out = split.withColumn(outCol, dense_rank().over(byTab))
-      .drop("__newTab", "__tabInRec")
-    // per-occurrence check: dense_rank numbers tables within each
-    // keywordIdx, so every occurrence must independently yield `expected`
-    val counts = out.groupBy(col("keywordIdx")).agg(max(col(outCol)).as("got"))
-      .collect().map(r => (r.get(0), r.getInt(1)))
-    counts.foreach { case (kwIdx, got) =>
-      require(got == expected,
-        s"$keyword (keywordIdx=$kwIdx): explicit table count $expected given " +
-          s"but the deck's monotonicity boundaries yield $got tables")
-    }
-    out
-  }
-
   /** Last-wins dedup: keep the last row per key under `ord` ordering.
     * Reference: drop_duplicates(keep="last") state collapse,
     * compdat.py:917-922, gruptree.py:152-181 (A6/W7/O5).

@@ -28,9 +28,11 @@ final case class DeckEvent(
   * runs and `n*v` repeat runs.
   *
   * Decks are driver-sized artifacts (text written by engineers); the parse
-  * is driver-side and the result becomes a Dataset so everything downstream
-  * is distributed. For many-deck corpora, parse inside mapPartitions over
-  * (path, text) pairs instead — the tokenizer is a pure function.
+  * is driver-side and the result becomes a local relation, so the
+  * single-deck modules type and reshape it on the driver without a job.
+  * For many-deck corpora, parse inside mapPartitions over (path, text)
+  * pairs instead (the `eclipse-deck` source) — the tokenizer is a pure
+  * function.
   */
 object DeckParser {
 
@@ -208,7 +210,7 @@ object DeckParser {
     events.result()
   }
 
-  /** Parse into a Dataset so downstream transforms are distributed. */
+  /** Parse into a Dataset over a local relation of the deck's records. */
   def toDS(spark: SparkSession, text: String, deckId: String = ""): Dataset[DeckEvent] = {
     import spark.implicits._
     spark.createDataset(parse(text, deckId))

@@ -1,8 +1,9 @@
 package graft.modules
 
 import java.time.ZoneId
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, IntegerType, StringType, StructField, StructType}
 import graft.core.Ops
 import graft.io.{DeckParser, Records => R}
 
@@ -29,11 +30,31 @@ object Faults {
 /** EQUIL + the depth-profile sub-keywords (equil.py:30-128): EQUIL is one
   * row per EQLNUM (R7 record counter); RSVD/RVVD/PBVD/PDVD are per-EQLNUM
   * (depth, value) DATA tables (R6 reshape), unioned with per-keyword
-  * column sets (U1).
+  * column sets (U1). Built on the driver from the parsed deck
+  * ([[DeckTable]]).
   */
 object Equil {
   private val SubKeywords = Map(
     "RSVD" -> "RS", "RVVD" -> "RV", "PBVD" -> "PB", "PDVD" -> "PD")
+
+  private val Phases = Seq("OIL", "WATER", "GAS")
+
+  /** The EQUIL, sub-keyword and phase records of an event frame, typed. */
+  private def typed(events: DataFrame): DeckTable.Typed = {
+    val kw = col("keyword")
+    val nonEmpty = size(col("items")) > 0
+    DeckTable.typed(events, "EQUIL" +: SubKeywords.keys.toSeq ++: Phases,
+      when(kw === "EQUIL" && nonEmpty, struct(R.dbl(0).as("Z"), R.dbl(1).as("PRESSURE"),
+        R.dbl(2, 0.0).as("C1"), R.dbl(3, 0.0).as("PCC1"), R.dbl(4, 0.0).as("C2"),
+        R.dbl(5, 0.0).as("PCC2"), R.int(6).as("INITRS"), R.int(7).as("INITRV"),
+        R.int(8).as("ACCURACY"))).as("EQUIL") +:
+        SubKeywords.toSeq.map { case (k, v) =>
+          when(kw === k && nonEmpty, R.dataChunks(Seq("Z", v))).as(k)
+        }: _*)
+  }
+
+  private def region(name: String) = Seq(StructField(name, IntegerType, nullable = false),
+    StructField("KEYWORD", StringType, nullable = false))
 
   /** EQUIL record positions are fixed; the CONTACT COLUMN NAMES depend on
     * the deck's phase configuration (reference equil.py phases handling,
@@ -41,45 +62,51 @@ object Equil {
     * (same slot), gas-oil → that slot is ignored; the GOC slot only
     * exists when both oil and gas are present.
     */
-  def equil(events: DataFrame, phases: Set[String] = Set("OIL", "WATER", "GAS")): DataFrame = {
+  private def equilPart(t: DeckTable.Typed, phases: Set[String]): DeckTable.Part = {
     val (oil, water, gas) =
       (phases contains "OIL", phases contains "WATER", phases contains "GAS")
-    val base = events.filter(col("keyword") === "EQUIL" && size(col("items")) > 0)
     val contact1 =
       if (oil && water) Some("OWC") else if (gas && water) Some("GWC") else None
     val contact2 = if (oil && gas) Some("GOC") else None
-    val cols = Seq((col("recordIdx") + 1).as("EQLNUM"), lit("EQUIL").as("KEYWORD"),
-      R.dbl(0).as("Z"), R.dbl(1).as("PRESSURE")) ++
-      contact1.toSeq.flatMap(n => Seq(R.dbl(2, 0.0).as(n), R.dbl(3, 0.0).as(s"PC$n"))) ++
-      contact2.toSeq.flatMap(n => Seq(R.dbl(4, 0.0).as(n), R.dbl(5, 0.0).as(s"PC$n"))) ++
-      Seq(R.int(6).as("INITRS"), R.int(7).as("INITRV"), R.int(8).as("ACCURACY"))
-    base.select(cols: _*)
+    // (slot in the typed EQUIL struct, output name)
+    val slots = Seq(0 -> "Z", 1 -> "PRESSURE") ++
+      contact1.toSeq.flatMap(n => Seq(2 -> n, 3 -> s"PC$n")) ++
+      contact2.toSeq.flatMap(n => Seq(4 -> n, 5 -> s"PC$n")) ++
+      Seq(6 -> "INITRS", 7 -> "INITRV", 8 -> "ACCURACY")
+    val fields = t.struct("EQUIL").fields
+    val i = t.index("EQUIL")
+    DeckTable.Part(
+      StructType(region("EQLNUM") ++ slots.map { case (s, n) => fields(s).copy(name = n) }),
+      t.rows.filter(!_.isNullAt(i)).map { r =>
+        val rec = r.getStruct(i)
+        Seq(r.getInt(2) + 1, "EQUIL") ++ slots.map { case (s, _) => rec.get(s) }
+      })
   }
 
-  def subKeyword(events: DataFrame, kw: String): DataFrame =
-    events.filter(col("keyword") === kw && size(col("items")) > 0)
-      .select((col("recordIdx") + 1).as("EQLNUM"), lit(kw).as("KEYWORD"),
-        explode(R.dataChunks(Seq("Z", SubKeywords(kw)))).as("row"))
-      .select(col("EQLNUM"), col("KEYWORD"), col("row.Z").as("Z"),
-        col(s"row.${SubKeywords(kw)}").as(SubKeywords(kw)))
+  private def subPart(t: DeckTable.Typed, kw: String): DeckTable.Part =
+    DeckTable.Part(StructType(region("EQLNUM") ++ t.struct(kw).fields.tail),
+      DeckTable.chunks(t, kw).map(c => Seq(c.recordIdx + 1, kw) ++ c.values))
+
+  private def phases(t: DeckTable.Typed): Set[String] = {
+    val ph = t.rows.map(_.getString(0)).filter(Phases.contains).toSet
+    if (ph.isEmpty) Phases.toSet else ph
+  }
 
   /** Phase keywords present in the deck; an undeclared deck (no phase
     * keywords at all) is treated as three-phase.
     */
-  def phasesFromEvents(events: DataFrame): Set[String] = {
-    val ph = events.filter(col("keyword").isin("OIL", "WATER", "GAS"))
-      .select("keyword").distinct().collect().map(_.getString(0)).toSet
-    if (ph.isEmpty) Set("OIL", "WATER", "GAS") else ph
-  }
+  def phasesFromEvents(events: DataFrame): Set[String] = phases(typed(events))
 
+  /** The EQUIL rows of an event frame under the given phases. */
+  def equil(events: DataFrame, phases: Set[String] = Phases.toSet): DataFrame =
+    DeckTable.toDF(events.sparkSession, equilPart(typed(events), phases))
+
+  /** EQUIL and the sub-keyword tables, ordered by EQLNUM then KEYWORD. */
   def df(spark: SparkSession, deckText: String): DataFrame = {
-    val events = DeckParser.toDS(spark, deckText).toDF()
-    val parts = (equil(events, phasesFromEvents(events)) +:
-      SubKeywords.keys.toSeq.sorted.map(subKeyword(events, _)))
-      .filter(d => !d.isEmpty)
-    parts.reduceOption((a, b) => a.unionByName(b, allowMissingColumns = true))
-      .getOrElse(spark.emptyDataFrame)
-      .orderBy(col("EQLNUM"), col("KEYWORD"))
+    val t = typed(DeckParser.toDS(spark, deckText).toDF())
+    DeckTable.union(equilPart(t, phases(t)) +: SubKeywords.keys.toSeq.sorted.map(subPart(t, _)))
+      .fold(spark.emptyDataFrame)(u => DeckTable.toDF(spark,
+        u.copy(rows = u.rows.sortBy(r => (r.head.asInstanceOf[Int], r(1).asInstanceOf[String])))))
   }
 }
 
@@ -87,99 +114,96 @@ object Equil {
   * one row per PVTNUM (record counter); PVDO/PVDG are DATA reshapes per
   * PVTNUM; PVTO (nested undersaturated lines) uses the empty-record counter
   * (R7 emptyrecordcountername): records accumulate into the current PVTNUM
-  * until a record with zero items closes the region's table.
+  * until a record with zero items closes the region's table. Built on the
+  * driver from the parsed deck ([[DeckTable]]).
   */
 object Pvt {
-  private def recordCounted(events: DataFrame, kw: String): DataFrame =
-    events.filter(col("keyword") === kw && size(col("items")) > 0)
-      .withColumn("PVTNUM", col("recordIdx") + 1)
+  private val DeadOil = Seq("PRESSURE", "VOLUMEFACTOR", "VISCOSITY")
 
-  def density(events: DataFrame): DataFrame =
-    recordCounted(events, "DENSITY")
-      .select(lit("DENSITY").as("KEYWORD"), col("PVTNUM"),
-        R.dbl(0).as("OILDENSITY"), R.dbl(1).as("WATERDENSITY"), R.dbl(2).as("GASDENSITY"))
+  /** Record-counted keywords and their typed record. */
+  private val Counted: Seq[(String, Column)] = Seq(
+    "DENSITY" -> struct(R.dbl(0).as("OILDENSITY"), R.dbl(1).as("WATERDENSITY"),
+      R.dbl(2).as("GASDENSITY")),
+    "ROCK" -> struct(R.dbl(0).as("PRESSURE"), R.dbl(1).as("COMPRESSIBILITY")),
+    "PVTW" -> struct(R.dbl(0).as("PRESSURE"), R.dbl(1).as("VOLUMEFACTOR"),
+      R.dbl(2, 0.0).as("COMPRESSIBILITY"), R.dbl(3, 0.0).as("VISCOSITY"),
+      R.dbl(4, 0.0).as("VISCOSIBILITY")))
 
-  def rock(events: DataFrame): DataFrame =
-    recordCounted(events, "ROCK")
-      .select(lit("ROCK").as("KEYWORD"), col("PVTNUM"),
-        R.dbl(0).as("PRESSURE"), R.dbl(1).as("COMPRESSIBILITY"))
+  /** Nested undersaturated-line keywords (PVTO/PVTG): head column and the
+    * value triple of each line.
+    */
+  private val Nested: Seq[(String, String, Seq[String])] = Seq(
+    // PVTO: live oil — RS head, (PRESSURE, VOLUMEFACTOR, VISCOSITY) lines
+    // (pvt.py:49, 126-140); bubble-point pressure is named PRESSURE for
+    // mergeability, like the reference
+    ("PVTO", "RS", DeadOil),
+    // PVTG: wet gas — gas PRESSURE head, (OGR, VOLUMEFACTOR, VISCOSITY)
+    // undersaturated lines (pvt.py:57-60, 176-194)
+    ("PVTG", "PRESSURE", Seq("OGR", "VOLUMEFACTOR", "VISCOSITY")))
 
-  def pvtw(events: DataFrame): DataFrame =
-    recordCounted(events, "PVTW")
-      .select(lit("PVTW").as("KEYWORD"), col("PVTNUM"),
-        R.dbl(0).as("PRESSURE"), R.dbl(1).as("VOLUMEFACTOR"),
-        R.dbl(2, 0.0).as("COMPRESSIBILITY"), R.dbl(3, 0.0).as("VISCOSITY"),
-        R.dbl(4, 0.0).as("VISCOSIBILITY"))
+  /** A nested record: `headCol` followed by value triplets that share it. */
+  private def nestedRecord(headCol: String, triple: Seq[String]): Column =
+    struct(R.dbl(0).as(headCol), transform(
+      sequence(lit(0), ((size(col("items")) - 1) / 3).cast("int") - 1),
+      r => struct(triple.indices.map(j =>
+        get(col("items"), r * 3 + j + 1).cast("double").as(triple(j))): _*)).as("lines"))
+
+  private def head(region: StructField) =
+    Seq(StructField("KEYWORD", StringType, nullable = false), region)
+
+  private val Pvtnum = StructField("PVTNUM", IntegerType, nullable = false)
 
   /** PVDO/PVDG reshape; `ntpvt` is the explicit table-count override
     * (inferdims.py:18-84 API parity, TABDIMS item 1): with it, records
     * split into tables wherever PRESSURE decreases (strictly increasing
-    * within a dead-oil/dry-gas table) and the count must equal `ntpvt`.
+    * within a dead-oil/dry-gas table) and the count must equal `ntpvt`
+    * ([[DeckTable.tableNumbers]]).
     */
-  private def dataKeyword(events: DataFrame, kw: String,
-      ntpvt: Option[Int]): DataFrame = {
-    val cols = Seq("PRESSURE", "VOLUMEFACTOR", "VISCOSITY")
-    val base = events.filter(col("keyword") === kw && size(col("items")) > 0)
-      .select(col("keywordIdx"), col("recordIdx"),
-        explode(R.dataChunks(cols)).as("row"))
-      .select(Seq(col("keywordIdx"), col("recordIdx"),
-        col("row.row_idx").as("rowIdx")) ++
-        cols.map(c => col(s"row.$c").as(c)): _*)
-    val numbered = ntpvt match {
-      case None => base.withColumn("PVTNUM", (col("recordIdx") + 1).cast("int"))
-      case Some(n) =>
-        graft.core.Ops.monotonicTableSplit(base, "PRESSURE", "PVTNUM", n, kw)
+  private def dataPart(t: DeckTable.Typed, kw: String, ntpvt: Option[Int]): DeckTable.Part = {
+    val chunks = DeckTable.chunks(t, kw)
+    val pvtnum = DeckTable.tableNumbers(chunks, kw, ntpvt)
+    DeckTable.Part(StructType(head(Pvtnum) ++ t.struct(kw).fields.tail),
+      chunks.zip(pvtnum).map { case (c, n) => Seq(kw, n) ++ c.values })
+  }
+
+  /** Records until an empty record belong to one PVTNUM, counted per
+    * keyword occurrence (R7 emptyrecordcountername). The engine types a
+    * running count as nullable, and so does this column.
+    */
+  private def nestedPart(t: DeckTable.Typed, kw: String): DeckTable.Part = {
+    val i = t.index(kw)
+    val rec = t.struct(kw)
+    val line = rec("lines").dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
+    var occurrence = -1
+    var empties = 0
+    val rows = t.rows.filter(_.getString(0) == kw).flatMap { r =>
+      if (r.getInt(1) != occurrence) { occurrence = r.getInt(1); empties = 0 }
+      if (r.isNullAt(i)) { empties += 1; Nil }
+      else {
+        val v = r.getStruct(i)
+        v.getSeq[Row](1).map(l => Seq(kw, empties + 1, v.get(0)) ++ l.toSeq)
+      }
     }
-    numbered.select(Seq(lit(kw).as("KEYWORD"), col("PVTNUM")) ++ cols.map(col): _*)
+    DeckTable.Part(StructType(head(Pvtnum.copy(nullable = true)) ++ (rec.fields.head +: line.fields)),
+      rows)
   }
-
-  /** Nested undersaturated-line keyword (PVTO/PVTG): records until an
-    * empty record belong to one PVTNUM (R7 emptyrecordcountername); each
-    * record is `headCol` followed by value triplets that share it.
-    */
-  private def nestedKeyword(events: DataFrame, kw: String, headCol: String,
-      triple: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("keywordIdx")).orderBy(col("recordIdx"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    events.filter(col("keyword") === kw)
-      .withColumn("PVTNUM",
-        (sum(when(size(col("items")) === 0, 1).otherwise(0)).over(w) -
-          when(size(col("items")) === 0, 1).otherwise(0) + 1).cast("int"))
-      .filter(size(col("items")) > 0)
-      .select(lit(kw).as("KEYWORD"), col("PVTNUM"), R.dbl(0).as(headCol),
-        explode(transform(
-          sequence(lit(0), ((size(col("items")) - 1) / 3).cast("int") - 1),
-          r => struct(
-            get(col("items"), r * 3 + 1).cast("double").as(triple(0)),
-            get(col("items"), r * 3 + 2).cast("double").as(triple(1)),
-            get(col("items"), r * 3 + 3).cast("double").as(triple(2))))).as("row"))
-      .select(Seq(col("KEYWORD"), col("PVTNUM"), col(headCol)) ++
-        triple.map(t => col(s"row.$t").as(t)): _*)
-  }
-
-  /** PVTO: live oil — RS head, (PRESSURE, VOLUMEFACTOR, VISCOSITY) lines
-    * (pvt.py:49, 126-140). Bubble-point pressure is named PRESSURE for
-    * mergeability, like the reference.
-    */
-  def pvto(events: DataFrame): DataFrame =
-    nestedKeyword(events, "PVTO", "RS", Seq("PRESSURE", "VOLUMEFACTOR", "VISCOSITY"))
-
-  /** PVTG: wet gas — gas PRESSURE head, (OGR, VOLUMEFACTOR, VISCOSITY)
-    * undersaturated lines (pvt.py:57-60, 176-194).
-    */
-  def pvtg(events: DataFrame): DataFrame =
-    nestedKeyword(events, "PVTG", "PRESSURE", Seq("OGR", "VOLUMEFACTOR", "VISCOSITY"))
 
   def df(spark: SparkSession, deckText: String,
       ntpvt: Option[Int] = None): DataFrame = {
-    val events = DeckParser.toDS(spark, deckText).toDF()
-    val parts = Seq(density(events), rock(events), pvtw(events),
-      dataKeyword(events, "PVDO", ntpvt), dataKeyword(events, "PVDG", ntpvt),
-      pvto(events), pvtg(events))
-      .filter(d => !d.isEmpty)
-    parts.reduceOption((a, b) => a.unionByName(b, allowMissingColumns = true))
-      .getOrElse(spark.emptyDataFrame)
+    val kw = col("keyword")
+    val nonEmpty = size(col("items")) > 0
+    val t = DeckTable.typed(DeckParser.toDS(spark, deckText).toDF(),
+      Counted.map(_._1) ++ Seq("PVDO", "PVDG") ++ Nested.map(_._1),
+      Counted.map { case (k, c) => when(kw === k && nonEmpty, c).as(k) } ++
+        Seq("PVDO", "PVDG").map(k => when(kw === k && nonEmpty, R.dataChunks(DeadOil)).as(k)) ++
+        Nested.map { case (k, h, tr) => when(kw === k && nonEmpty, nestedRecord(h, tr)).as(k) }: _*)
+    val counted = Counted.map { case (k, _) =>
+      val i = t.index(k)
+      DeckTable.Part(StructType(head(Pvtnum) ++ t.struct(k).fields),
+        t.rows.filter(!_.isNullAt(i)).map(r => Seq(k, r.getInt(2) + 1) ++ r.getStruct(i).toSeq))
+    }
+    DeckTable.unionDF(spark, counted ++ Seq("PVDO", "PVDG").map(dataPart(t, _, ntpvt)) ++
+      Nested.map(n => nestedPart(t, n._1)))
   }
 }
 

@@ -1422,7 +1422,9 @@ object BinaryGate {
   def q143StreamMisfit(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     val tmp = writeFleetFixture(s, "q143")
-    val fleet = readFleet(s, "unsmry", Seq(s"$tmp/*.UNSMRY"))
+    // one realization's decoded summary: a read of its own file, so
+    // staging decodes each case once
+    def arrival(c: Int) = readFleet(s, "unsmry", Seq(s"$tmp/CASE$c.UNSMRY"))
       .select(col("case_id"), col("VECTOR").as("vector"),
         col("DATE").cast("timestamp").as("ts"),
         (col("VALUE") * 32).cast("long").as("sim32"))
@@ -1431,7 +1433,7 @@ object BinaryGate {
     val stage = fixtureDir("q143") + "/arrivals"
     (0 until FleetCases).foreach { c =>
       val tmpOut = s"$stage/_tmp"
-      fleet.filter(col("case_id") === c).coalesce(1)
+      arrival(c).coalesce(1)
         .write.mode("overwrite").parquet(tmpOut)
       val part = new java.io.File(tmpOut).listFiles()
         .find(_.getName.endsWith(".parquet")).get
@@ -1440,7 +1442,7 @@ object BinaryGate {
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$stage/_tmp"))
-    val stream = s.readStream.schema(fleet.schema)
+    val stream = s.readStream.schema(arrival(0).schema)
       .option("pathGlobFilter", "fleet_*.parquet").parquet(stage)
     val sink = "q143_sink"
     s.catalog.dropTempView(sink)

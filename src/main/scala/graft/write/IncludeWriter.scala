@@ -1,6 +1,7 @@
 package graft.write
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
 
 /** Include-file text sinks — the reverse path (df2res): DataFrame →
   * Eclipse keyword text.
@@ -10,10 +11,11 @@ import org.apache.spark.sql.DataFrame
   * run-length-encoded grid vector export grid.py:623-756 +
   * runlength_compress common.py:753-784 (S14, the `5*2` syntax).
   *
-  * Include files are human-readable driver-sized text, so formatting runs
-  * on collected rows (the reference does the same); the RLE itself is a
-  * linear fold. For cluster-sized exports, write per-partition fragments
-  * with the same fold and concatenate.
+  * Include files are human-readable driver-sized text, so each writer
+  * collects its input once and formats the collected rows on the driver
+  * (the reference does the same); the RLE itself is a linear fold. For
+  * cluster-sized exports, write per-partition fragments with the same
+  * fold and concatenate.
   */
 object IncludeWriter {
 
@@ -33,17 +35,53 @@ object IncludeWriter {
   private def quoteType(s: String): String =
     if (s == "''" || s == null) "''" else s"'$s'"
 
+  /** Collected rows under their column names. A name resolves exactly,
+    * else case-insensitively, like a column reference.
+    */
+  private final case class Table(columns: IndexedSeq[String], rows: IndexedSeq[IndexedSeq[Any]]) {
+    def has(c: String): Boolean = columns.contains(c)
+    def index(c: String): Int = columns.indexOf(c) match {
+      case -1 =>
+        val i = columns.indexWhere(_.equalsIgnoreCase(c))
+        require(i >= 0, s"no column $c among ${columns.mkString(", ")}")
+        i
+      case i => i
+    }
+    def select(cs: Seq[String]): Table = {
+      val at = cs.map(index)
+      Table(at.map(columns).toIndexedSeq, rows.map(r => at.map(r).toIndexedSeq))
+    }
+  }
+
+  private object Table {
+    def apply(df: DataFrame): Table =
+      Table(df.columns.toIndexedSeq, df.collect().map(_.toSeq.toIndexedSeq).toIndexedSeq)
+  }
+
+  /** Ascending order of a region column's values, nulls first. */
+  private val ValueOrder: Ordering[Any] = (a: Any, b: Any) => (a, b) match {
+    case (null, null) => 0
+    case (null, _) => -1
+    case (_, null) => 1
+    case (x: Number, y: Number) => java.lang.Double.compare(x.doubleValue, y.doubleValue)
+    case (x: Comparable[Any] @unchecked, y) => x.compareTo(y)
+    case (x, y) => throw new IllegalArgumentException(s"cannot order $x against $y")
+  }
+
   /** Generic keyword table: one record line per row, `1*` for nulls,
     * trailing defaults elided, terminating slash per record and a lone
     * slash closing the keyword.
     */
-  def genericDeckTable(df: DataFrame, keyword: String, comment: Option[String] = None): String = {
+  def genericDeckTable(df: DataFrame, keyword: String, comment: Option[String] = None): String =
+    deckTable(Table(df), keyword, comment)
+
+  private def deckTable(t: Table, keyword: String, comment: Option[String] = None): String = {
     val sb = new StringBuilder
     comment.foreach(c => sb.append(c.linesIterator.map("-- " + _).mkString("", "\n", "\n")))
     sb.append(keyword).append('\n')
-    sb.append("-- ").append(df.columns.mkString(" ")).append('\n')
-    df.collect().foreach { row =>
-      val cells = row.toSeq.map(fmt)
+    sb.append("-- ").append(t.columns.mkString(" ")).append('\n')
+    t.rows.foreach { row =>
+      val cells = row.map(fmt)
       // elide the trailing run of defaulted values (reference common.py:694-696)
       val trimmed = cells.reverse.dropWhile(_ == "1*").reverse
       sb.append("  ").append(trimmed.mkString(" ")).append(" /\n")
@@ -59,18 +97,22 @@ object IncludeWriter {
     * corresponding module reader (record index == region number).
     */
   def tableKeyword(df: DataFrame, keyword: String, regionCol: String,
+      valueCols: Seq[String]): String =
+    table(Table(df.select((regionCol +: valueCols).map(col): _*)), keyword, regionCol, valueCols)
+
+  /** [[tableKeyword]] over rows of (region, values...). */
+  private def table(t: Table, keyword: String, regionCol: String,
       valueCols: Seq[String]): String = {
-    import org.apache.spark.sql.functions.col
     val sb = new StringBuilder
     sb.append(keyword).append('\n')
     sb.append("-- ").append(valueCols.mkString(" ")).append('\n')
-    val rows = df.select((regionCol +: valueCols).map(col): _*).collect()
-    val nullRegions = rows.count(_.isNullAt(0))
+    val rows = t.rows
+    val nullRegions = rows.count(_.head == null)
     require(nullRegions == 0,
       s"$keyword: $nullRegions rows with null $regionCol — region is the table key")
-    rows.groupBy(_.get(0).toString.toDouble.toInt).toSeq.sortBy(_._1)
+    rows.groupBy(_.head.toString.toDouble.toInt).toSeq.sortBy(_._1)
       .foreach { case (_, rs) =>
-        rs.foreach(r => sb.append("  ").append(r.toSeq.tail.map(fmt).mkString(" ")).append('\n'))
+        rs.foreach(r => sb.append("  ").append(r.tail.map(fmt).mkString(" ")).append('\n'))
         sb.append("/\n")
       }
     sb.toString
@@ -85,35 +127,39 @@ object IncludeWriter {
     */
   def nestedTableKeyword(df: DataFrame, keyword: String, regionCol: String,
       headCol: String, triple: Seq[String],
-      descendingLines: Boolean = false): String = {
-    import org.apache.spark.sql.functions.col
+      descendingLines: Boolean = false): String =
+    nested(Table(df.select((Seq(regionCol, headCol) ++ triple).map(c => col(s"`$c`")): _*)),
+      keyword, regionCol, headCol, triple, descendingLines)
+
+  /** [[nestedTableKeyword]] over rows of (region, head, triple...). */
+  private def nested(t: Table, keyword: String, regionCol: String,
+      headCol: String, triple: Seq[String], descendingLines: Boolean): String = {
     val sb = new StringBuilder
     sb.append(keyword).append('\n')
     sb.append("-- ").append((headCol +: triple).mkString(" ")).append('\n')
-    val rows = df.select((Seq(regionCol, headCol) ++ triple).map(c => col(s"`$c`")): _*)
-      .collect()
-    val nullKeys = rows.count(r => r.isNullAt(0) || r.isNullAt(1))
+    val rows = t.rows
+    val nullKeys = rows.count(r => r(0) == null || r(1) == null)
     require(nullKeys == 0,
       s"$keyword: $nullKeys rows with null $regionCol/$headCol — both are record keys")
-    rows.groupBy(_.get(0).toString.toDouble.toInt).toSeq.sortBy(_._1).foreach {
+    rows.groupBy(_(0).toString.toDouble.toInt).toSeq.sortBy(_._1).foreach {
       case (_, regionRows) =>
         // group records by the RAW head value (row identity), sort by its
         // numeric value — parsing to double first would silently merge
         // distinct records whose formatted heads happen to parse equal
-        regionRows.groupBy(_.get(1)).toSeq.sortBy(_._1.toString.toDouble).foreach {
+        regionRows.groupBy(_(1)).toSeq.sortBy(_._1.toString.toDouble).foreach {
           case (_, recRows0) =>
             // undersaturated lines in a deterministic, convention-correct
             // order — Spark collect order is partition-scan order, not the
             // frame's logical order (unlike the reference's stable pandas
             // index): PVTO lines ascend in pressure, PVTG descend in OGR
             val recRows = {
-              val sorted = recRows0.sortBy(_.get(2).toString.toDouble)
+              val sorted = recRows0.sortBy(_(2).toString.toDouble)
               if (descendingLines) sorted.reverse else sorted
             }
-            sb.append("  ").append(fmt(recRows.head.get(1)))
+            sb.append("  ").append(fmt(recRows.head(1)))
             recRows.zipWithIndex.foreach { case (r, i) =>
               if (i > 0) sb.append("\n   ")
-              sb.append("  ").append((2 until 2 + triple.length).map(j => fmt(r.get(j))).mkString(" "))
+              sb.append("  ").append((2 until 2 + triple.length).map(j => fmt(r(j))).mkString(" "))
             }
             sb.append(" /\n")
         }
@@ -175,10 +221,12 @@ object IncludeWriter {
         s"'${h.getAs[String]("TAB_TYPE")}' /\n")
       Seq(flow, thp, wfr, gfr, alq).foreach(a =>
         sb.append("  ").append(a.map(fmt).mkString(" ")).append(" /\n"))
+      // each row under its (THP, WFR, GFR, ALQ) point; Seq equality on
+      // doubles is numeric (-0.0 is 0.0, NaN matches nothing)
+      val byPoint = rs.groupBy(r =>
+        Seq("PRESSURE", "WFR", "GFR", "ALQ").map(c => r.getAs[Double](c)))
       for (ti <- thp.indices; wi <- wfr.indices; gi <- gfr.indices; ai <- alq.indices) {
-        val pts = rs.filter(r => r.getAs[Double]("PRESSURE") == thp(ti) &&
-          r.getAs[Double]("WFR") == wfr(wi) && r.getAs[Double]("GFR") == gfr(gi) &&
-          r.getAs[Double]("ALQ") == alq(ai))
+        val pts = byPoint.getOrElse(Seq(thp(ti), wfr(wi), gfr(gi), alq(ai)), Array.empty[Row])
         if (pts.nonEmpty) {
           val tab = pts.sortBy(_.getAs[Double]("RATE")).map(r => fmt(r.getAs[Double]("TAB")))
           sb.append(s"  ${ti + 1} ${wi + 1} ${gi + 1} ${ai + 1} ")
@@ -267,65 +315,67 @@ object IncludeWriter {
   def df2res(df: DataFrame, keywords: Option[Seq[String]] = None,
       comments: Map[String, String] = Map.empty,
       consecutive: Option[String] = None): String = {
-    import org.apache.spark.sql.functions.{col, count, lit, min, monotonically_increasing_id}
     require(df.columns.contains("KEYWORD"), "df2res needs a KEYWORD column")
+    val all = Table(df)
     // the reference refuses region columns with gaps (EQLNUM/SATNUM/PVTNUM
     // must be 1..max consecutive — common.py:528-560): a gap silently
     // renumbers every later region on re-parse, so fail fast instead
-    consecutive.filter(df.columns.contains).foreach { c =>
-      val vals = df.select(col(c).cast("long")).na.drop().distinct()
-        .collect().map(_.getLong(0)).sorted
+    consecutive.filter(all.has).foreach { c =>
+      val i = all.index(c)
+      val vals = all.rows.map(_(i)).filter(_ != null).map {
+        case n: Number => n.longValue
+        case v => v.toString.trim.toLong
+      }.distinct.sorted
       require(vals.isEmpty || (vals.head == 1L && vals.last == vals.length.toLong),
         s"$c must be consecutive from 1, got ${vals.mkString(",")}")
     }
     val masterComment = comments.get("master")
       .map(_.linesIterator.map("-- " + _).mkString("", "\n", "\n")).getOrElse("")
-    val firstSeen = df.withColumn("__ord", monotonically_increasing_id())
-      .groupBy("KEYWORD").agg(min(col("__ord")).as("__first"))
-      .orderBy(col("__first")).collect().map(_.getString(0)).toSeq
+    val kwAt = all.index("KEYWORD")
+    val firstSeen = all.rows.map(_(kwAt).asInstanceOf[String]).distinct
     val order = keywords.map(_.filter(firstSeen.toSet)).getOrElse(firstSeen)
     masterComment + order.map { kw =>
-      val part0 = df.filter(col("KEYWORD") === kw)
-      val region = regionColumns.find(part0.columns.contains)
-      val part = region.map(r => part0.orderBy(col(r))).getOrElse(part0)
+      val part0 = all.copy(rows = all.rows.filter(r => r(kwAt) != null && r(kwAt) == kw))
+      val region = regionColumns.find(part0.has)
+      val part = region.fold(part0) { r =>
+        val i = part0.index(r)
+        part0.copy(rows = part0.rows.sortBy(_(i))(ValueOrder))
+      }
       val comment = comments.get(kw)
         .map(_.linesIterator.map("-- " + _).mkString("", "\n", "\n")).getOrElse("")
       comment + (tableFamilies.get(kw) match {
-        case Some((regionCol, cols)) if part.columns.contains(regionCol) =>
-          tableKeyword(part, kw, regionCol, cols.filter(part.columns.contains))
+        case Some((regionCol, cols)) if part.has(regionCol) =>
+          val present = cols.filter(part.has)
+          table(part.select(regionCol +: present), kw, regionCol, present)
         case _ if nestedFamilies.contains(kw) =>
           val (head, triple) = nestedFamilies(kw)
           // a frame without PVTNUM is a single region (the reference
           // fills PVTNUM=1, pvt.py:609-614)
-          val withRegion = if (part.columns.contains("PVTNUM")) part
-            else part.withColumn("PVTNUM", lit(1))
-          nestedTableKeyword(withRegion, kw, "PVTNUM", head, triple,
+          val withRegion = if (part.has("PVTNUM")) part
+            else Table(part.columns :+ "PVTNUM", part.rows.map(_ :+ 1))
+          nested(withRegion.select(Seq("PVTNUM", head) ++ triple), kw, "PVTNUM", head, triple,
             descendingLines = kw == "PVTG")
         case _ =>
           keywordSlots.get(kw) match {
             case Some(slots) =>
-              val chosen = slots.map(_.find(part.columns.contains))
+              val chosen = slots.map(_.find(part.has))
               val last = chosen.lastIndexWhere(_.isDefined)
               if (last < 0) s"$kw\n/\n"
               else {
                 val sel = chosen.take(last + 1).zipWithIndex.map {
-                  case (Some(c), _) => col(s"`$c`")
-                  case (None, i) => lit(null).cast("string")
-                    .as(slots(i).headOption.getOrElse(s"ITEM${i + 1}"))
+                  case (Some(c), _) => (c, Some(part.index(c)))
+                  case (None, i) => (slots(i).headOption.getOrElse(s"ITEM${i + 1}"), None)
                 }
-                genericDeckTable(part.select(sel: _*), kw)
+                deckTable(Table(sel.map(_._1).toIndexedSeq,
+                  part.rows.map(r => sel.map(_._2.fold(null: Any)(r)).toIndexedSeq)), kw)
               }
             case None =>
-              val book = (Seq("KEYWORD", "DATE") ++ regionColumns)
-                .filter(part.columns.contains)
-              val p1 = part.drop(book: _*)
+              val book = (Seq("KEYWORD", "DATE") ++ regionColumns).filter(part.has)
+              val p1 = part.select(part.columns.filterNot(c => book.exists(_.equalsIgnoreCase(c))))
               if (p1.columns.isEmpty) s"$kw\n/\n"
               else {
-                val counts = p1.select(
-                  p1.columns.map(c => count(col(s"`$c`")).as(c)).toIndexedSeq: _*).collect()(0)
-                val keep = p1.columns.zipWithIndex
-                  .filter { case (_, i) => counts.getLong(i) > 0L }.map(_._1)
-                genericDeckTable(p1.select(keep.map(c => col(s"`$c`")).toIndexedSeq: _*), kw)
+                val keep = p1.columns.indices.filter(i => p1.rows.exists(_(i) != null))
+                deckTable(p1.select(keep.map(p1.columns)), kw)
               }
           }
       })
@@ -336,8 +386,7 @@ object IncludeWriter {
     * nnc.py:206-276): `I1 J1 K1 I2 J2 K2 TRANM` records.
     */
   def editnnc(nnc: DataFrame, multColumn: String = "TRANM"): String = {
-    val cols = Seq("I1", "J1", "K1", "I2", "J2", "K2", multColumn)
-    genericDeckTable(nnc.select(cols.map(org.apache.spark.sql.functions.col): _*),
-      "EDITNNC", Some(s"${nnc.count()} NNC connections to edit"))
+    val t = Table(nnc.select(Seq("I1", "J1", "K1", "I2", "J2", "K2", multColumn).map(col): _*))
+    deckTable(t, "EDITNNC", Some(s"${t.rows.length} NNC connections to edit"))
   }
 }

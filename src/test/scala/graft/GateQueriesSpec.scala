@@ -881,6 +881,19 @@ class GateQueriesSpec extends AnyFunSuite {
     assert(stream.toSeq == batch.toSeq && stream.nonEmpty)
   }
 
+  test("q143: staging decodes each realization's summary once") {
+    import graft.io.DecodeStats
+    DecodeStats.unsmryParams.reset()
+    graft.queries.BinaryGate.q143StreamMisfit(spark, Sf)
+    val staged = DecodeStats.unsmryParams.sum()
+    // the same fixture, every case decoded once
+    val fleet = java.nio.file.Paths.get(sys.props("java.io.tmpdir"), "graft-gate", "q143")
+    DecodeStats.unsmryParams.reset()
+    spark.read.format("eclipse-unsmry").load(s"$fleet/*.UNSMRY").queryExecution.toRdd.count()
+    val once = DecodeStats.unsmryParams.sum()
+    assert(once > 0 && staged == once, s"staging decoded $staged PARAMS records, one pass $once")
+  }
+
   test("q126: ensemble misfit ranking matches the closed-form replay") {
     val out = graft.queries.BinaryGate.q126EnsembleMisfit(spark, Sf).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getInt(3)))
